@@ -23,7 +23,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // trimmed and checked: the value names the artifact file below
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim
+    require(cpus.nonEmpty && cpus.forall(_.isDigit) && cpus.toInt > 0,
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '${sys.env("SPARK_GRAFT_CPUS")}'")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -88,13 +91,16 @@ object Bench {
     // driver's BENCH_r*.json keeps only a ~2000-char tail of stdout, which
     // truncates the 287-query map — this file is the auditable record for
     // regression diffs across rounds
-    try {
-      val out = java.nio.file.Paths.get(s"target/bench_full_c$cpus.json")
+    val fullPath = s"target/bench_full_c$cpus.json"
+    val fullWritten = try {
+      val out = java.nio.file.Paths.get(fullPath)
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      true
     } catch { case e: Exception =>
-      System.err.println(s"[bench] could not write target/bench_full_c$cpus.json: $e")
+      System.err.println(s"[bench] could not write $fullPath: $e")
+      false
     }
     // FINAL line is a compact summary (a few hundred bytes) that fits whole
     // inside the driver's stdout tail and therefore parses, restoring the
@@ -102,7 +108,10 @@ object Bench {
     // canonical line above (headline 39-query total of per-query pass MIN);
     // the canonical full line, with every per-query entry, is still printed
     // above and persisted to the artifact — nothing is removed from it.
-    val compact = f"""{"metric":"total","value":$total39%.3f,"unit":"sec","value_all_queries":$totalAll%.3f,"value_passes":$passesJson,"value_spread":$spread%.3f,"n_queries":${results.size},"n_failed":${results.count(!_._3)},"sf":"$sfDir","full":"target/bench_full_c$cpus.json"}"""
+    // "compact":true tells it apart from the full line; "full" is null
+    // when the artifact could not be written.
+    val full = if (fullWritten) "\"" + fullPath + "\"" else "null"
+    val compact = f"""{"metric":"total","compact":true,"value":$total39%.3f,"unit":"sec","value_all_queries":$totalAll%.3f,"value_passes":$passesJson,"value_spread":$spread%.3f,"n_queries":${results.size},"n_failed":${results.count(!_._3)},"sf":"$sfDir","full":$full}"""
     println(compact)
     spark.stop()
   }

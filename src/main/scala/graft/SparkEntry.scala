@@ -21,10 +21,13 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2, plus the
-    * LLM-pipeline extensions (graft.queries.Extensions). Inventory queries
-    * are served by their DataFrame-DSL implementations (graft.dsl.Relational,
-    * hash-equal to the SQL twins — DslParitySpec); the SQL text remains the
-    * declarative reference and fallback. */
+    * LLM-pipeline extensions (graft.queries.Extensions) — the single lookup
+    * for the definition a query is served by. An inventory query is served
+    * by its `sparkSql` unless graft.dsl.Relational has an entry for it, and
+    * such an entry exists only where its optimized plan differs from the
+    * SQL's (an engine operator or a hand-shaped plan). DslParitySpec asserts
+    * that every DSL entry plans differently from, and hashes equal to, its
+    * SQL. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Inventory.all.map { qry =>
       qry.id -> { (spark: SparkSession, dir: String) =>

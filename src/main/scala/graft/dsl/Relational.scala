@@ -8,10 +8,14 @@ import org.apache.spark.sql.types.DecimalType
 import graft.llm.{Similarity, TextAnalysis}
 import graft.operators.AsOfJoin
 
-/** Idiomatic DataFrame implementations of the SURVEY §2b inventory — the
-  * engine as an API, not a SQL pipe. Every entry is hash-equal to its SQL
-  * twin in graft.queries.Inventory (asserted by DslParitySpec and by the
-  * driver's DuckDB oracle, since SparkEntry serves these implementations).
+/** DataFrame implementations of the SURVEY §2b inventory queries whose plan
+  * differs from their SQL in graft.queries.Inventory: they reach an engine
+  * operator the SQL cannot (`AsOfJoin`, `GlobalWindow`, `Segmented*`,
+  * `Tables.spread`, graft.llm), or shape the plan by hand. SparkEntry serves
+  * an inventory query's SQL unless it has an entry here, so an entry whose
+  * optimized plan is the SQL's would be a second copy of the same program;
+  * DslParitySpec fails on one. Every entry is hash-equal to its SQL
+  * (DslParitySpec, and the driver's DuckDB oracle through SparkEntry).
   *
   * Tables come from the temp views registered by graft.core.Tables.
   */
@@ -21,61 +25,6 @@ object Relational {
 
   /** DataFrame implementation per inventory query id. */
   val impls: Map[String, SparkSession => DataFrame] = Map(
-    "SCAN-COUNT" -> (s => s.table("lineitem").agg(count(lit(1)).as("cnt"))),
-
-    "PROJ-EXPR" -> (s => s.table("lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * (lit(1) - col("l_discount")), 2).as("net"))
-      .orderBy("l_orderkey", "l_linenumber", "net").limit(50)),
-
-    "FILTER-PRED" -> (s => s.table("orders")
-      .where(col("o_orderstatus").isin("F", "O")
-        && col("o_totalprice").between(1000, 50000)
-        && col("o_orderpriority").like("1-%")
-        && !(col("o_custkey") === 7))
-      .select("o_orderkey").orderBy("o_orderkey").limit(50)),
-
-    "JOIN-INNER-EQUI" -> (s => s.table("customer")
-      .join(s.table("nation"), col("c_nationkey") === col("n_nationkey"))
-      .join(s.table("region"), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name", "n_name").agg(count(lit(1)).as("c"))
-      .orderBy("r_name", "n_name")),
-
-    "JOIN-LEFT-OUTER" -> (s => s.table("customer")
-      .join(s.table("orders"), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("n_orders"),
-        coalesce(round(sum(col("o_totalprice").cast(dec(18, 2))).cast("double"), 2),
-          lit(0.0)).as("spend"))
-      .orderBy("c_custkey").limit(60)),
-
-    "JOIN-FULL-OUTER" -> { s =>
-      val a = s.table("customer").groupBy(col("c_nationkey").as("ka"))
-        .agg(count(lit(1)).as("nc"))
-      val b = s.table("supplier").groupBy(col("s_nationkey").as("kb"))
-        .agg(count(lit(1)).as("ns"))
-      a.join(b, col("ka") === col("kb"), "full_outer")
-        .select(coalesce(col("ka"), col("kb")).as("k"), col("nc"), col("ns"))
-        .orderBy("k")
-    },
-
-    "JOIN-SEMI" -> (s => s.table("customer")
-      .join(s.table("orders").where(col("o_totalprice") > 100000),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey").orderBy("c_custkey")),
-
-    "JOIN-ANTI" -> (s => s.table("customer")
-      .join(s.table("orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey").orderBy("c_custkey")),
-
-    "JOIN-RANGE" -> (s => s.table("orders")
-      .join(s.table("lineitem"),
-        col("l_orderkey") === col("o_orderkey")
-          && col("l_shipdate") >= col("o_orderdate")
-          && col("l_shipdate") < col("o_orderdate") + expr("INTERVAL '60' DAY"))
-      .groupBy("o_orderkey").agg(count(lit(1)).as("n"))
-      .orderBy("o_orderkey").limit(50)),
-
     // scale-path as-of join: union + running last() — O(n log n), not the
     // SQL twin's O(clicks x purchases) theta-join (see graft.operators.AsOfJoin)
     "JOIN-ASOF" -> { s =>
@@ -356,18 +305,6 @@ object Relational {
         .orderBy(col("value").desc, col("l_partkey"))
     },
 
-    // Q13 customer distribution: filter BEFORE the outer join (equivalent
-    // to the ON-clause predicate), then two stacked aggregates.
-    "JOIN-TPCH-Q13" -> { s =>
-      val ord = s.table("orders").where(col("o_orderpriority") =!= "5-LOW")
-        .select("o_custkey", "o_orderkey")
-      s.table("customer")
-        .join(ord, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey").agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count").agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    },
-
     // Q14 promo revenue: one month of fact rows, part type via broadcast,
     // conditional/total DECIMAL sums, single double division.
     "JOIN-TPCH-Q14" -> { s =>
@@ -534,237 +471,6 @@ object Relational {
           col("p_size")).limit(100)
     },
 
-    // Q22 sales opportunity: 1-row broadcast threshold (DECIMAL-sum mean,
-    // one deterministic division) + anti join on urgent orders (quirk #3:
-    // customers without ANY order don't exist below sf0.1).
-    "JOIN-TPCH-Q22" -> { s =>
-      val cust = s.table("customer")
-      val thr = cust.where(col("c_acctbal") > 0.0)
-        .agg((sum(col("c_acctbal").cast(dec(18, 2))).cast("double") /
-          count(lit(1))).as("thr"))
-      val urgent = s.table("orders")
-        .where(col("o_orderpriority") === "1-URGENT").select("o_custkey")
-      cust.crossJoin(broadcast(thr))
-        .where(col("c_acctbal") > col("thr"))
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy((col("c_nationkey") % 5).cast("int").as("cntrycode"))
-        .agg(count(lit(1)).as("numcust"),
-          round(sum(col("c_acctbal").cast(dec(18, 2))).cast("double"), 2)
-            .as("totacctbal"))
-        .orderBy("cntrycode")
-    },
-
-    // explicit dedup-then-count instead of countDistinct: map-side partial
-    // dedup replaces the Expand + two-phase distinct aggregate (measured
-    // 2× at sf0.1, same shuffle key at scale). The isNotNull guard matches
-    // countDistinct's null-excluding counts — with ONE caveat: a group
-    // whose ids are ALL null vanishes here, where countDistinct would emit
-    // it with u=0 (no such group exists in any fixture SF; if null-only
-    // groups must survive, group first and count a deduped non-null join).
-    "AGG-DISTINCT" -> (s => s.table("events")
-      .where(col("user_id").isNotNull)
-      .select("event_type", "user_id").distinct()
-      .groupBy("event_type").agg(count(lit(1)).as("u"))
-      .orderBy("event_type")),
-
-    "AGG-ROLLUP" -> { s =>
-      graft.core.Tables.withoutAmbiguousSelfJoinCheck(s) {
-        val rolled = s.table("customer")
-          .join(s.table("nation"), col("c_nationkey") === col("n_nationkey"))
-          .join(s.table("region"), col("n_regionkey") === col("r_regionkey"))
-          .rollup("r_name", "n_name").agg(count(lit(1)).as("c"))
-        // sort refs must bind to the rollup OUTPUT (nullable grouping cols):
-        // dataset-tagged col()/df() refs trip DetectAmbiguousSelfJoin, so use
-        // untagged by-name sort expressions
-        rolled.toDF("r_name", "n_name", "c")
-          .orderBy(asc_nulls_first("r_name"), asc_nulls_first("n_name"))
-      }
-    },
-
-    "AGG-CUBE" -> { s =>
-      graft.core.Tables.withoutAmbiguousSelfJoinCheck(s) {
-        val cubed = s.table("customer")
-          .join(s.table("nation"), col("c_nationkey") === col("n_nationkey"))
-          .cube("c_mktsegment", "n_name").agg(count(lit(1)).as("c"))
-        cubed.toDF("c_mktsegment", "n_name", "c")
-          .orderBy(asc_nulls_first("c_mktsegment"), asc_nulls_first("n_name"))
-      }
-    },
-
-    "AGG-GROUPING-SETS" -> (s => graft.core.Tables.withoutAmbiguousSelfJoinCheck(s) {
-      s.table("customer")
-        .join(s.table("nation"), col("c_nationkey") === col("n_nationkey"))
-        .groupingSets(Seq(Seq(col("c_mktsegment")), Seq(col("n_name"))),
-          col("c_mktsegment"), col("n_name"))
-        .agg(count(lit(1)).as("c"))
-        .orderBy(col("c_mktsegment").asc_nulls_first, col("n_name").asc_nulls_first)
-    }),
-
-    "AGG-HISTOGRAM" -> (s => s.table("orders")
-      .groupBy(least(floor(col("o_totalprice").cast("double") / 30000), lit(19))
-        .cast("int").as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        round(min("o_totalprice").cast("double"), 2).as("lo"),
-        round(max("o_totalprice").cast("double"), 2).as("hi"))
-      .orderBy("bucket")),
-
-    // per-class hash-mod rates: the sampling predicate is a pure column
-    // expression, so it pushes into the scan-side projection — no shuffle
-    // before the (tiny) per-class aggregate
-    "SAMPLE-STRATIFIED" -> (s => s.table("orders")
-      .select(col("o_orderstatus"), col("o_totalprice"),
-        call_function("graft_poly_hash", col("o_orderkey").cast("string")).as("h"))
-      .where(col("h") % when(col("o_orderstatus") === "F", 10)
-        .when(col("o_orderstatus") === "O", 100).otherwise(2) === 0)
-      .groupBy(col("o_orderstatus").as("st"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("o_totalprice").cast(dec(18, 2))).cast("double"), 2).as("sv"))
-      .orderBy("st")),
-
-    // OHLC downsample: windows partition by (user, bucket) — shuffles once
-    // on the same key the aggregate uses, so the agg is partition-local
-    "TS-RESAMPLE" -> { s =>
-      val b = s.table("events").where(col("user_id") < 5)
-        .select(col("user_id"),
-          (floor(col("ts").cast("double") / 21600) * 21600).cast("bigint").as("bucket"),
-          col("value"), col("ts"), col("event_id"))
-      val asc = Window.partitionBy("user_id", "bucket").orderBy(col("ts"), col("event_id"))
-      val desc = Window.partitionBy("user_id", "bucket")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      b.withColumn("rna", row_number().over(asc))
-        .withColumn("rnd", row_number().over(desc))
-        .groupBy("user_id", "bucket")
-        .agg(round(max(when(col("rna") === 1, col("value"))), 2).as("open"),
-          round(max(when(col("rnd") === 1, col("value"))), 2).as("close"),
-          round(min("value"), 2).as("lo"), round(max("value"), 2).as("hi"),
-          count(lit(1)).as("n"))
-        .orderBy("user_id", "bucket")
-    },
-
-    "WIN-RATIO" -> { s =>
-      val w = Window.partitionBy("c_nationkey")
-      s.table("customer").where(col("c_custkey") <= 100)
-        .select(col("c_custkey"),
-          round(col("c_acctbal").cast("double") /
-            sum(col("c_acctbal").cast("double")).over(w), 6).as("share"))
-        .orderBy("c_custkey")
-    },
-
-    "AGG-BOOL" -> (s => s.table("orders")
-      .groupBy(col("o_orderstatus").as("st"))
-      .agg(bool_and(col("o_totalprice") > 900).as("all_900"),
-        bool_or(col("o_totalprice") > 400000).as("any_400k"),
-        count(lit(1)).as("n"))
-      .orderBy("st")),
-
-    "FN-TRYCAST" -> (s => s.table("part")
-      .select(col("p_partkey"),
-        substring(col("p_name"), 1, 3).try_cast("int").as("bad"),
-        col("p_size").cast("string").try_cast("int").as("good"))
-      .orderBy("p_partkey").limit(40)),
-
-    // NO spread here: repartitioning changes the partial-moment merge
-    // order of corr/covar, and the rounded value must stay bit-equal to
-    // the single-scan plan the oracle was validated against
-    "AGG-CORR" -> (s => s.table("lineitem")
-      .groupBy(col("l_returnflag").as("f"))
-      .agg(
-        round(corr(col("l_quantity").cast("double"), col("l_extendedprice").cast("double")), 4).as("c"),
-        round(covar_samp(col("l_quantity").cast("double"), col("l_discount").cast("double")), 6).as("cv"),
-        round(regr_slope(col("l_extendedprice").cast("double"), col("l_quantity").cast("double")), 4).as("sl"))
-      .orderBy("f")),
-
-    // two-phase: tiny (status, priority) count aggregate first, then the
-    // rank — the window sees |groups| rows, not |orders|
-    "AGG-MODE" -> { s =>
-      val counts = s.table("orders")
-        .groupBy(col("o_orderstatus").as("st"), col("o_orderpriority").as("pri"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("st").orderBy(col("n").desc, col("pri"))
-      counts.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("st"), col("pri").as("mode_pri"), col("n"))
-        .orderBy("st")
-    },
-
-    // AGG-MODE generalized to k > 1: per-group heavy hitters. The window
-    // runs over the (group, value) AGGREGATE (tiny), never the raw rows.
-    "AGG-TOPK-FREQ" -> { s =>
-      val counts = s.table("events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("event_type").orderBy(col("cnt").desc, col("user_id"))
-      counts.withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 3)
-        .select(col("event_type"), col("rk"), col("user_id"), col("cnt"))
-        .orderBy("event_type", "rk")
-    },
-
-    // melt via Dataset.unpivot — the inverse of AGG-PIVOT; the narrow
-    // (metric, v) stream aggregates with map-side partials
-    "AGG-UNPIVOT" -> { s =>
-      s.table("lineitem")
-        .select(col("l_discount").as("disc"), col("l_extendedprice").as("price"),
-          col("l_quantity").as("qty"), col("l_tax").as("tax"))
-        .unpivot(Array.empty[org.apache.spark.sql.Column], "metric", "v")
-        .groupBy("metric")
-        .agg(count(lit(1)).as("c"),
-          round(sum(col("v").cast(dec(18, 2))).cast("double"), 2).as("sv"))
-        .orderBy("metric")
-    },
-
-    // EMA: ordered collect + left fold — both engines run the identical
-    // double arithmetic in the identical (ts, event_id) order. Sequential
-    // by nature; see the Inventory comment for the affine parallel-prefix
-    // scale path.
-    "TS-EMA" -> { s =>
-      val vals = transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"), col("value")))),
-        _.getField("value"))
-      s.table("events")
-        .groupBy("event_type")
-        .agg(vals.as("vals"))
-        .select(col("event_type"), size(col("vals")).as("n"),
-          round(aggregate(slice(col("vals"), lit(2), size(col("vals")) - 1),
-            element_at(col("vals"), 1),
-            (acc, x) => acc * 0.7 + x * 0.3), 4).as("ema"))
-        .orderBy("event_type")
-    },
-
-    // Funnel conversion: first click -> purchase within 24h, per-user
-    // aggregates + one equi-join with the time bound as a residual
-    "EVENT-FUNNEL" -> { s =>
-      val ev = s.table("events")
-      val c = ev.where(col("event_type") === "click")
-        .groupBy("user_id").agg(min(col("ts")).as("first_click"))
-      val conv = c.join(ev.where(col("event_type") === "purchase")
-            .select(col("user_id"), col("ts")),
-          Seq("user_id"))
-        .where(col("ts").cast("double") >= col("first_click").cast("double") &&
-          col("ts").cast("double") <= col("first_click").cast("double") + 86400)
-        .select("user_id").distinct()
-      c.agg(count(lit(1)).as("n_clickers"))
-        .crossJoin(conv.agg(count(lit(1)).as("n_converted")))
-        .select(col("n_clickers"), col("n_converted"),
-          round(col("n_converted").cast("double") / col("n_clickers").cast("double"), 4)
-            .as("conv_rate"))
-    },
-
-    // Weekly cohort retention: first-activity week vs active weeks,
-    // all-integer counts
-    "EVENT-RETENTION" -> { s =>
-      val ev = s.table("events")
-      val f = ev.groupBy("user_id")
-        .agg(floor(min(col("ts")).cast("double") / 604800).cast("bigint").as("cohort"))
-      val a = ev.select(col("user_id"),
-        floor(col("ts").cast("double") / 604800).cast("bigint").as("wk")).distinct()
-      f.join(a, "user_id")
-        .where(col("wk") - col("cohort") <= 4)
-        .groupBy(col("cohort"), (col("wk") - col("cohort")).as("week_n"))
-        .agg(count(lit(1)).as("active"))
-        .orderBy("cohort", "week_n")
-    },
-
     // Lagged cross-correlation of two metric series: hourly bucket sums
     // (decimal-exact), purchase shifted 0..3h, Pearson r from re-pinned
     // moment sums — every aggregate exact, only the closed form in double
@@ -796,63 +502,6 @@ object Relational {
         .select(col("lagh"), col("n"),
           round(col("num") / sqrt(col("den")), 4).as("r"))
         .orderBy("lagh")
-    },
-
-    // Holt linear smoothing: the TS-EMA ordered-fold pattern with a
-    // [level, trend] pair accumulator (fp written to mirror the SQL twins
-    // operation-for-operation)
-    "TS-HOLT" -> { s =>
-      def holtStep(acc: Column, x: Column): Column = array(
-        lit(0.3) * x + lit(0.7) * (element_at(acc, 1) + element_at(acc, 2)),
-        lit(0.2) * ((lit(0.3) * x + lit(0.7) * (element_at(acc, 1) + element_at(acc, 2)))
-          - element_at(acc, 1)) + lit(0.8) * element_at(acc, 2))
-      val vals = transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"), col("value")))),
-        _.getField("value"))
-      s.table("events")
-        .groupBy("event_type")
-        .agg(vals.as("vals"))
-        .select(col("event_type"), size(col("vals")).as("n"),
-          aggregate(slice(col("vals"), lit(2), size(col("vals")) - 1),
-            array(element_at(col("vals"), 1), lit(0.0)), holtStep).as("hb"))
-        .select(col("event_type"), col("n"),
-          round(element_at(col("hb"), 1), 4).as("level"),
-          round(element_at(col("hb"), 2), 4).as("trend"))
-        .orderBy("event_type")
-    },
-
-    // Holt-Winters additive (triple exponential smoothing): Holt's
-    // (level, trend) plus a rotating m=4 seasonal vector — the classic
-    // metrics forecasting model. The state array keeps the CURRENT step's
-    // seasonal at a fixed slot and rotates: [l, b, s_now, s+1, s+2, s+3] →
-    // [l', b', s+1, s+2, s+3, s_now']; l0 = first value, b0 = 0, s = 0.
-    // forecast = l + b + s_next (1-step ahead). α=.3, β=.2, γ=.3.
-    "TS-HOLT-WINTERS" -> { s =>
-      def hwStep(acc: Column, x: Column): Column = {
-        val lNew = lit(0.3) * (x - element_at(acc, 3)) +
-          lit(0.7) * (element_at(acc, 1) + element_at(acc, 2))
-        array(
-          lNew,
-          lit(0.2) * (lNew - element_at(acc, 1)) + lit(0.8) * element_at(acc, 2),
-          element_at(acc, 4), element_at(acc, 5), element_at(acc, 6),
-          lit(0.3) * (x - lNew) + lit(0.7) * element_at(acc, 3))
-      }
-      val vals = transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"), col("value")))),
-        _.getField("value"))
-      s.table("events")
-        .groupBy("event_type")
-        .agg(vals.as("vals"))
-        .select(col("event_type"), size(col("vals")).as("n"),
-          aggregate(slice(col("vals"), lit(2), size(col("vals")) - 1),
-            array(element_at(col("vals"), 1), lit(0.0), lit(0.0), lit(0.0),
-              lit(0.0), lit(0.0)), hwStep).as("hb"))
-        .select(col("event_type"), col("n"),
-          round(element_at(col("hb"), 1), 4).as("level"),
-          round(element_at(col("hb"), 2), 4).as("trend"),
-          round(element_at(col("hb"), 1) + element_at(col("hb"), 2) +
-            element_at(col("hb"), 3), 4).as("forecast"))
-        .orderBy("event_type")
     },
 
     // Scale twin: the 6×6 matrix-affine chunk decomposition
@@ -898,223 +547,6 @@ object Relational {
         .orderBy("event_type")
     },
 
-    "FN-URL" -> { s =>
-      val url = concat(lit("https://"), lower(col("event_type")),
-        lit(".example.com/u/"), col("user_id").cast("string"),
-        lit("/p?ev="), col("event_id").cast("string"), lit("&x=1"))
-      s.table("events")
-        .select(col("event_id"),
-          parse_url(url, lit("HOST")).as("host"),
-          parse_url(url, lit("PATH")).as("path"),
-          parse_url(url, lit("QUERY"), lit("ev")).cast("bigint").as("ev"))
-        .orderBy("event_id").limit(50)
-    },
-
-    // context-window chunking: 50-token chunks, 40-token stride — narrow
-    // per-row explode, no shuffle
-    "TEXT-CHUNK" -> { s =>
-      val toks = split(col("text"), " ")
-      s.table("documents")
-        .select(col("doc_id"), toks.as("toks"))
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(1), size(col("toks")), lit(40))).as("st"))
-        .select(col("doc_id"), col("st"),
-          least(lit(50), size(col("toks")) - col("st") + 1).as("n_tok"),
-          md5(concat_ws(" ", slice(col("toks"), col("st"), lit(50)))).as("chunk_md5"))
-        .orderBy("doc_id", "st").limit(200)
-    },
-
-    // int8 symmetric embedding quantization: scale = max|x|/127, narrow
-    // codegen transform; contract carries scale + integer checksums
-    "EMB-QUANT" -> { s =>
-      val m = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-      s.table("embeddings")
-        .select(col("vec_id"), m.as("m"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 127 / m).cast("bigint")).as("qv"))
-        .select(col("vec_id"), round(col("m") / 127, 6).as("scale"),
-          aggregate(col("qv"), lit(0L), (a, x) => a + x).as("qsum"),
-          aggregate(col("qv"), lit(0L), (a, x) => a + abs(x)).as("qabs"))
-        .orderBy("vec_id").limit(60)
-    },
-
-    // weighted aggregation: exact decimal sums, double division
-    "AGG-WEIGHTED" -> { s =>
-      val wsumDec = sum((col("l_extendedprice") * col("l_quantity")).cast(dec(28, 4)))
-      val qsumDec = sum(col("l_quantity").cast(dec(18, 2)))
-      s.table("lineitem")
-        .groupBy("l_returnflag")
-        .agg(round(wsumDec.cast("double") / qsumDec.cast("double"), 4).as("wavg_price"),
-          round(wsumDec.cast("double"), 2).as("wsum"))
-        .orderBy("l_returnflag")
-    },
-
-    // character-entropy quality signal: ordered-count fold (TS-EMA
-    // pattern) for bit-stable cross-engine double arithmetic
-    "TEXT-ENTROPY" -> { s =>
-      val counts = s.table("documents")
-        .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
-        .groupBy("doc_id", "c").agg(count(lit(1)).as("k"))
-      counts.groupBy("doc_id")
-        .agg(transform(array_sort(collect_list(struct(col("c"), col("k")))),
-            _.getField("k")).as("ks"),
-          sum(col("k")).as("n"))
-        .select(col("doc_id"), col("n").cast("bigint").as("n_chars"),
-          round(aggregate(col("ks"), lit(0.0),
-            (acc, x) => acc - (x / col("n")) * log(x / col("n"))), 4).as("ent"))
-        .orderBy("doc_id").limit(60)
-    },
-
-    // trailing z-score: per-series window (20 preceding, excluding self) —
-    // shuffle-once on the series key, never a global window
-    "WIN-ZSCORE" -> { s =>
-      val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-20, -1)
-      s.table("events")
-        .select(col("event_id"), col("value"),
-          avg(col("value")).over(w).as("mu"),
-          stddev_samp(col("value")).over(w).as("sigma"),
-          count(lit(1)).over(w).as("nprev"))
-        .where(col("nprev") >= 5 && col("sigma") > 0.001)
-        .select(col("event_id"), round((col("value") - col("mu")) / col("sigma"), 3).as("z"))
-        .orderBy("event_id").limit(100)
-    },
-
-    // gap-based sessionization (6h): lag → break flag → running sum, all
-    // partitioned on user_id — scales without a global sort. Integer-µs
-    // gap arithmetic for exact cross-engine comparison.
-    "WIN-SESSIONIZE" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val prevUs = lag(unix_micros(col("ts")), 1).over(w)
-      s.table("events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          when(prevUs.isNull || unix_micros(col("ts")) - prevUs > 21600000000L, 1)
-            .otherwise(0).as("brk"))
-        .select(col("user_id"), col("ts"),
-          sum(col("brk")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("session_id"))
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).cast("long").as("t_start"),
-          max(col("ts")).cast("long").as("t_end"))
-        .orderBy("user_id", "session_id").limit(100)
-    },
-
-    "AGG-GROUPING-FN" -> (s => graft.core.Tables.withoutAmbiguousSelfJoinCheck(s) {
-      s.table("orders")
-        .rollup("o_orderstatus", "o_orderpriority")
-        .agg(grouping(col("o_orderstatus")).cast("int").as("g_st"),
-          grouping(col("o_orderpriority")).cast("int").as("g_pri"),
-          count(lit(1)).as("c"))
-        .select(coalesce(col("o_orderstatus"), lit("?")).as("st"),
-          coalesce(col("o_orderpriority"), lit("?")).as("pri"),
-          col("g_st"), col("g_pri"), col("c"))
-        .orderBy("g_st", "g_pri", "st", "pri")
-    }),
-
-    "AGG-STATS" -> (s => s.table("events")
-      .groupBy("event_type")
-      .agg(round(stddev_samp(col("value")).cast("double"), 3).as("sd"),
-        round(var_samp(col("value")).cast("double"), 3).as("vr"),
-        round(min(col("value")), 2).as("mn"),
-        round(max(col("value")), 2).as("mx"))
-      .orderBy("event_type")),
-
-    // winsorized moments: per-group p05/p95 clip (the standard outlier
-    // treatment before training statistics) — bounds from one small
-    // aggregate broadcast back, clip + moments in a single second pass
-    // RFM segmentation: per-user purchase aggregates scored 1-4 against
-    // broadcast corpus quartiles — no global window, no ntile sort
-    "EVENT-RFM" -> { s =>
-      val u = s.table("events").where(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(max(col("ts").cast("double")).as("rec"),
-          count(lit(1)).as("freq"),
-          sum(col("value").cast(dec(18, 6))).cast("double").as("mon"))
-      val qs = for {
-        (m, p) <- Seq("rec" -> "r", "freq" -> "f", "mon" -> "m")
-        (q, i) <- Seq("0.25" -> 1, "0.5" -> 2, "0.75" -> 3)
-      } yield expr(s"percentile($m, $q)").as(s"$p$i")
-      val t = u.agg(qs.head, qs.tail: _*)
-      def score(v: Column, p: String) = lit(1) +
-        (v > col(s"${p}1")).cast("int") + (v > col(s"${p}2")).cast("int") +
-        (v > col(s"${p}3")).cast("int")
-      u.crossJoin(broadcast(t))
-        .select(col("user_id"), score(col("rec"), "r").as("r_score"),
-          score(col("freq"), "f").as("f_score"), score(col("mon"), "m").as("m_score"))
-        .select(col("user_id"), col("r_score"), col("f_score"), col("m_score"),
-          (col("r_score") * 100 + col("f_score") * 10 + col("m_score")).as("rfm_cell"))
-        .orderBy("user_id").limit(200)
-    },
-
-    "AGG-WINSOR" -> { s =>
-      val ev = s.table("events").where(col("value").isNotNull)
-      val b = ev.groupBy("event_type").agg(
-        expr("percentile(value, 0.05)").as("lo"),
-        expr("percentile(value, 0.95)").as("hi"))
-      ev.join(broadcast(b), "event_type")
-        .select(col("event_type"),
-          greatest(col("lo"), least(col("hi"), col("value"))).as("w"))
-        .groupBy("event_type")
-        .agg(round(avg("w"), 4).as("wmean"),
-          round(stddev_samp("w"), 4).as("wstd"),
-          count(lit(1)).as("n"))
-        .select(col("event_type").as("g"), col("wmean"), col("wstd"), col("n"))
-        .orderBy("g")
-    },
-
-    "WIN-RANK" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      s.table("events").where(col("user_id") < 5)
-        .select(col("user_id"), col("event_id"),
-          row_number().over(w).as("rn"), rank().over(w).as("rk"),
-          dense_rank().over(w).as("drk"))
-        .orderBy("user_id", "rn").limit(80)
-    },
-
-    // NOTE (scale): WIN-LAG-LEAD / WIN-FRAME-RANGE / WIN-NTILE below are
-    // the DECLARED contract shapes and use an UNPARTITIONED window — Spark
-    // moves all rows to one partition (the bench's WindowExec warning). At
-    // real scale, partition the window (as WIN-RANK / WIN-FRAME-ROWS do)
-    // or pre-bucket the ordering key; the global total order is the
-    // scale-killer, not the frame.
-    "WIN-LAG-LEAD" -> { s =>
-      val w = Window.orderBy("ts", "event_id")
-      s.table("events").where(col("user_id") === 3)
-        .select(col("event_id"), lag("event_id", 1).over(w).as("prev_id"),
-          lead("event_id", 1).over(w).as("next_id"))
-        .orderBy("event_id")
-    },
-
-    "WIN-FRAME-ROWS" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      s.table("events").where(col("user_id") < 3)
-        .select(col("event_id"), round(sum("value").over(w), 2).as("running"))
-        .orderBy("event_id").limit(80)
-    },
-
-    "WIN-FRAME-RANGE" -> { s =>
-      // range key in integer CENTS: decimal(18,2) → ×100 → long is a
-      // monotone bijection, so the sort order AND the [p−1000, p] frame
-      // membership are bit-identical to the decimal formulation — but the
-      // per-row frame-bound arithmetic and comparisons run on primitive
-      // longs instead of decimals
-      val cents = (col("o_totalprice").cast(dec(18, 2)) * 100).cast("long")
-      val w = Window.orderBy(cents)
-        .rangeBetween(-100000, Window.currentRow)
-      s.table("orders")
-        .select(col("o_orderkey"), count(lit(1)).over(w).as("near_cnt"))
-        .orderBy("o_orderkey").limit(60)
-    },
-
-    "WIN-NTILE" -> { s =>
-      val w = Window.orderBy(col("o_totalprice").cast(dec(18, 2)).desc, col("o_orderkey"))
-      s.table("orders")
-        .select(col("o_orderkey"), ntile(4).over(w).as("q"))
-        .orderBy("o_orderkey").limit(60)
-    },
-
     // Scale-path twins of the three global-window shapes: identical
     // results (the SQL twins ARE the plain global windows), computed by
     // graft.operators.GlobalWindow's partitioned plans — range-bucketed
@@ -1145,85 +577,6 @@ object Relational {
         .orderBy(col("o_orderkey").desc).limit(80)
     },
 
-    "SORT-TOPK" -> (s => s.table("orders")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(10)
-      .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("p"))),
-
-    "SET-UNION" -> (s => s.table("customer").select(col("c_nationkey").as("k"))
-      .union(s.table("supplier").select(col("s_nationkey").as("k")))
-      .distinct().orderBy("k")),
-
-    "SET-UNION-ALL" -> (s => s.table("customer").select(col("c_nationkey").as("k"))
-      .union(s.table("supplier").select(col("s_nationkey").as("k")))
-      .agg(count(lit(1)).as("cnt"))),
-
-    "SET-INTERSECT" -> (s => s.table("customer").select(col("c_nationkey").as("k"))
-      .intersect(s.table("supplier").select(col("s_nationkey").as("k")))
-      .orderBy("k")),
-
-    "SET-EXCEPT" -> (s => s.table("customer").select(col("c_nationkey").as("k"))
-      .except(s.table("supplier").select(col("s_nationkey").as("k")))
-      .orderBy("k")),
-
-    "FN-STRING" -> (s => s.table("part")
-      .select(col("p_partkey"), upper(col("p_brand")).as("ub"),
-        lower(col("p_type")).as("lt"), substring(col("p_name"), 1, 8).as("s8"),
-        length(col("p_name")).as("ln"),
-        replace(col("p_brand"), lit("#"), lit("-")).as("rp"),
-        trim(concat(lit(" "), col("p_name"), lit(" "))).as("tc"),
-        lpad(col("p_size").cast("string"), 4, "0").as("pad"))
-      .orderBy("p_partkey").limit(40)),
-
-    "FN-REGEX" -> (s => s.table("part")
-      .where(col("p_type").rlike("^(STANDARD|SMALL)"))
-      .select("p_partkey").orderBy("p_partkey").limit(40)),
-
-    // sequential left folds: index-ordered double adds, bit-identical to
-    // the oracle's list_reduce — see the Inventory note
-    "FN-HOF" -> (s => s.table("embeddings").select(
-      col("vec_id"),
-      size(filter(col("embedding"), x => x > 0)).as("n_pos"),
-      round(aggregate(col("embedding"), lit(0.0),
-        (a, x) => a + x.cast("double")), 4).as("s"),
-      round(aggregate(filter(col("embedding"), x => x > 0), lit(0.0),
-        (a, x) => a + x.cast("double")), 4).as("pos_sum"))
-      .orderBy("vec_id").limit(50)),
-
-    "FN-DATE" -> (s => s.table("orders")
-      .select(col("o_orderkey"), year(col("o_orderdate")).as("y"),
-        month(col("o_orderdate")).as("m"), dayofmonth(col("o_orderdate")).as("d"),
-        date_trunc("month", col("o_orderdate")).cast("date").as("mstart"))
-      .orderBy("o_orderkey").limit(40)),
-
-    "FN-MATH" -> (s => s.table("lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        abs(col("l_discount") - 0.05).as("a"),
-        floor(col("l_extendedprice")).cast("bigint").as("f"),
-        ceil(col("l_extendedprice")).cast("bigint").as("c"),
-        round(sqrt(col("l_quantity")), 4).as("sq"),
-        round(log(col("l_extendedprice")), 4).as("lg"),
-        round(pow(col("l_tax") + 1, 2), 4).as("pw"),
-        (col("l_partkey") % 7).cast("bigint").as("md"))
-      .orderBy("l_orderkey", "l_linenumber", "f", "md").limit(40)),
-
-    "FN-ARRAY" -> (s => s.table("embeddings")
-      .select(col("vec_id"), size(col("embedding")).as("dim"),
-        round(col("embedding").getItem(0).cast("double"), 4).as("e0"))
-      .orderBy("vec_id").limit(40)),
-
-    "FN-JSON" -> (s => s.table("events")
-      .select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-      .orderBy("event_id").limit(60)),
-
-    "STREAM-TUMBLE" -> (s => s.table("events")
-      .groupBy(
-        (floor(col("ts").cast("double") / 21600) * 21600).cast("bigint").as("bucket"),
-        col("event_type"))
-      .agg(count(lit(1)).as("c"),
-        round(sum(col("value").cast(dec(18, 2))).cast("double"), 2).as("sv"))
-      .orderBy("bucket", "event_type").limit(100)),
-
     "STREAM-SLIDE" -> { s =>
       val shifts = s.range(2).select((col("id") * 10800).cast("int").as("s"))
       s.table("events").crossJoin(shifts)
@@ -1233,29 +586,7 @@ object Relational {
         .orderBy("wstart").limit(100)
     },
 
-    "STREAM-SESSION" -> { s =>
-      // ONE window pass: the old running-sum session id fed only a per-user
-      // max(), and max(running sum of new_s) = sum(new_s) — so the second
-      // (differently-ordered) WindowExec and its sort fold into the final
-      // aggregate, which reuses the window's user_id hash partitioning
-      val wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      s.table("events")
-        .select(col("user_id"), col("ts"),
-          when(col("ts").cast("double") - lag("ts", 1).over(wo).cast("double") > 1800
-            || lag("ts", 1).over(wo).isNull, 1).otherwise(0).as("new_s"))
-        .groupBy("user_id")
-        .agg(sum("new_s").cast("bigint").as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    },
-
     "LLM-COSINE-TOPK" -> (s => Similarity.cosineTopK(s.table("embeddings"), 0L, 5)),
-
-    "LLM-DEDUP" -> (s => s.table("documents")
-      .agg(count(lit(1)).as("docs"),
-        countDistinct(md5(lower(col("text")))).as("uniq"))),
-
-    "LLM-TOKENIZE" -> (s => TextAnalysis.tokenCounts(s.table("documents"))
-      .orderBy("doc_id").limit(50)),
 
     "PARSE-DECONSTRUCT" -> { s =>
       val line = concat(lit("svc."), col("event_type"), lit(".count "),
@@ -1266,371 +597,6 @@ object Relational {
     },
 
     // ------------------------------------------------- round-2 additions
-
-    "AGG-PIVOT" -> (s => s.table("orders")
-      .select("o_orderpriority", "o_orderstatus")
-      .groupBy("o_orderpriority")
-      .pivot("o_orderstatus", Seq("F", "O", "P")).count()
-      .select(col("o_orderpriority"),
-        coalesce(col("F"), lit(0L)).as("f_cnt"),
-        coalesce(col("O"), lit(0L)).as("o_cnt"),
-        coalesce(col("P"), lit(0L)).as("p_cnt"))
-      .orderBy("o_orderpriority")),
-
-    // spread first: exact percentile buffers values per partition, and a
-    // single-split orders scan would build the whole buffer on one core
-    // exact interpolated percentiles via per-group sort + rank arithmetic
-    // instead of percentile(): the ObjectHashAggregate buffers EVERY value
-    // per group and merge-sorts them on one thread per group — a scale
-    // (and, measured, local) loser vs the window sort, which distributes
-    // by group and reduces to <= 4 candidate rows per group before the agg
-    "AGG-MEDIAN" -> { s =>
-      val w = Window.partitionBy("o_orderstatus").orderBy("v")
-      // partition count via an unbounded frame on the SAME (partition,
-      // order) spec as the rank — one WindowExec and one sort instead of a
-      // second order-less WindowExec with its own sort; the count over the
-      // whole partition is identical either way
-      val cw = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      // positions and interpolation stay in DECIMAL: quantile positions
-      // (cnt-1)*q are exact at scale 1, values exact at scale 2, so the
-      // interpolated value is exact at scale 3 — double arithmetic here
-      // loses ...145 boundary cases to round-down (observed at sf0.1)
-      val ranked = s.table("orders")
-        .select(col("o_orderstatus"), col("o_totalprice").as("v"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("pos50",
-          lit(1) + (count(lit(1)).over(cw) - 1) * lit(new java.math.BigDecimal("0.5")))
-        .withColumn("pos90",
-          lit(1) + (count(lit(1)).over(cw) - 1) * lit(new java.math.BigDecimal("0.9")))
-      // quantile_cont semantics: v = v_l + frac(pos) * (v_{l+1} - v_l)
-      def interp(pos: String) = {
-        val l = floor(col(pos))
-        val vl = max(when(col("rn") === l, col("v")))
-        val vu = coalesce(max(when(col("rn") === l + 1, col("v"))), vl)
-        round(vl + (max(col(pos)) - max(floor(col(pos)))) * (vu - vl), 2).cast("double")
-      }
-      ranked
-        .where((col("rn") >= floor(col("pos50"))) && (col("rn") <= floor(col("pos50")) + 1) ||
-               (col("rn") >= floor(col("pos90"))) && (col("rn") <= floor(col("pos90")) + 1))
-        .groupBy("o_orderstatus")
-        .agg(interp("pos50").as("med"), interp("pos90").as("p90"))
-        .orderBy("o_orderstatus")
-    },
-
-    // '|'-joined string encoding of the collected array: raw ARRAY output
-    // columns crash the driver's pandas canonicalizer (same as AGG-STRING)
-    "AGG-COLLECT" -> (s => s.table("customer")
-      .where(col("c_custkey") <= 40)
-      .groupBy(col("c_nationkey").as("k"))
-      .agg(array_join(transform(sort_array(collect_list(col("c_custkey"))),
-          _.cast("string")), "|").as("ids"),
-        count(lit(1)).as("n"))
-      .orderBy("k")),
-
-    "AGG-FILTERED" -> (s => s.table("events")
-      .groupBy("event_type")
-      .agg(count_if(col("value") > 50).as("big"),
-        count_if(col("value") <= 50).as("small"))
-      .orderBy("event_type")),
-
-    "WIN-CUME-DIST" -> { s =>
-      val w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
-      s.table("orders").where(col("o_custkey") < 50)
-        .select(col("o_orderkey"),
-          round(cume_dist().over(w), 4).as("cd"),
-          round(percent_rank().over(w), 4).as("pr"))
-        .orderBy("o_orderkey").limit(60)
-    },
-
-    "WIN-FIRST-LAST" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      s.table("events").where(col("user_id") < 3)
-        .select(col("event_id"),
-          round(first("value").over(w), 2).as("fv"),
-          round(last("value").over(w), 2).as("lv"),
-          round(nth_value(col("value"), 2).over(w), 2).as("nv"))
-        .orderBy("event_id").limit(60)
-    },
-
-    "JOIN-CROSS" -> (s => s.table("region").select(col("r_name").as("a"))
-      .crossJoin(s.table("region").select(col("r_name").as("b")))
-      .orderBy("a", "b")),
-
-    "SET-INTERSECT-ALL" -> (s => s.table("customer").select(col("c_nationkey").as("k"))
-      .intersectAll(s.table("supplier").select(col("s_nationkey").as("k")))
-      .orderBy("k")),
-
-    "SET-EXCEPT-ALL" -> (s => s.table("customer").where(col("c_custkey") <= 300)
-      .select(col("c_nationkey").as("k"))
-      .exceptAll(s.table("supplier").select(col("s_nationkey").as("k")))
-      .orderBy("k")),
-
-    "FN-EXPLODE" -> (s => s.table("documents").where(col("doc_id") < 5)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .orderBy("doc_id", "pos")),
-
-    "FN-BITWISE" -> (s => s.table("events")
-      .select(col("event_id"),
-        col("event_id").bitwiseAND(lit(255)).as("ba"),
-        col("event_id").bitwiseOR(lit(15)).as("bo"),
-        col("event_id").bitwiseXOR(col("user_id")).cast("bigint").as("bx"),
-        shiftleft(col("user_id"), 3).as("sl"),
-        shiftright(col("event_id"), 2).as("sr"),
-        bit_count(col("event_id")).cast("int").as("bc"))
-      .orderBy("event_id").limit(50)),
-
-    "FN-COND" -> (s => s.table("orders")
-      .select(col("o_orderkey"),
-        when(col("o_totalprice") > 100000, "high")
-          .when(col("o_totalprice") > 10000, "mid").otherwise("low").as("band"),
-        coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("st"),
-        greatest(col("o_custkey"), lit(500L)).as("g"),
-        least(col("o_custkey"), lit(100L)).as("l"))
-      .orderBy("o_orderkey").limit(50)),
-
-    "FN-STRUCT" -> (s => s.table("orders")
-      .select(named_struct(lit("k"), col("o_orderkey"),
-        lit("p"), round(col("o_totalprice"), 2)).as("s"))
-      .select(col("s").getField("k").as("k"), col("s").getField("p").as("p"))
-      .orderBy("k").limit(40)),
-
-    "TS-RATE" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      s.table("events").where(col("user_id") < 5)
-        .select(col("user_id"), col("event_id"),
-          col("ts").cast("double").as("et"), col("value"),
-          lag("value", 1).over(w).as("pv"),
-          lag(col("ts").cast("double"), 1).over(w).as("pet"))
-        .where(col("pv").isNotNull && col("et") > col("pet"))
-        // + 0.0 normalizes IEEE -0.0 (engines disagree on rounded -eps sign)
-        .select(col("user_id"), col("event_id"),
-          (round((col("value") - col("pv")) / (col("et") - col("pet")), 4) + 0.0).as("rate"))
-        .orderBy("user_id", "event_id")
-    },
-
-    // PromQL resets/changes/irate/idelta: one series window, one aggregate;
-    // the last pair is ranked on the FILTERED pair set (zero-dt safe)
-    "TS-RESETS" -> { s =>
-      val w = Window.partitionBy("event_type")
-        .orderBy(col("ep"), col("event_id"))
-      val pairs = s.table("events").where(col("user_id") < 5)
-        .select(col("event_type"), col("event_id"),
-          col("ts").cast("double").as("ep"), col("value"))
-        .select(col("event_type"), col("event_id"), col("ep"), col("value"),
-          lag("value", 1).over(w).as("pv"), lag("ep", 1).over(w).as("pe"))
-        .where(col("pe").isNotNull && col("ep") > col("pe"))
-        .withColumn("rdesc", row_number().over(
-          Window.partitionBy("event_type")
-            .orderBy(col("ep").desc, col("event_id").desc)))
-      val irate = when(col("value") >= col("pv"),
-          (col("value") - col("pv")) / (col("ep") - col("pe")))
-        .otherwise(col("value") / (col("ep") - col("pe")))
-      pairs.groupBy("event_type")
-        .agg(
-          sum(when(col("value") < col("pv"), 1).otherwise(0)).as("resets"),
-          sum(when(col("value") =!= col("pv"), 1).otherwise(0)).as("changes"),
-          (round(max(when(col("rdesc") === 1, irate)), 4) + 0.0).as("irate"),
-          (round(max(when(col("rdesc") === 1,
-            col("value") - col("pv"))), 4) + 0.0).as("idelta"))
-        .orderBy("event_type")
-    },
-
-    // A/B readout: per-user conversion flag, per-variant totals, pooled
-    // two-proportion z — 1-row frames cross-joined (broadcast-trivial)
-    "EVENT-ABTEST" -> { s =>
-      val u = s.table("events")
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
-        .withColumn("v", col("user_id") % 2)
-      val st = u.groupBy("v").agg(count(lit(1)).as("n"), sum("conv").as("c"))
-      // global agg over the filtered frame, NOT select: an empty variant
-      // must still yield ONE row of nulls — the SQL twin's scalar
-      // subqueries do, and a 0-row cross join would hash-diverge from it
-      val a = st.where(col("v") === 0)
-        .agg(max("n").as("n_a"), max("c").as("c_a"))
-      val b = st.where(col("v") === 1)
-        .agg(max("n").as("n_b"), max("c").as("c_b"))
-      val (ca, cb) = (col("c_a").cast("double"), col("c_b").cast("double"))
-      val pPool = (ca + cb) / (col("n_a") + col("n_b"))
-      // degenerate pool (0%/100% conversion): variance term is 0 → z := 0
-      val z = when(
-        col("c_a") + col("c_b") === 0 ||
-          col("c_a") + col("c_b") === col("n_a") + col("n_b"), lit(0.0))
-        .otherwise((ca / col("n_a") - cb / col("n_b")) /
-          sqrt(pPool * (lit(1) - pPool) *
-            (lit(1.0) / col("n_a") + lit(1.0) / col("n_b"))))
-      a.crossJoin(b).select(
-        col("n_a"), col("n_b"), col("c_a").as("conv_a"), col("c_b").as("conv_b"),
-        round(ca / col("n_a"), 4).as("rate_a"),
-        round(cb / col("n_b"), 4).as("rate_b"),
-        (round(z, 4) + 0.0).as("z"))
-    },
-
-    // alert rule with FOR-duration: gaps-and-islands run detection over
-    // the flagged subset, per-run hold check
-    "TS-ALERT-FOR" -> { s =>
-      val wAll = Window.partitionBy("event_type").orderBy(col("ep"), col("event_id"))
-      val flagged = s.table("events").where(col("user_id") < 5)
-        .select(col("event_type"), col("event_id"),
-          col("ts").cast("long").as("ep"), col("value"))
-        .withColumn("rall", row_number().over(wAll))
-        .where(col("value") > 100)
-        .withColumn("grp", col("rall") - row_number().over(wAll))
-      flagged.groupBy("event_type", "grp")
-        .agg(min("ep").as("astart0"), max("ep").as("aend0"),
-          count(lit(1)).as("npts"))
-        .where(col("npts") >= 2 && col("aend0") - col("astart0") >= 600)
-        .select(col("event_type"),
-          col("astart0").as("astart"),
-          col("aend0").as("aend"), col("npts"),
-          (col("aend0") - col("astart0")).as("dur"))
-        .orderBy("event_type", "astart")
-    },
-
-    // PromQL histogram_quantile: bucket counters → window cumsum → per-q
-    // lowest covering bucket → in-bucket linear interpolation, +Inf clamps
-    "TS-HIST-QUANTILE" -> { s =>
-      val sq = s; import sq.implicits._
-      val le = when(col("value") <= 50, 50.0).when(col("value") <= 100, 100.0)
-        .when(col("value") <= 200, 200.0).when(col("value") <= 400, 400.0)
-        .otherwise(999999.0)
-      val b = s.table("events")
-        .select(col("event_type"), le.as("le"))
-        .groupBy("event_type", "le").agg(count(lit(1)).as("cnt"))
-      val c = b
-        .withColumn("cum", sum("cnt").over(
-          Window.partitionBy("event_type").orderBy("le")))
-        .withColumn("total", sum("cnt").over(Window.partitionBy("event_type")))
-      val qs = Seq(0.50, 0.90, 0.99).toDF("q")
-      val sel = c.crossJoin(qs)
-        .where(col("cum") >= col("q") * col("total"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("event_type", "q").orderBy("le")))
-        .where(col("rn") === 1)
-      val lo = when(col("le") === 50.0, 0.0).when(col("le") === 100.0, 50.0)
-        .when(col("le") === 200.0, 100.0).when(col("le") === 400.0, 200.0)
-        .otherwise(400.0)
-      sel.select(col("event_type"), col("q"),
-          round(when(col("le") === 999999.0, 400.0)
-            .otherwise(lo + (col("le") - lo) *
-              (col("q") * col("total") - (col("cum") - col("cnt"))) / col("cnt")),
-            4).as("est"))
-        .orderBy("event_type", "q")
-    },
-
-    "TS-GAPFILL" -> { s =>
-      val b = s.table("events").where(col("event_type") === "click")
-        .groupBy((floor(col("ts").cast("double") / 21600) * 21600).cast("bigint").as("bucket"))
-        .agg(count(lit(1)).as("c"))
-      val r = b.agg(min("bucket").as("mn"), max("bucket").as("mx"))
-        .select(explode(sequence(col("mn"), col("mx"), lit(21600L))).as("bucket"))
-      r.join(b, Seq("bucket"), "left")
-        .select(col("bucket"), coalesce(col("c"), lit(0L)).as("c"))
-        .orderBy("bucket")
-    },
-
-    "TS-LOCF" -> { s =>
-      val b = s.table("events").where(col("user_id") < 3)
-        .groupBy(col("user_id"),
-          (floor(col("ts").cast("double") / 21600) * 21600).cast("bigint").as("bucket"))
-        .agg(round(max("value"), 2).as("v"))
-      val buckets = b.agg(min("bucket").as("mn"), max("bucket").as("mx"))
-        .select(explode(sequence(col("mn"), col("mx"), lit(21600L))).as("bucket"))
-      val r = b.select("user_id").distinct().crossJoin(buckets)
-      r.join(b, Seq("user_id", "bucket"), "left")
-        .select(col("user_id"), col("bucket"),
-          last("v", ignoreNulls = true).over(
-            Window.partitionBy("user_id").orderBy("bucket")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("v"))
-        .orderBy("user_id", "bucket")
-    },
-
-    // balanced per-class sample: fixed count per class, deterministic
-    // hash order, class-partitioned window (never a global sort)
-    "SAMPLE-BALANCED" -> { s =>
-      val w = Window.partitionBy("label")
-        .orderBy(graft.llm.Dedup.portableHash(col("vec_id").cast("string")), col("vec_id"))
-      s.table("embeddings")
-        .select(col("label"), col("vec_id"), row_number().over(w).as("rn"))
-        .where(col("rn") <= 5)
-        .select("label", "vec_id")
-        .orderBy("label", "vec_id")
-    },
-
-    // SAMPLE-BALANCED's heap-aggregate scale twin — same rows, no window
-    "SAMPLE-BALANCED-SCALE" -> { s =>
-      val negHash = -call_function("graft_poly_hash",
-        col("vec_id").cast("string")).cast("double")
-      s.table("embeddings").groupBy("label")
-        .agg(call_function("graft_topk_by", negHash,
-          lpad(col("vec_id").cast("string"), 12, "0"), lit(5)).as("arr"))
-        .select(col("label"), explode(col("arr")).as("s"))
-        .select(col("label"), col("s.item").cast("bigint").as("vec_id"))
-        .orderBy("label", "vec_id")
-    },
-
-    "SAMPLE-HASH" -> (s => s.table("events")
-      .select(col("value"),
-        call_function("graft_poly_hash",
-          concat(col("event_type"), lit("#"), col("event_id").cast("string"))).as("h"))
-      .where(col("h") % 20 === 0)
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast(dec(18, 2))).cast("double"), 2).as("sv"))),
-
-    "MM-FRAME-SAMPLE" -> (s => s.table("documents").where(col("doc_id") < 10)
-      .select(col("doc_id").as("media_id"), md5(col("text")).as("digest"),
-        (length(col("text").cast("binary")) % 5 + 1).as("n_frames"))
-      .select(col("media_id"),
-        explode(sequence(lit(0), col("n_frames") - 1)).as("frame_idx"), col("digest"))
-      .orderBy("media_id", "frame_idx")),
-
-    "STREAM-DEDUP" -> { s =>
-      val w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-      s.table("events").where(col("user_id") < 20)
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          row_number().over(w).as("rn"))
-        .where(col("rn") === 1)
-        .select(col("user_id"), col("event_type"), col("event_id").as("first_event"))
-        .orderBy("user_id", "event_type")
-    },
-
-    "FN-DATEDIFF" -> (s => s.table("orders")
-      .select(col("o_orderkey"),
-        datediff(lit(java.sql.Date.valueOf("1995-06-01")),
-          col("o_orderdate").cast("date")).as("dd"),
-        date_add(col("o_orderdate").cast("date"), 30).cast("string").as("d30"),
-        last_day(col("o_orderdate").cast("date")).cast("string").as("eom"))
-      .orderBy("o_orderkey").limit(50)),
-
-    // column orders deliberately differ between the two sides: unionByName
-    // aligns by NAME, which a positional union would silently scramble
-    "SET-UNION-BYNAME" -> { s =>
-      val a = s.table("customer").where(col("c_custkey") <= 50)
-        .select(col("c_custkey").as("id"), col("c_nationkey").as("k"))
-      val b = s.table("supplier").where(col("s_suppkey") <= 50)
-        .select(col("s_nationkey").as("k"), col("s_suppkey").as("id"))
-      a.unionByName(b).orderBy("k", "id")
-    },
-
-    // both explode the whole corpus: spread the (often single-split) source
-    // first so the per-row string work parallelizes — see Dedup.shingles
-    // ordered string aggregation: numeric sort_array before the join keeps
-    // the WITHIN GROUP (ORDER BY c_custkey) ordering of the SQL twin
-    "AGG-STRING" -> (s => s.table("customer")
-      .where(col("c_custkey") <= 40)
-      .groupBy(col("c_nationkey").as("k"))
-      .agg(concat_ws(",",
-        transform(sort_array(collect_list(col("c_custkey"))), _.cast("string"))).as("ids"))
-      .orderBy("k")),
-
-    // words is ','-joined (not a raw array) so the driver's pandas-side
-    // canonicalizer can sort it — same contract as AGG-STRING/AGG-COLLECT
-    "FN-REGEXALL" -> (s => s.table("part")
-      .select(col("p_partkey"),
-        array_join(regexp_extract_all(col("p_name"), lit("[a-z]{5,}"), lit(0)), ",").as("words"),
-        size(regexp_extract_all(col("p_name"), lit("[a-z]{5,}"), lit(0))).as("n"))
-      .orderBy("p_partkey").limit(40)),
 
     // spread first: the formatted price participates in the sort, so every
     // row formats — on a single-split lineitem that is one core's work
@@ -1657,58 +623,6 @@ object Relational {
           (a, b) => concat_ws(" ", a, b))).as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("freq"))
         .orderBy(col("freq").desc, col("bigram")).limit(20)
-    },
-
-    "LLM-QUALITY-FILTER" -> { s =>
-      val toks = split(col("text"), " ")
-      s.table("documents")
-        .select(col("doc_id"), length(col("text")).as("n_chars"),
-          size(toks).as("n_tokens"), size(array_distinct(toks)).as("n_uniq"))
-        .where(col("n_tokens").between(30, 90)
-          && (col("n_chars") / col("n_tokens")).between(3, 12)
-          && col("n_uniq").cast("double") / col("n_tokens") > 0.4)
-        .select("doc_id", "n_tokens")
-        .orderBy("doc_id").limit(60)
-    },
-
-    "EMB-NORM" -> { s =>
-      val l2 = graft.functions.VectorFunctions.l2Norm(col("embedding"))
-      s.table("embeddings")
-        .select(col("vec_id"), round(l2, 4).as("l2"),
-          (round(col("embedding").getItem(0).cast("double") / l2, 4) + 0.0).as("e0n"))
-        .orderBy("vec_id").limit(50)
-    },
-
-    // correlated scalar subquery, expressed as the decorrelated plan the
-    // optimizer produces anyway: left join against the per-key aggregate
-    // limit FIRST (TakeOrderedAndProject over orders), then broadcast the
-    // 50 keys as a semi-join into lineitem BEFORE aggregating: the fact
-    // table aggregates only the probed groups instead of all of them — at
-    // 100× this turns a full-table shuffle into a 50-key scan-side filter.
-    // Left join keeps orders with no lineitem → hash-identical output.
-    "SUB-SCALAR" -> { s =>
-      val top = s.table("orders").select("o_orderkey").orderBy("o_orderkey").limit(50)
-      val agg = s.table("lineitem")
-        .join(broadcast(top.select(col("o_orderkey").as("k"))),
-          col("l_orderkey") === col("k"), "left_semi")
-        .groupBy("l_orderkey")
-        .agg(round(max("l_quantity").cast("double"), 2).as("maxq"))
-      top.join(agg, col("o_orderkey") === col("l_orderkey"), "left")
-        .select(col("o_orderkey"), col("maxq"))
-        .orderBy("o_orderkey")
-    },
-
-    // lateral correlated derived table — same decorrelated, prune-first form
-    "JOIN-LATERAL" -> { s =>
-      val top = s.table("orders").select("o_orderkey").orderBy("o_orderkey").limit(50)
-      val agg = s.table("lineitem")
-        .join(broadcast(top.select(col("o_orderkey").as("k"))),
-          col("l_orderkey") === col("k"), "left_semi")
-        .groupBy("l_orderkey")
-        .agg(round(max("l_quantity").cast("double"), 2).as("maxq"))
-      top.join(agg, col("o_orderkey") === col("l_orderkey"), "left")
-        .select(col("o_orderkey"), col("maxq"))
-        .orderBy("o_orderkey")
     },
 
     // Gopher-style repetition signals: mode-token fraction (one explode →
@@ -1749,17 +663,6 @@ object Relational {
         .orderBy("doc_id", "rn")
     },
 
-    // sequential Poisson sample (Ohlsson 1998): ξ = hash-uniform / weight,
-    // k smallest ξ — deterministic weighted sampling, one top-k pass
-    "SAMPLE-WEIGHTED" -> { s =>
-      val hm = call_function("graft_poly_hash", col("doc_id").cast("string")) % 1000003
-      val xi = hm.cast("double") / 1000003 / col("n_chars")
-      s.table("documents")
-        .select(col("doc_id"), col("n_chars"), xi.as("xi_raw"))
-        .orderBy(col("xi_raw"), col("doc_id")).limit(10)
-        .select(col("doc_id"), col("n_chars"), round(col("xi_raw") * 1000000, 4).as("xi"))
-    },
-
     // last-touch attribution via the payload-carrying as-of join — one
     // sort-based window pass, no per-key pair blow-up
     "EVENT-ATTRIBUTION" -> { s =>
@@ -1771,19 +674,6 @@ object Relational {
       AsOfJoin.lastBeforeWith(clicks, purchases, "user_id", "ts", "event_id", "click_id")
         .select(col("event_id"), col("last_payload").as("click_id"))
         .orderBy("event_id").limit(80)
-    },
-
-    // exact top-k per group: bounded-heap aggregate, k rows per group per
-    // map-side partial — no per-group full sort anywhere in the plan
-    "AGG-GROUP-TOPK" -> { s =>
-      val item = concat(col("l_orderkey").cast("string"), lit("#"),
-        col("l_linenumber").cast("string"))
-      s.table("lineitem").groupBy("l_returnflag")
-        .agg(call_function("graft_topk_by", col("l_extendedprice"), item, lit(3)).as("arr"))
-        .select(col("l_returnflag"), posexplode(col("arr")))
-        .select(col("l_returnflag"), (col("pos") + 1).cast("int").as("rn"),
-          col("col.ord").as("price"), col("col.item").as("item"))
-        .orderBy("l_returnflag", "rn")
     },
 
     // fuzzy near-dup pairs: noun-blocked self-join (key-equality), length
@@ -1821,21 +711,6 @@ object Relational {
         .orderBy("source", "chunk_id", "doc_id")
     },
 
-    // domain-weighted mixture: fixed per-source curation targets taken in
-    // portable-hash order — deterministic, one partitioned window pass
-    "SAMPLE-MIX" -> { s =>
-      val hh = call_function("graft_poly_hash", col("doc_id").cast("string"))
-      val w = Window.partitionBy("source").orderBy(col("hh"), col("doc_id"))
-      val target = when(col("source") === "src0", 20)
-        .when(col("source") === "src1", 10)
-        .when(col("source") === "src2", 5).otherwise(2)
-      s.table("documents").select(col("source"), col("doc_id"), hh.as("hh"))
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") <= target)
-        .select(col("source"), col("doc_id"), col("rn"))
-        .orderBy("source", "rn")
-    },
-
     // unigram-LM perplexity (CCNet-style quality signal): per-doc avg
     // negative log-likelihood under corpus token frequencies; ordered fold
     // per doc for cross-engine sum determinism (TEXT-ENTROPY recipe)
@@ -1857,127 +732,6 @@ object Relational {
         .orderBy("doc_id").limit(60)
     },
 
-    // first-order Markov transitions over the clickstream: one lag window
-    // per user, then count + per-source conditional probability
-    "EVENT-PATH" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val p = s.table("events").select(col("user_id"), col("event_type"),
-        lead(col("event_type"), 1).over(w).as("nxt"))
-      p.where(col("nxt").isNotNull)
-        .groupBy("event_type", "nxt").agg(count(lit(1)).as("n"))
-        .select(col("event_type"), col("nxt"), col("n"),
-          round(col("n").cast("double") /
-            sum(col("n")).over(Window.partitionBy("event_type")), 4).as("p_next"))
-        .orderBy(col("n").desc, col("event_type"), col("nxt")).limit(15)
-    },
-
-    // M4 pixel-bucket downsampling: first/min/max/last WITH their
-    // timestamps — four rank windows on ONE (user,bucket) partitioning
-    // (a single shuffle; each frame is per-bucket, never whole-series)
-    "TS-M4" -> { s =>
-      val b = s.table("events").where(col("user_id") < 8)
-        .select(col("user_id"),
-          (floor(col("ts").cast("double") / 21600) * 21600).cast("long").as("bucket"),
-          col("value"), col("ts").cast("long").as("et"), col("event_id"))
-      def w(cols: Column*) =
-        Window.partitionBy("user_id", "bucket").orderBy(cols: _*)
-      val r = b
-        .withColumn("rf", row_number().over(w(col("et"), col("event_id"))))
-        .withColumn("rl", row_number().over(w(col("et").desc, col("event_id").desc)))
-        .withColumn("rmn", row_number().over(w(col("value"), col("et"), col("event_id"))))
-        .withColumn("rmx", row_number().over(w(col("value").desc, col("et").desc, col("event_id").desc)))
-      def pick(rank: String, out: Column) = max(when(col(rank) === 1, out))
-      r.groupBy("user_id", "bucket")
-        .agg(pick("rf", col("et")).as("t_first"), round(pick("rf", col("value")), 2).as("v_first"),
-          pick("rmn", col("et")).as("t_min"), round(pick("rmn", col("value")), 2).as("v_min"),
-          pick("rmx", col("et")).as("t_max"), round(pick("rmx", col("value")), 2).as("v_max"),
-          pick("rl", col("et")).as("t_last"), round(pick("rl", col("value")), 2).as("v_last"))
-        .orderBy("user_id", "bucket")
-    },
-
-    // lag-1 autocorrelation per series: one partitioned lag + corr()
-    "TS-AUTOCORR" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      s.table("events")
-        .select(col("user_id"), col("value"), lag(col("value"), 1).over(w).as("pv"))
-        .where(col("pv").isNotNull)
-        .groupBy("user_id")
-        .agg((round(corr(col("value"), col("pv")), 4) + 0.0).as("ac1"),
-          count(lit(1)).as("n"))
-        .orderBy("user_id").limit(60)
-    },
-
-    // exact moving median over a 10-row frame (robust smoother); per-series
-    // partitioned frames only — KLL is the fixed-memory wide-frame path
-    "WIN-ROLLING-MEDIAN" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-9, Window.currentRow)
-      s.table("events").where(col("user_id") < 5)
-        .select(col("user_id"), col("event_id"),
-          round(call_function("percentile", col("value"), lit(0.5)).over(w), 4).as("med10"))
-        .orderBy("user_id", "event_id").limit(200)
-    },
-
-    // distinct count within a trailing 20-row frame: frame-bounded
-    // collect_set state (≤20 entries), partitioned by series
-    "WIN-ROLLING-DISTINCT" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-19, Window.currentRow)
-      s.table("events").where(col("user_id") < 5)
-        .select(col("user_id"), col("event_id"),
-          size(collect_set(col("event_type")).over(w)).as("ndist"))
-        .orderBy("user_id", "event_id").limit(200)
-    },
-
-    // one-sided CUSUM change score: the sequential recurrence
-    // S_t = max(0, S_{t-1} + x_t - mu - k) via its prefix-min closed form —
-    // two running frames on ONE per-series sort, no iterative fold
-    "TS-CUSUM" -> { s =>
-      val run = Window.partitionBy("user_id").orderBy(col("et"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val x = s.table("events").where(col("user_id") < 40)
-        .select(col("user_id"), col("event_id"), col("ts").cast("long").as("et"),
-          col("value"), avg(col("value")).over(Window.partitionBy("user_id")).as("mu"))
-      val c = x.withColumn("cm", sum(col("value") - col("mu") - 5.0).over(run))
-      val score = col("cm") - least(lit(0.0).cast("double"), min(col("cm")).over(run))
-      c.select(col("user_id"), col("event_id"),
-          (round(score, 4) + 0.0).as("cusum"), (score > 500.0).as("alarm"))
-        .orderBy("user_id", "event_id").limit(400)
-    },
-
-    // LTTB downsampling (parallel variant): triangle areas against the
-    // neighbor buckets' 6dp-rounded means; endpoints pinned in the first
-    // and last buckets. One aggregate + one bucket-level window + one
-    // per-bucket rank — all per-series partitioned.
-    "TS-LTTB" -> { s =>
-      val pts = s.table("events").where(col("user_id") < 20)
-        .select(col("user_id"), col("ts").cast("long").as("et"),
-          col("event_id"), col("value"))
-      val st = pts.groupBy("user_id").agg(min("et").as("mn"), max("et").as("mx"))
-      val b = pts.join(st, "user_id")
-        .withColumn("bk", least(
-          floor((col("et") - col("mn")) * 12.0 / (col("mx") - col("mn") + 1)).cast("int"),
-          lit(11)))
-        .select("user_id", "et", "event_id", "value", "bk")
-      val m = b.groupBy("user_id", "bk")
-        .agg(round(avg("et"), 6).as("bx"), round(avg("value"), 6).as("by"))
-      val wb = Window.partitionBy("user_id").orderBy("bk")
-      val n = m.select(col("user_id"), col("bk"),
-        lag("bx", 1).over(wb).as("ax"), lag("by", 1).over(wb).as("ay"),
-        lead("bx", 1).over(wb).as("cx"), lead("by", 1).over(wb).as("cy"))
-      val a = b.join(n, Seq("user_id", "bk"))
-        .withColumn("sel",
-          when(col("ax").isNull, col("et").cast("double"))
-            .when(col("cx").isNull, -col("et").cast("double"))
-            .otherwise(-abs((col("ax") - col("cx")) * (col("value") - col("ay"))
-              - (col("ax") - col("et")) * (col("cy") - col("ay")))))
-      val rn = row_number().over(
-        Window.partitionBy("user_id", "bk").orderBy(col("sel"), col("et"), col("event_id")))
-      a.withColumn("rn", rn).where(col("rn") === 1)
-        .select(col("user_id"), col("bk"), col("et"), round(col("value"), 2).as("v"))
-        .orderBy("user_id", "bk")
-    },
-
     // 2-D Pareto frontier: the Skyline operator (partition-local dominance
     // prune, then a frontier-sized global pass — no quadratic self-join)
     "AGG-SKYLINE" -> { s =>
@@ -1986,21 +740,6 @@ object Relational {
           "price", "size")
         .select(round(col("price"), 2).as("price"), col("size"))
         .orderBy("price")
-    },
-
-    // snapshot diff over planted inserts/deletes/updates: the generic CDC
-    // operator (one full outer join on the key, null-safe column compare)
-    "CDC-DIFF" -> { s =>
-      val o = s.table("orders")
-      val a = o.where(col("o_orderkey") % 10 =!= 0)
-        .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
-          round(col("o_totalprice"), 2).as("tp"))
-      val b = o.where(col("o_orderkey") % 10 =!= 1)
-        .select(col("o_orderkey").as("k"),
-          when(col("o_orderkey") % 7 === 0, "X").otherwise(col("o_orderstatus")).as("st"),
-          round(col("o_totalprice")
-            + when(col("o_orderkey") % 5 === 0, 10.0).otherwise(0.0), 2).as("tp"))
-      graft.operators.Cdc.snapshotDiff(a, b, Seq("k")).orderBy("k")
     },
 
     // type-2 dimension history from the event change log: the generic SCD2
@@ -2012,86 +751,6 @@ object Relational {
       graft.operators.Cdc.scd2(log, "user_id", "et", "event_id", Seq("state"))
         .withColumnRenamed("et", "valid_from")
         .orderBy("user_id", "valid_from")
-    },
-
-    // exponential (base-2) histogram over integer cents + cumulative
-    // fraction + bucket upper bound; ln-ratio rounded to 9dp before floor
-    // so bucket edges are libm-stable
-    "AGG-EXPHIST" -> { s =>
-      val bucket = floor(round(
-        log(round(col("value") * 100).cast("long").cast("double")) / math.log(2.0), 9))
-        .cast("int")
-      val h = s.table("events").where(col("value") > 0)
-        .select(col("event_type"), bucket.as("bucket"))
-        .groupBy("event_type", "bucket").agg(count(lit(1)).as("cnt"))
-      val cum = sum("cnt").over(Window.partitionBy("event_type").orderBy("bucket"))
-      val tot = sum("cnt").over(Window.partitionBy("event_type"))
-      h.select(col("event_type"), col("bucket"), col("cnt"),
-          round(cum * 1.0 / tot, 4).as("cum_frac"),
-          round(pow(2.0, col("bucket") + 1) / 100.0, 4).as("ub"))
-        .orderBy("event_type", "bucket")
-    },
-
-    // hour→day re-aggregation == day-from-raw: the mergeable-rollup
-    // contract behind multi-resolution metric retention
-    "TS-ROLLUP-CASCADE" -> { s =>
-      val pts = s.table("events").select(col("event_type"),
-        col("ts").cast("long").as("et"), col("value"))
-      val h = pts.groupBy(col("event_type"), (col("et") - (col("et") % 3600)).as("hb"))
-        .agg(sum("value").as("sv"), count(lit(1)).as("c"),
-          min("value").as("mn"), max("value").as("mx"))
-      val dh = h.groupBy(col("event_type"), (col("hb") - (col("hb") % 86400)).as("db"))
-        .agg(sum("sv").as("sv"), sum("c").cast("long").as("c"),
-          min("mn").as("mn"), max("mx").as("mx"))
-      val dr = pts.groupBy(col("event_type").as("r_et"), (col("et") - (col("et") % 86400)).as("r_db"))
-        .agg(sum("value").as("r_sv"), count(lit(1)).as("r_c"),
-          min("value").as("r_mn"), max("value").as("r_mx"))
-      dh.join(dr, col("event_type") === col("r_et") && col("db") === col("r_db"))
-        .select(col("event_type"), col("db"), round(col("sv"), 4).as("day_sum"),
-          col("c").as("day_cnt"), round(col("mn"), 4).as("day_min"),
-          round(col("mx"), 4).as("day_max"),
-          (col("c") === col("r_c") && abs(col("sv") - col("r_sv")) < 1e-6
-            && col("mn") === col("r_mn") && col("mx") === col("r_mx")).as("rollup_equal"))
-        .orderBy("event_type", "db")
-    },
-
-    // SRE multi-window multi-burn SLO alert: tumbling 1h/6h error-budget
-    // burn, alert only when BOTH windows exceed budget; the short row finds
-    // its long row by bucket arithmetic — key-equality join, no range join
-    "TS-BURN-RATE" -> { s =>
-      val pts = s.table("events").select(col("event_type"),
-        col("ts").cast("long").as("et"), col("value"))
-      def win(width: Int, n: String, e: String) =
-        pts.groupBy(col("event_type"), (col("et") - (col("et") % width)).as(
-            if (width == 3600) "hb" else "lb"))
-          .agg(count(lit(1)).as(n), count(when(col("value") > 400, 1)).as(e))
-      val h = win(3600, "n", "err")
-      val l = win(21600, "n6", "err6").withColumnRenamed("event_type", "l_et")
-      val bs = col("err") * 1.0 / col("n") / 0.02
-      val bl = col("err6") * 1.0 / col("n6") / 0.02
-      h.join(l, col("event_type") === col("l_et")
-          && (col("hb") - (col("hb") % 21600)) === col("lb"))
-        .select(col("event_type"), col("hb"),
-          round(bs, 4).as("burn_short"), round(bl, 4).as("burn_long"),
-          (bs > 1.0 && bl > 1.0).as("alert"))
-        .orderBy("event_type", "hb")
-    },
-
-    // pairwise Pearson correlation matrix across metric series: decimal-
-    // exact hourly sums, upper-triangle hour-equality self-join of BUCKET
-    // rows, corr() per pair
-    "TS-CORR-MATRIX" -> { s =>
-      val h = s.table("events")
-        .select(col("event_type"), col("ts").cast("long").as("et"), col("value"))
-        .groupBy(col("event_type"), (col("et") - (col("et") % 3600)).as("hb"))
-        .agg(sum(col("value").cast(dec(18, 2))).cast("double").as("y"))
-      val a = h.select(col("event_type").as("t1"), col("hb"), col("y").as("ya"))
-      val b = h.select(col("event_type").as("t2"), col("hb").as("hb2"), col("y").as("yb"))
-      a.join(b, col("hb") === col("hb2") && col("t1") < col("t2"))
-        .groupBy("t1", "t2")
-        .agg((round(corr(col("ya"), col("yb")), 4) + 0.0).as("r"),
-          count(lit(1)).as("n"))
-        .orderBy("t1", "t2")
     },
 
     // BM25 ranking via the TextAnalysis operator (shared explode, broadcast
@@ -2107,59 +766,6 @@ object Relational {
     // no global sort of the key counts)
     "DQ-SKEW" -> (s =>
       graft.operators.Quality.skewReport(s.table("lineitem"), "l_suppkey")),
-
-    // multi-touch linear attribution: user-key join with the 24 h band as
-    // residual, per-purchase click count from one pid-partitioned frame
-    "EVENT-ATTRIB-LINEAR" -> { s =>
-      val e = s.table("events").select(col("event_id"), col("user_id"),
-        col("event_type"), col("ts").cast("long").as("et"),
-        (get_json_object(col("props"), "$.k").cast("long") % 4).as("ch"))
-      val p = e.where(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id").as("pu"), col("et").as("pt"))
-      val c = e.where(col("event_type") === "click")
-        .select(col("user_id").as("cu"), col("et").as("ct"), col("ch"))
-      val j = p.join(c, col("pu") === col("cu")
-          && col("ct") > col("pt") - 86400 && col("ct") <= col("pt"))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("pid")))
-      j.groupBy(col("ch").as("channel"))
-        .agg(round(sum(lit(1.0) / col("n")), 4).as("credit"),
-          count(lit(1)).as("touches"))
-        .orderBy("channel")
-    },
-
-    // PromQL increase(): per-series lag + DECIMAL-pinned positive deltas
-    // (resets contribute the new value), per-hour sums
-    "TS-INCREASE" -> { s =>
-      val w = Window.partitionBy("event_type").orderBy(col("et"), col("event_id"))
-      val d = s.table("events")
-        .select(col("event_type"), col("ts").cast("long").as("et"),
-          col("event_id"), col("value"))
-        .withColumn("pv", lag(col("value"), 1).over(w))
-        .where(col("pv").isNotNull)
-      d.select(col("event_type"), (col("et") - (col("et") % 3600)).as("hb"),
-          round(when(col("value") >= col("pv"), col("value") - col("pv"))
-            .otherwise(col("value")), 2).cast(dec(18, 2)).as("term"))
-        .groupBy("event_type", "hb")
-        .agg(round(sum("term").cast("double"), 2).as("increase"))
-        .orderBy("event_type", "hb").limit(600)
-    },
-
-    // time-weighted average for irregular gauges: lead for the hold
-    // duration, DECIMAL value×weight products, one double division
-    "TS-TWA" -> { s =>
-      val w = Window.partitionBy("event_type").orderBy(col("et"), col("event_id"))
-      val d = s.table("events")
-        .select(col("event_type"), col("ts").cast("long").as("et"),
-          col("event_id"), col("value"))
-        .withColumn("nxt", lead(col("et"), 1).over(w))
-        .where(col("nxt").isNotNull && col("nxt") > col("et"))
-      d.select(col("event_type"), (col("et") - (col("et") % 3600)).as("hb"),
-          (col("value").cast(dec(18, 2)) * (col("nxt") - col("et"))).as("wv"),
-          (col("nxt") - col("et")).as("dt"))
-        .groupBy("event_type", "hb")
-        .agg(round(sum("wv").cast("double") / sum("dt").cast("long"), 4).as("twa"))
-        .orderBy("event_type", "hb").limit(600)
-    },
 
     // interval overlap via the grid operator: ≤2 cells per interval,
     // canonical-cell exactly-once, key-equality join — never the theta
@@ -2194,29 +800,6 @@ object Relational {
           && col("vf") <= col("et") && (col("vt").isNull || col("et") < col("vt")))
         .select(col("event_id"), col("user_id"), col("state"))
         .orderBy("event_id").limit(400)
-    },
-
-    // missing-hour gap report: grid anti-join + gaps-and-islands merge —
-    // all windows series-partitioned, all-integer arithmetic
-    "TS-GAPS" -> { s =>
-      val secs = col("ts").cast("long")
-      val obs = s.table("events").where(col("user_id") < 40)
-        .select(col("event_type"), (secs - (secs % 3600)).as("hb")).distinct()
-      val span = obs.groupBy("event_type").agg(min("hb").as("mn"), max("hb").as("mx"))
-      val grid = span.select(col("event_type").as("g_et"),
-          explode(sequence(lit(0), lit(200))).as("h"), col("mn"), col("mx"))
-        .select(col("g_et"), (col("mn") + col("h") * 3600).as("g_hb"), col("mx"))
-        .where(col("g_hb") <= col("mx"))
-      val miss = grid.join(obs,
-          col("g_et") === col("event_type") && col("g_hb") === col("hb"), "left_anti")
-      val grp = col("g_hb") - lit(3600) *
-        row_number().over(Window.partitionBy("g_et").orderBy("g_hb"))
-      miss.withColumn("grp", grp)
-        .groupBy(col("g_et").as("event_type"), col("grp"))
-        .agg(min("g_hb").as("gap_start"), max("g_hb").as("gap_end"),
-          count(lit(1)).as("n_missing"))
-        .drop("grp")
-        .orderBy("event_type", "gap_start").limit(300)
     },
 
     // distributed BPE merge training via the iterative operator (the SQL
@@ -2257,54 +840,6 @@ object Relational {
         .orderBy(col("pmi").desc, col("t1"), col("t2")).limit(40)
     },
 
-    // DAU / trailing WAU / stickiness: day-distinct rows keep the band
-    // join's fan-out at 7× the DAY-user table, never raw events
-    "EVENT-STICKINESS" -> { s =>
-      val secs = col("ts").cast("long")
-      val pts = s.table("events")
-        .select(col("user_id"), (secs - (secs % 86400)).as("db"))
-      val dau = pts.groupBy("db").agg(count_distinct(col("user_id")).as("dau"))
-      val days = pts.select(col("db").as("d_db")).distinct()
-      val wau = days.join(pts,
-          col("db") > col("d_db") - 7 * 86400 && col("db") <= col("d_db"))
-        .groupBy("d_db").agg(count_distinct(col("user_id")).as("wau"))
-      dau.join(wau, col("db") === col("d_db"))
-        .select(col("db"), col("dau"), col("wau"),
-          round(col("dau") * 1.0 / col("wau"), 4).as("stickiness"))
-        .orderBy("db")
-    },
-
-    // rank-family completion: percent_rank + dense_rank on one window
-    "WIN-PERCENT-RANK" -> { s =>
-      val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
-      s.table("orders").where(col("o_custkey") < 40)
-        .select(col("o_custkey"), col("o_orderkey"),
-          round(percent_rank().over(w), 4).as("pr"),
-          dense_rank().over(w).cast("long").as("dr"),
-          col("o_orderpriority"))
-        .orderBy("o_orderpriority", "pr", "o_orderkey").limit(300)
-    },
-
-    // session-level rollup: gap breaks + running-sum session ids (two
-    // windows, one per-user sort) + one aggregate
-    "EVENT-SESSION-STATS" -> { s =>
-      val w = Window.partitionBy("user_id").orderBy(col("et"), col("event_id"))
-      val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val d = s.table("events").where(col("user_id") < 25)
-        .select(col("user_id"), col("ts").cast("long").as("et"),
-          col("event_id"), col("event_type"))
-        .withColumn("brk",
-          when(col("et") - lag(col("et"), 1).over(w) > 1800, 1).otherwise(0))
-        .withColumn("s", sum(col("brk")).over(run))
-      d.groupBy("user_id", "s")
-        .agg(count(lit(1)).as("n_events"),
-          (max("et") - min("et")).as("dur"),
-          count_distinct(col("event_type")).as("n_types"))
-        .select(col("user_id"), col("s").cast("long").as("sid"),
-          col("n_events"), col("dur"), col("n_types"))
-        .orderBy("user_id", "sid").limit(500)
-    },
-
     // per-column profiling via the one-pass Quality operator (the SQL twin
     // is the cols×-scans UNION contract)
     "DQ-PROFILE" -> { s =>
@@ -2327,20 +862,6 @@ object Relational {
         Quality.inSet("enum_orderstatus", o, "o_orderstatus", Seq("F", "O", "P"))))
     },
 
-    // sweep-line peak concurrency: ±1 interval deltas, one running sum
-    // ordered (t, d) — ends before starts at shared instants — per-bucket
-    // max. Default RANGE frame ties match the SQL twin. The unpartitioned
-    // window is the contract shape; EVENT-CONCURRENCY-SCALE (Extensions)
-    // is the distributed per-bucket-offset twin.
-    "EVENT-CONCURRENCY" -> { s =>
-      val ev = s.table("events")
-      val pts = ev.select(col("ts").cast("long").as("t"), lit(1).as("d"))
-        .unionAll(ev.select((col("ts").cast("long") + 300).as("t"), lit(-1).as("d")))
-      val sw = pts.withColumn("conc", sum(col("d")).over(Window.orderBy(col("t"), col("d"))))
-      sw.groupBy((floor(col("t") / 21600) * 21600).cast("long").as("bucket"))
-        .agg(max(col("conc")).as("peak"))
-        .orderBy("bucket")
-    },
   )
 
   def apply(id: String, spark: SparkSession): DataFrame = impls(id)(spark)

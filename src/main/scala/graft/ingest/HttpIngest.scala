@@ -47,11 +47,13 @@ object HttpIngest {
     java.lang.Long.toHexString(new java.security.SecureRandom().nextLong() | (1L << 62))
 
   /** A running bridge; `stop()` releases the port (in-flight requests get
-    * up to one second to drain). */
-  final class Bridge private[HttpIngest] (server: HttpServer, val port: Int,
-                                          val spoolDir: String) {
+    * up to one second to drain) and shuts down its worker threads. */
+  final class Bridge private[HttpIngest] (server: HttpServer,
+                                          workers: java.util.concurrent.ExecutorService,
+                                          val port: Int, val spoolDir: String) {
     def stop(): Unit = {
       server.stop(1)
+      workers.shutdown()
       registry.synchronized { registry.remove(port) }
     }
   }
@@ -90,14 +92,15 @@ object HttpIngest {
     // bounded daemon worker pool: concurrent POSTs spool in parallel
     // (each handler is a tiny write+rename); daemon so a forgotten
     // bridge never pins the JVM
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
+    val workers = java.util.concurrent.Executors.newFixedThreadPool(4,
       (r: Runnable) => {
         val t = new Thread(r, "graft-http-ingest")
         t.setDaemon(true)
         t
-      }))
+      })
+    server.setExecutor(workers)
     server.start()
-    val b = new Bridge(server, server.getAddress.getPort, spoolDir)
+    val b = new Bridge(server, workers, server.getAddress.getPort, spoolDir)
     registry.synchronized { registry(b.port) = b }
     b
   }

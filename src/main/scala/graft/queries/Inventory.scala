@@ -9,6 +9,10 @@ package graft.queries
   * add or edit a query here without re-running it through the dual-engine
   * validator.
   *
+  * `sparkSql` is what graft.SparkEntry serves, unless graft.dsl.Relational
+  * has an entry for the ID; such an entry exists only where its optimized
+  * plan differs from this SQL's (an engine operator or a hand-shaped plan).
+  *
   * Dialect notes (why some duck variants differ):
   *  - epoch seconds: Spark `CAST(ts AS DOUBLE)` / `CAST(ts AS BIGINT)` vs
   *    DuckDB `epoch(ts)`;
@@ -76,10 +80,16 @@ object Inventory {
 
   q("JOIN-SEMI",
     """SELECT c_custkey FROM customer
+      |LEFT SEMI JOIN (SELECT o_custkey FROM orders WHERE o_totalprice > 100000) o
+      |  ON c_custkey = o_custkey
+      |ORDER BY c_custkey""".stripMargin,
+    """SELECT c_custkey FROM customer
       |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 100000)
       |ORDER BY c_custkey""".stripMargin)
 
   q("JOIN-ANTI",
+    """SELECT c_custkey FROM customer LEFT ANTI JOIN orders ON c_custkey = o_custkey
+      |ORDER BY c_custkey""".stripMargin,
     """SELECT c_custkey FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
       |ORDER BY c_custkey""".stripMargin)
@@ -290,6 +300,13 @@ object Inventory {
   q("JOIN-TPCH-Q13",
     """SELECT c_count, count(*) AS custdist FROM (
       |  SELECT c_custkey, count(o_orderkey) AS c_count
+      |  FROM customer LEFT JOIN
+      |    (SELECT o_custkey, o_orderkey FROM orders WHERE o_orderpriority <> '5-LOW') o
+      |    ON c_custkey = o_custkey
+      |  GROUP BY c_custkey) t
+      |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
+    """SELECT c_count, count(*) AS custdist FROM (
+      |  SELECT c_custkey, count(o_orderkey) AS c_count
       |  FROM customer LEFT JOIN orders
       |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
       |  GROUP BY c_custkey) t
@@ -408,6 +425,14 @@ object Inventory {
   // "has no urgent orders" stands in for quirk #3 (customers without ANY
   // order don't exist below sf0.1); country code is nationkey mod 5.
   q("JOIN-TPCH-Q22",
+    """WITH thr AS (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS thr
+      |             FROM customer WHERE c_acctbal > 0.0D),
+      |c AS (SELECT /*+ BROADCAST(thr) */ * FROM customer CROSS JOIN thr WHERE c_acctbal > thr)
+      |SELECT CAST(c_nationkey % 5 AS INT) AS cntrycode, count(*) AS numcust,
+      |  round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2) AS totacctbal
+      |FROM c LEFT ANTI JOIN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT') u
+      |  ON c_custkey = o_custkey
+      |GROUP BY CAST(c_nationkey % 5 AS INT) ORDER BY cntrycode""".stripMargin,
     """SELECT cntrycode, count(*) AS numcust,
       |  round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2) AS totacctbal FROM (
       |  SELECT CAST(c_nationkey % 5 AS INT) AS cntrycode, c_acctbal FROM customer
@@ -417,9 +442,15 @@ object Inventory {
       |      WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')) t
       |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)
 
+  // dedup-then-count instead of count(DISTINCT): the map-side partial
+  // dedup replaces the Expand + two-phase distinct aggregate (2× at sf0.1).
+  // IS NOT NULL matches count(DISTINCT)'s null skipping, except that a group
+  // whose ids are all null vanishes instead of reporting u=0 (no fixture
+  // has one). The oracle runs the count(DISTINCT) form.
   q("AGG-DISTINCT",
-    """SELECT event_type, count(DISTINCT user_id) AS u
-      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    """SELECT event_type, count(*) AS u FROM
+      |  (SELECT DISTINCT event_type, user_id FROM events WHERE user_id IS NOT NULL) t
+      |GROUP BY event_type ORDER BY event_type""".stripMargin,
     s"""SELECT event_type, count(DISTINCT user_id) AS u
       |FROM $EV events GROUP BY event_type ORDER BY event_type""".stripMargin)
 
@@ -487,7 +518,14 @@ object Inventory {
       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running
       |FROM $EV events WHERE user_id < 3 ORDER BY event_id LIMIT 80""".stripMargin)
 
+  // range key in integer cents: decimal(18,2) ×100 → bigint is a monotone
+  // bijection, so the order and the [p−1000, p] frame are the decimal key's
+  // (the oracle's form), with the frame arithmetic on longs
   q("WIN-FRAME-RANGE",
+    """SELECT o_orderkey,
+      |  count(*) OVER (ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      |        RANGE BETWEEN 100000 PRECEDING AND CURRENT ROW) AS near_cnt
+      |FROM orders ORDER BY o_orderkey LIMIT 60""".stripMargin,
     """SELECT o_orderkey,
       |  count(*) OVER (ORDER BY CAST(o_totalprice AS DECIMAL(18,2))
       |        RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS near_cnt
@@ -525,6 +563,8 @@ object Inventory {
 
   // ----------------------------------------------------------- sort/limit
   q("SORT-TOPK",
+    """SELECT o_orderkey, round(o_totalprice, 2) AS p FROM
+      |  (SELECT * FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10) t""".stripMargin,
     """SELECT o_orderkey, round(o_totalprice,2) AS p FROM orders
       |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin)
 
@@ -543,9 +583,13 @@ object Inventory {
 
   q("SET-INTERSECT",
     """SELECT c_nationkey AS k FROM customer
+      |INTERSECT SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin,
+    """SELECT c_nationkey AS k FROM customer
       |INTERSECT SELECT s_nationkey FROM supplier ORDER BY k""".stripMargin)
 
   q("SET-EXCEPT",
+    """SELECT c_nationkey AS k FROM customer
+      |EXCEPT SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin,
     """SELECT c_nationkey AS k FROM customer
       |EXCEPT SELECT s_nationkey FROM supplier ORDER BY k""".stripMargin)
 
@@ -636,16 +680,19 @@ object Inventory {
       |      FROM $EV events CROSS JOIN shifts)
       |SELECT wstart, count(*) AS c FROM b GROUP BY wstart ORDER BY wstart LIMIT 100""".stripMargin)
 
+  // one window pass: the session count is max(running sum of new_s) =
+  // sum(new_s), so Spark needs no second, differently ordered window; the
+  // oracle runs the running-sum form
   q("STREAM-SESSION",
     """WITH g AS (
       |  SELECT user_id, ts,
-      |    CASE WHEN CAST(ts AS DOUBLE) - CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS DOUBLE) > 1800
-      |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+      |    CASE WHEN CAST(ts AS DOUBLE) - CAST(lag(ts) OVER w AS DOUBLE) > 1800
+      |         OR lag(ts) OVER w IS NULL
       |         THEN 1 ELSE 0 END AS new_s
-      |  FROM events),
-      |s AS (SELECT user_id, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS sid FROM g)
-      |SELECT user_id, CAST(max(sid) AS BIGINT) AS n_sessions, count(*) AS n_events
-      |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+      |SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions, count(*) AS n_events
+      |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
     s"""WITH g AS (
       |  SELECT user_id, ts, event_id,
       |    CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
@@ -714,11 +761,36 @@ object Inventory {
       |  count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS p_cnt
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
 
-  // exact interpolated percentiles (Spark percentile == DuckDB quantile_cont)
+  // exact interpolated percentiles (Spark percentile == DuckDB quantile_cont).
+  // Spark runs a per-group sort + rank arithmetic instead of percentile(),
+  // whose aggregate buffers every value of a group and sorts it on one
+  // thread: the window keeps <= 4 candidate rows per group before the agg.
+  // The count shares the rank's window spec (one sort), and positions and
+  // interpolation stay DECIMAL (double loses ...145 boundary cases at sf0.1).
   q("AGG-MEDIAN",
-    """SELECT o_orderstatus, round(CAST(percentile(o_totalprice, 0.5) AS DOUBLE), 2) AS med,
-      |  round(CAST(percentile(o_totalprice, 0.9) AS DOUBLE), 2) AS p90
-      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+    """WITH r AS (
+      |  SELECT o_orderstatus, v,
+      |    row_number() OVER (PARTITION BY o_orderstatus ORDER BY v) AS rn,
+      |    1 + (count(1) OVER (PARTITION BY o_orderstatus ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) - 1) * 0.5 AS pos50,
+      |    1 + (count(1) OVER (PARTITION BY o_orderstatus ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) - 1) * 0.9 AS pos90
+      |  FROM (SELECT o_orderstatus, o_totalprice AS v FROM orders) o)
+      |SELECT o_orderstatus,
+      |  round(max(CASE WHEN rn = floor(pos50) THEN v END)
+      |    + (max(pos50) - max(floor(pos50)))
+      |      * (coalesce(max(CASE WHEN rn = floor(pos50) + 1 THEN v END),
+      |                  max(CASE WHEN rn = floor(pos50) THEN v END))
+      |         - max(CASE WHEN rn = floor(pos50) THEN v END)), 2) AS med,
+      |  round(max(CASE WHEN rn = floor(pos90) THEN v END)
+      |    + (max(pos90) - max(floor(pos90)))
+      |      * (coalesce(max(CASE WHEN rn = floor(pos90) + 1 THEN v END),
+      |                  max(CASE WHEN rn = floor(pos90) THEN v END))
+      |         - max(CASE WHEN rn = floor(pos90) THEN v END)), 2) AS p90
+      |FROM r
+      |WHERE rn >= floor(pos50) AND rn <= floor(pos50) + 1
+      |   OR rn >= floor(pos90) AND rn <= floor(pos90) + 1
+      |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     """SELECT o_orderstatus, round(CAST(quantile_cont(o_totalprice, 0.5) AS DOUBLE), 2) AS med,
       |  round(CAST(quantile_cont(o_totalprice, 0.9) AS DOUBLE), 2) AS p90
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
@@ -768,16 +840,14 @@ object Inventory {
       |FROM s ORDER BY user_id LIMIT 200""".stripMargin)
 
   q("AGG-WINSOR",
-    """WITH b AS (SELECT event_type, percentile(value, 0.05) AS lo,
-      |  percentile(value, 0.95) AS hi
-      |  FROM events WHERE value IS NOT NULL GROUP BY event_type)
-      |SELECT e.event_type AS g,
-      |  round(avg(greatest(b.lo, least(b.hi, e.value))), 4) AS wmean,
-      |  round(stddev_samp(greatest(b.lo, least(b.hi, e.value))), 4) AS wstd,
+    """WITH ev AS (SELECT * FROM events WHERE value IS NOT NULL),
+      |b AS (SELECT event_type, percentile(value, 0.05) AS lo, percentile(value, 0.95) AS hi
+      |      FROM ev GROUP BY event_type),
+      |x AS (SELECT /*+ BROADCAST(b) */ event_type, greatest(lo, least(hi, value)) AS w
+      |      FROM ev JOIN b USING (event_type))
+      |SELECT event_type AS g, round(avg(w), 4) AS wmean, round(stddev_samp(w), 4) AS wstd,
       |  count(*) AS n
-      |FROM events e JOIN b ON e.event_type = b.event_type
-      |WHERE e.value IS NOT NULL
-      |GROUP BY e.event_type ORDER BY g""".stripMargin,
+      |FROM x GROUP BY event_type ORDER BY g""".stripMargin,
     """WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo,
       |  quantile_cont(value, 0.95) AS hi
       |  FROM events WHERE value IS NOT NULL GROUP BY event_type)
@@ -830,13 +900,19 @@ object Inventory {
       |ORDER BY event_id LIMIT 60""".stripMargin)
 
   q("JOIN-CROSS",
+    """SELECT a, b FROM (SELECT r_name AS a FROM region) r1
+      |CROSS JOIN (SELECT r_name AS b FROM region) r2 ORDER BY a, b""".stripMargin,
     "SELECT r1.r_name AS a, r2.r_name AS b FROM region r1 CROSS JOIN region r2 ORDER BY a, b")
 
   q("SET-INTERSECT-ALL",
+    """SELECT c_nationkey AS k FROM customer
+      |INTERSECT ALL SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin,
     """SELECT k FROM (SELECT c_nationkey AS k FROM customer INTERSECT ALL SELECT s_nationkey FROM supplier) t
       |ORDER BY k""".stripMargin)
 
   q("SET-EXCEPT-ALL",
+    """SELECT c_nationkey AS k FROM customer WHERE c_custkey <= 300
+      |EXCEPT ALL SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin,
     """SELECT k FROM (SELECT c_nationkey AS k FROM customer WHERE c_custkey <= 300
       |EXCEPT ALL SELECT s_nationkey FROM supplier) t ORDER BY k""".stripMargin)
 
@@ -947,12 +1023,10 @@ object Inventory {
       |        (PARTITION BY event_type ORDER BY ep, event_id) AS grp
       |      FROM f WHERE value > 100),
       |runs AS (SELECT event_type, grp,
-      |    min(ep) AS astart, max(ep) AS aend, count(*) AS npts
+      |    min(ep) AS astart0, max(ep) AS aend0, count(*) AS npts
       |  FROM g GROUP BY event_type, grp)
-      |SELECT event_type, astart,
-      |  aend, npts,
-      |  aend - astart AS dur
-      |FROM runs WHERE npts >= 2 AND aend - astart >= 600
+      |SELECT event_type, astart0 AS astart, aend0 AS aend, npts, aend0 - astart0 AS dur
+      |FROM runs WHERE npts >= 2 AND aend0 - astart0 >= 600
       |ORDER BY event_type, astart""".stripMargin,
     s"""WITH e AS (SELECT event_type, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep, value
       |           FROM $EV e WHERE user_id < 5),
@@ -980,24 +1054,24 @@ object Inventory {
   // plain doubles
   // (p-values need erf, which neither engine ships as a builtin — the
   // z-score IS the portable contract, and any |z| threshold is the
-  // significance test).
+  // significance test). Spark reads each variant through a global
+  // aggregate over its filtered rows, so an empty variant still yields one
+  // row of nulls, as the oracle's scalar subqueries do.
   q("EVENT-ABTEST",
-    """WITH u AS (SELECT user_id, user_id % 2 AS v,
-      |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+    """WITH u AS (SELECT user_id,
+      |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv, user_id % 2 AS v
       |  FROM events GROUP BY user_id),
-      |s AS (SELECT v, count(*) AS n, sum(conv) AS c FROM u GROUP BY v),
-      |ab AS (SELECT
-      |    (SELECT n FROM s WHERE v = 0) AS n_a, (SELECT c FROM s WHERE v = 0) AS c_a,
-      |    (SELECT n FROM s WHERE v = 1) AS n_b, (SELECT c FROM s WHERE v = 1) AS c_b)
+      |s AS (SELECT v, count(*) AS n, sum(conv) AS c FROM u GROUP BY v)
       |SELECT n_a, n_b, c_a AS conv_a, c_b AS conv_b,
       |  round(CAST(c_a AS DOUBLE) / n_a, 4) AS rate_a,
       |  round(CAST(c_b AS DOUBLE) / n_b, 4) AS rate_b,
-      |  round(CASE WHEN c_a + c_b = 0 OR c_a + c_b = n_a + n_b THEN 0.0
+      |  round(CASE WHEN c_a + c_b = 0 OR c_a + c_b = n_a + n_b THEN 0.0D
       |    ELSE (CAST(c_a AS DOUBLE) / n_a - CAST(c_b AS DOUBLE) / n_b) /
-      |      sqrt((CAST(c_a + c_b AS DOUBLE) / (n_a + n_b)) *
-      |           (1 - CAST(c_a + c_b AS DOUBLE) / (n_a + n_b)) *
-      |           (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)) END, 4) + 0.0 AS z
-      |FROM ab""".stripMargin,
+      |      sqrt((CAST(c_a AS DOUBLE) + CAST(c_b AS DOUBLE)) / (n_a + n_b) *
+      |           (1 - (CAST(c_a AS DOUBLE) + CAST(c_b AS DOUBLE)) / (n_a + n_b)) *
+      |           (1.0D / n_a + 1.0D / n_b)) END, 4) + 0.0D AS z
+      |FROM (SELECT max(n) AS n_a, max(c) AS c_a FROM s WHERE v = 0) a
+      |CROSS JOIN (SELECT max(n) AS n_b, max(c) AS c_b FROM s WHERE v = 1) b""".stripMargin,
     s"""WITH u AS (SELECT user_id, user_id % 2 AS v,
       |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       |  FROM $EV e GROUP BY user_id),
@@ -1022,29 +1096,29 @@ object Inventory {
   // reaches q·total, linearly interpolated inside the bucket; the +Inf
   // bucket clamps to the highest finite bound (PromQL's rule).
   q("TS-HIST-QUANTILE",
-    """WITH b AS (SELECT event_type,
-      |    CASE WHEN value <= 50 THEN 50.0 WHEN value <= 100 THEN 100.0
-      |         WHEN value <= 200 THEN 200.0 WHEN value <= 400 THEN 400.0
-      |         ELSE 999999.0 END AS le, count(*) AS cnt
-      |  FROM events GROUP BY 1, 2),
+    """WITH b AS (SELECT event_type, le, count(*) AS cnt FROM
+      |   (SELECT event_type,
+      |      CASE WHEN value <= 50 THEN 50.0D WHEN value <= 100 THEN 100.0D
+      |           WHEN value <= 200 THEN 200.0D WHEN value <= 400 THEN 400.0D
+      |           ELSE 999999.0D END AS le FROM events) e
+      |  GROUP BY event_type, le),
       |c AS (SELECT event_type, le, cnt,
       |    sum(cnt) OVER (PARTITION BY event_type ORDER BY le) AS cum,
       |    sum(cnt) OVER (PARTITION BY event_type) AS total
       |  FROM b),
-      |qs AS (SELECT CAST(0.50 AS DOUBLE) AS q UNION ALL
-      |       SELECT CAST(0.90 AS DOUBLE) UNION ALL SELECT CAST(0.99 AS DOUBLE)),
       |sel AS (SELECT c.*, qs.q, row_number() OVER
       |          (PARTITION BY event_type, q ORDER BY le) AS rn
-      |        FROM c CROSS JOIN qs WHERE cum >= q * total),
-      |p AS (SELECT event_type, q, le, cnt, cum, total,
-      |        CASE WHEN le = 50.0 THEN 0.0 WHEN le = 100.0 THEN 50.0
-      |             WHEN le = 200.0 THEN 100.0 WHEN le = 400.0 THEN 200.0
-      |             ELSE 400.0 END AS lo
-      |      FROM sel WHERE rn = 1)
+      |        FROM c CROSS JOIN VALUES (0.50D), (0.90D), (0.99D) AS qs(q)
+      |        WHERE cum >= q * total)
       |SELECT event_type, q,
-      |  round(CASE WHEN le = 999999.0 THEN 400.0
-      |        ELSE lo + (le - lo) * (q * total - (cum - cnt)) / cnt END, 4) AS est
-      |FROM p ORDER BY event_type, q""".stripMargin,
+      |  round(CASE WHEN le = 999999.0D THEN 400.0D
+      |        ELSE CASE WHEN le = 50.0D THEN 0.0D WHEN le = 100.0D THEN 50.0D
+      |             WHEN le = 200.0D THEN 100.0D WHEN le = 400.0D THEN 200.0D
+      |             ELSE 400.0D END
+      |          + (le - CASE WHEN le = 50.0D THEN 0.0D WHEN le = 100.0D THEN 50.0D
+      |             WHEN le = 200.0D THEN 100.0D WHEN le = 400.0D THEN 200.0D
+      |             ELSE 400.0D END) * (q * total - (cum - cnt)) / cnt END, 4) AS est
+      |FROM sel WHERE rn = 1 ORDER BY event_type, q""".stripMargin,
     s"""WITH b AS (SELECT event_type,
       |    CASE WHEN value <= 50 THEN 50.0 WHEN value <= 100 THEN 100.0
       |         WHEN value <= 200 THEN 200.0 WHEN value <= 400 THEN 400.0
@@ -1155,7 +1229,7 @@ object Inventory {
       |      lpad(CAST(vec_id AS STRING), 12, '0'), 5) AS arr
       |  FROM embeddings GROUP BY label)
       |SELECT label, CAST(s.item AS BIGINT) AS vec_id
-      |FROM t LATERAL VIEW explode(arr) e AS s
+      |FROM (SELECT label, explode(arr) AS s FROM t) e
       |ORDER BY label, vec_id""".stripMargin,
     """SELECT label, vec_id
       |FROM (SELECT label, vec_id,
@@ -1193,7 +1267,18 @@ object Inventory {
       |      FROM $EV e WHERE user_id < 20) t
       |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)
 
+  // Spark runs the decorrelated plan, pruned first: the 50 keys (limit
+  // first) are broadcast as a semi join into lineitem BEFORE aggregating,
+  // and a left join keeps orders without lineitems. The oracle runs the
+  // correlated subquery.
   q("SUB-SCALAR",
+    """WITH top AS (SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 50),
+      |agg AS (SELECT /*+ BROADCAST(t) */ l_orderkey,
+      |          round(CAST(max(l_quantity) AS DOUBLE), 2) AS maxq
+      |        FROM lineitem LEFT SEMI JOIN (SELECT o_orderkey AS k FROM top) t ON l_orderkey = k
+      |        GROUP BY l_orderkey)
+      |SELECT o_orderkey, maxq FROM top LEFT JOIN agg ON o_orderkey = l_orderkey
+      |ORDER BY o_orderkey""".stripMargin,
     """SELECT o_orderkey,
       |  (SELECT round(CAST(max(l_quantity) AS DOUBLE), 2) FROM lineitem WHERE l_orderkey = o_orderkey) AS maxq
       |FROM orders ORDER BY o_orderkey LIMIT 50""".stripMargin)
@@ -1263,8 +1348,16 @@ object Inventory {
 
   // LEFT (not comma/inner) lateral: engines disagree on whether an inner
   // lateral keeps the NULL row of an empty-group aggregate subquery —
-  // LEFT ... ON true pins the row-preserving semantics in both
+  // LEFT ... ON true pins the row-preserving semantics in both; Spark runs
+  // SUB-SCALAR's decorrelated, pruned-first plan
   q("JOIN-LATERAL",
+    """WITH top AS (SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 50),
+      |agg AS (SELECT /*+ BROADCAST(t) */ l_orderkey,
+      |          round(CAST(max(l_quantity) AS DOUBLE), 2) AS maxq
+      |        FROM lineitem LEFT SEMI JOIN (SELECT o_orderkey AS k FROM top) t ON l_orderkey = k
+      |        GROUP BY l_orderkey)
+      |SELECT o_orderkey, maxq FROM top LEFT JOIN agg ON o_orderkey = l_orderkey
+      |ORDER BY o_orderkey""".stripMargin,
     """SELECT o_orderkey, t.maxq
       |FROM orders LEFT JOIN LATERAL (SELECT round(CAST(max(l_quantity) AS DOUBLE), 2) AS maxq
       |                               FROM lineitem WHERE l_orderkey = o_orderkey) t ON true
@@ -1283,7 +1376,8 @@ object Inventory {
       |FROM lineitem ORDER BY l_orderkey, l_linenumber, price LIMIT 50""".stripMargin)
 
   q("AGG-STRING",
-    """SELECT c_nationkey AS k, listagg(CAST(c_custkey AS STRING), ',') WITHIN GROUP (ORDER BY c_custkey) AS ids
+    """SELECT c_nationkey AS k,
+      |  concat_ws(',', transform(sort_array(collect_list(c_custkey)), x -> CAST(x AS STRING))) AS ids
       |FROM customer WHERE c_custkey <= 40 GROUP BY c_nationkey ORDER BY k""".stripMargin,
     """SELECT c_nationkey AS k, string_agg(CAST(c_custkey AS VARCHAR), ',' ORDER BY c_custkey) AS ids
       |FROM customer WHERE c_custkey <= 40 GROUP BY c_nationkey ORDER BY k""".stripMargin)
@@ -1394,6 +1488,11 @@ object Inventory {
   // engines, so the contract shape is count + rank with a value tie-break
   q("AGG-MODE",
     """SELECT st, pri AS mode_pri, n FROM (
+      |  SELECT st, pri, n, row_number() OVER (PARTITION BY st ORDER BY n DESC, pri) AS rn
+      |  FROM (SELECT o_orderstatus AS st, o_orderpriority AS pri, count(*) AS n
+      |        FROM orders GROUP BY o_orderstatus, o_orderpriority) c) t
+      |WHERE rn = 1 ORDER BY st""".stripMargin,
+    """SELECT st, pri AS mode_pri, n FROM (
       |  SELECT o_orderstatus AS st, o_orderpriority AS pri, count(*) AS n,
       |    row_number() OVER (PARTITION BY o_orderstatus
       |                       ORDER BY count(*) DESC, o_orderpriority) AS rn
@@ -1404,6 +1503,12 @@ object Inventory {
   // (heavy hitters) — partitioned window over the tiny (group, value)
   // aggregate, never over the raw rows
   q("AGG-TOPK-FREQ",
+    """SELECT event_type, rk, user_id, cnt FROM (
+      |  SELECT event_type, user_id, cnt,
+      |    row_number() OVER (PARTITION BY event_type ORDER BY cnt DESC, user_id) AS rk
+      |  FROM (SELECT event_type, user_id, count(*) AS cnt
+      |        FROM events GROUP BY event_type, user_id) c) t
+      |WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin,
     """SELECT event_type, rk, user_id, cnt FROM (
       |  SELECT event_type, user_id, count(*) AS cnt,
       |    row_number() OVER (PARTITION BY event_type
@@ -1417,12 +1522,12 @@ object Inventory {
   // Integer-µs gap arithmetic so both engines compare exactly.
   q("WIN-SESSIONIZE",
     """WITH x AS (
-      |  SELECT user_id, event_id, ts,
-      |    CASE WHEN unix_micros(ts) - lag(unix_micros(ts))
-      |           OVER (PARTITION BY user_id ORDER BY ts, event_id) > 21600000000
-      |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+      |  SELECT user_id, ts, event_id,
+      |    CASE WHEN lag(unix_micros(ts)) OVER w IS NULL
+      |           OR unix_micros(ts) - lag(unix_micros(ts)) OVER w > 21600000000
       |         THEN 1 ELSE 0 END AS brk
-      |  FROM events),
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
       |sess AS (
       |  SELECT user_id, ts,
       |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1456,10 +1561,9 @@ object Inventory {
   q("AGG-UNPIVOT",
     """SELECT metric, count(*) AS c,
       |  round(CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE), 2) AS sv
-      |FROM (
-      |  SELECT stack(4, 'disc', l_discount, 'price', l_extendedprice,
-      |                  'qty', l_quantity, 'tax', l_tax) AS (metric, v)
-      |  FROM lineitem) t
+      |FROM (SELECT l_discount AS disc, l_extendedprice AS price, l_quantity AS qty,
+      |        l_tax AS tax FROM lineitem)
+      |UNPIVOT INCLUDE NULLS (v FOR metric IN (disc, price, qty, tax))
       |GROUP BY metric ORDER BY metric""".stripMargin,
     """SELECT metric, count(*) AS c,
       |  round(CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE), 2) AS sv
@@ -1530,16 +1634,15 @@ object Inventory {
   q("EVENT-FUNNEL",
     """WITH c AS (SELECT user_id, min(ts) AS first_click
       |           FROM events WHERE event_type = 'click' GROUP BY user_id),
-      |conv AS (SELECT c.user_id
-      |         FROM c JOIN events p
-      |           ON p.user_id = c.user_id AND p.event_type = 'purchase'
-      |          AND CAST(p.ts AS DOUBLE) >= CAST(c.first_click AS DOUBLE)
-      |          AND CAST(p.ts AS DOUBLE) <= CAST(c.first_click AS DOUBLE) + 86400
-      |         GROUP BY c.user_id)
-      |SELECT (SELECT count(*) FROM c) AS n_clickers,
-      |       (SELECT count(*) FROM conv) AS n_converted,
-      |       round(CAST((SELECT count(*) FROM conv) AS DOUBLE)
-      |             / CAST((SELECT count(*) FROM c) AS DOUBLE), 4) AS conv_rate""".stripMargin,
+      |conv AS (SELECT DISTINCT user_id
+      |         FROM c JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
+      |           USING (user_id)
+      |         WHERE CAST(ts AS DOUBLE) >= CAST(first_click AS DOUBLE)
+      |           AND CAST(ts AS DOUBLE) <= CAST(first_click AS DOUBLE) + 86400)
+      |SELECT n_clickers, n_converted,
+      |  round(CAST(n_converted AS DOUBLE) / CAST(n_clickers AS DOUBLE), 4) AS conv_rate
+      |FROM (SELECT count(*) AS n_clickers FROM c)
+      |CROSS JOIN (SELECT count(*) AS n_converted FROM conv)""".stripMargin,
     s"""WITH c AS (SELECT user_id, min(ts) AS first_click
       |           FROM $EV events WHERE event_type = 'click' GROUP BY user_id),
       |conv AS (SELECT c.user_id
@@ -1563,9 +1666,9 @@ object Inventory {
       |a AS (SELECT DISTINCT user_id,
       |        CAST(floor(CAST(ts AS DOUBLE) / 604800) AS BIGINT) AS wk FROM events)
       |SELECT cohort, wk - cohort AS week_n, count(*) AS active
-      |FROM f JOIN a ON f.user_id = a.user_id
+      |FROM f JOIN a USING (user_id)
       |WHERE wk - cohort <= 4
-      |GROUP BY cohort, wk ORDER BY cohort, week_n""".stripMargin,
+      |GROUP BY cohort, wk - cohort ORDER BY cohort, week_n""".stripMargin,
     s"""WITH f AS (SELECT user_id,
       |             CAST(floor(epoch(min(ts)) / 604800) AS BIGINT) AS cohort
       |           FROM $EV events GROUP BY user_id),
@@ -1628,15 +1731,16 @@ object Inventory {
   // s_1 = (x_1, 0); double literals pinned (bare 0.3 is DECIMAL in DuckDB
   // and silently truncates the fold).
   q("TS-HOLT",
-    """SELECT event_type, size(vals) AS n,
-      |  round(hb[0], 4) AS level, round(hb[1], 4) AS trend
+    """SELECT event_type, n, round(element_at(hb, 1), 4) AS level,
+      |  round(element_at(hb, 2), 4) AS trend
       |FROM (
-      |  SELECT event_type, vals,
+      |  SELECT event_type, size(vals) AS n,
       |    aggregate(slice(vals, 2, size(vals) - 1),
-      |              array(element_at(vals, 1), CAST(0.0 AS DOUBLE)),
+      |              array(element_at(vals, 1), 0.0D),
       |              (acc, x) -> array(
-      |                0.3D * x + 0.7D * (acc[0] + acc[1]),
-      |                0.2D * ((0.3D * x + 0.7D * (acc[0] + acc[1])) - acc[0]) + 0.8D * acc[1])) AS hb
+      |                0.3D * x + 0.7D * (element_at(acc, 1) + element_at(acc, 2)),
+      |                0.2D * ((0.3D * x + 0.7D * (element_at(acc, 1) + element_at(acc, 2)))
+      |                  - element_at(acc, 1)) + 0.8D * element_at(acc, 2))) AS hb
       |  FROM (
       |    SELECT event_type,
       |      transform(array_sort(collect_list(struct(ts, event_id, value))),
@@ -1661,18 +1765,22 @@ object Inventory {
   // DuckDB's list_reduce needs acc type == element type: values pad to
   // 6-lists (x[1] = value), the same trick as TS-HOLT's pairs.
   q("TS-HOLT-WINTERS",
-    """SELECT event_type, size(vals) AS n,
-      |  round(hb[0], 4) AS level, round(hb[1], 4) AS trend,
-      |  round(hb[0] + hb[1] + hb[2], 4) AS forecast
+    """SELECT event_type, n, round(element_at(hb, 1), 4) AS level,
+      |  round(element_at(hb, 2), 4) AS trend,
+      |  round(element_at(hb, 1) + element_at(hb, 2) + element_at(hb, 3), 4) AS forecast
       |FROM (
-      |  SELECT event_type, vals,
+      |  SELECT event_type, size(vals) AS n,
       |    aggregate(slice(vals, 2, size(vals) - 1),
-      |              array(element_at(vals, 1), 0.0D, 0.0D, 0.0D, 0.0D, 0.0D),
-      |              (acc, x) -> array(
-      |                0.3D * (x - acc[2]) + 0.7D * (acc[0] + acc[1]),
-      |                0.2D * ((0.3D * (x - acc[2]) + 0.7D * (acc[0] + acc[1])) - acc[0]) + 0.8D * acc[1],
-      |                acc[3], acc[4], acc[5],
-      |                0.3D * (x - (0.3D * (x - acc[2]) + 0.7D * (acc[0] + acc[1]))) + 0.7D * acc[2])) AS hb
+      |      array(element_at(vals, 1), 0.0D, 0.0D, 0.0D, 0.0D, 0.0D),
+      |      (acc, x) -> array(
+      |        0.3D * (x - element_at(acc, 3)) + 0.7D * (element_at(acc, 1) + element_at(acc, 2)),
+      |        0.2D * ((0.3D * (x - element_at(acc, 3))
+      |          + 0.7D * (element_at(acc, 1) + element_at(acc, 2))) - element_at(acc, 1))
+      |          + 0.8D * element_at(acc, 2),
+      |        element_at(acc, 4), element_at(acc, 5), element_at(acc, 6),
+      |        0.3D * (x - (0.3D * (x - element_at(acc, 3))
+      |          + 0.7D * (element_at(acc, 1) + element_at(acc, 2))))
+      |          + 0.7D * element_at(acc, 3))) AS hb
       |  FROM (
       |    SELECT event_type,
       |      transform(array_sort(collect_list(struct(ts, event_id, value))),
@@ -1768,15 +1876,14 @@ object Inventory {
   // column (testdata has no URL field; the construction mirrors how
   // PARSE-COMMAKEYS builds metric names from columns)
   q("FN-URL",
-    """WITH u AS (SELECT event_id,
-      |    concat('https://', lower(event_type), '.example.com/u/',
-      |           CAST(user_id AS STRING), '/p?ev=',
-      |           CAST(event_id AS STRING), '&x=1') AS url
-      |  FROM events)
-      |SELECT event_id, parse_url(url, 'HOST') AS host,
-      |  parse_url(url, 'PATH') AS path,
-      |  CAST(parse_url(url, 'QUERY', 'ev') AS BIGINT) AS ev
-      |FROM u ORDER BY event_id LIMIT 50""".stripMargin,
+    """SELECT event_id,
+      |  parse_url(concat('https://', lower(event_type), '.example.com/u/',
+      |    CAST(user_id AS STRING), '/p?ev=', CAST(event_id AS STRING), '&x=1'), 'HOST') AS host,
+      |  parse_url(concat('https://', lower(event_type), '.example.com/u/',
+      |    CAST(user_id AS STRING), '/p?ev=', CAST(event_id AS STRING), '&x=1'), 'PATH') AS path,
+      |  CAST(parse_url(concat('https://', lower(event_type), '.example.com/u/',
+      |    CAST(user_id AS STRING), '/p?ev=', CAST(event_id AS STRING), '&x=1'), 'QUERY', 'ev') AS BIGINT) AS ev
+      |FROM events ORDER BY event_id LIMIT 50""".stripMargin,
     """WITH u AS (SELECT event_id,
       |    concat('https://', lower(event_type), '.example.com/u/',
       |           CAST(user_id AS VARCHAR), '/p?ev=',
@@ -1793,7 +1900,7 @@ object Inventory {
   // per-series, never global
   q("WIN-ZSCORE",
     """WITH s AS (
-      |  SELECT event_type, event_id, value,
+      |  SELECT event_id, value,
       |    avg(value) OVER w AS mu,
       |    stddev_samp(value) OVER w AS sigma,
       |    count(*) OVER w AS nprev
@@ -1822,8 +1929,8 @@ object Inventory {
   q("TEXT-CHUNK",
     """SELECT doc_id, st, least(50, size(toks) - st + 1) AS n_tok,
       |  md5(concat_ws(' ', slice(toks, st, 50))) AS chunk_md5
-      |FROM (SELECT doc_id, split(text, ' ') AS toks FROM documents) d
-      |LATERAL VIEW explode(sequence(1, size(toks), 40)) s AS st
+      |FROM (SELECT doc_id, toks, explode(sequence(1, size(toks), 40)) AS st
+      |      FROM (SELECT doc_id, split(text, ' ') AS toks FROM documents) d) s
       |ORDER BY doc_id, st LIMIT 200""".stripMargin,
     """SELECT doc_id, st, least(50, len(t) - st + 1) AS n_tok,
       |  md5(array_to_string(t[st:st+49], ' ')) AS chunk_md5
@@ -1863,10 +1970,9 @@ object Inventory {
   // arithmetic in both engines — the TS-EMA pattern); ln, not log2,
   // follows FN-MATH's proven cross-engine libm parity.
   q("TEXT-ENTROPY",
-    """WITH ch AS (
-      |  SELECT doc_id, c FROM (SELECT doc_id, split(text, '') AS cs FROM documents) t
-      |  LATERAL VIEW explode(cs) e AS c),
-      |cnt AS (SELECT doc_id, c, count(*) AS k FROM ch GROUP BY doc_id, c),
+    """WITH cnt AS (SELECT doc_id, c, count(*) AS k FROM
+      |  (SELECT doc_id, explode(split(text, '')) AS c FROM documents) ch
+      |  GROUP BY doc_id, c),
       |v AS (SELECT doc_id, transform(array_sort(collect_list(struct(c, k))), s -> s.k) AS ks,
       |      sum(k) AS n FROM cnt GROUP BY doc_id)
       |SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
@@ -1952,11 +2058,10 @@ object Inventory {
   // arithmetic is exact-int → IEEE division, so both engines order on
   // bit-identical doubles (the SAMPLE-HASH determinism pattern).
   q("SAMPLE-WEIGHTED",
-    """WITH h AS (SELECT doc_id, n_chars,
-      |  graft_poly_hash(CAST(doc_id AS STRING)) % 1000003 AS hm FROM documents)
-      |SELECT doc_id, n_chars,
-      |  round(CAST(hm AS DOUBLE) / 1000003 / n_chars * 1000000, 4) AS xi
-      |FROM h ORDER BY CAST(hm AS DOUBLE) / 1000003 / n_chars, doc_id LIMIT 10""".stripMargin,
+    """SELECT doc_id, n_chars, round(xi_raw * 1000000, 4) AS xi FROM (
+      |  SELECT doc_id, n_chars,
+      |    CAST(graft_poly_hash(CAST(doc_id AS STRING)) % 1000003 AS DOUBLE) / 1000003 / n_chars AS xi_raw
+      |  FROM documents ORDER BY xi_raw, doc_id LIMIT 10) h""".stripMargin,
     """WITH h AS (SELECT doc_id, n_chars,
       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
       |    list_transform(generate_series(1, CAST(length(CAST(doc_id AS VARCHAR)) AS INT)),
@@ -1996,8 +2101,8 @@ object Inventory {
       |    graft_topk_by(l_extendedprice,
       |      concat(CAST(l_orderkey AS STRING), '#', CAST(l_linenumber AS STRING)), 3) AS arr
       |  FROM lineitem GROUP BY l_returnflag)
-      |SELECT l_returnflag, CAST(pos + 1 AS INT) AS rn, s.ord AS price, s.item AS item
-      |FROM t LATERAL VIEW posexplode(arr) p AS pos, s
+      |SELECT l_returnflag, CAST(pos + 1 AS INT) AS rn, col.ord AS price, col.item AS item
+      |FROM (SELECT l_returnflag, posexplode(arr) FROM t) p
       |ORDER BY l_returnflag, rn""".stripMargin,
     """SELECT l_returnflag, CAST(rn AS INT) AS rn, price, item FROM (
       |  SELECT l_returnflag, l_extendedprice AS price,
@@ -2013,11 +2118,12 @@ object Inventory {
   q("EVENT-PATH",
     """WITH p AS (SELECT user_id, event_type,
       |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-      |  FROM events)
-      |SELECT event_type, nxt, count(*) AS n,
-      |  round(CAST(count(*) AS DOUBLE) / sum(count(*)) OVER (PARTITION BY event_type), 4) AS p_next
-      |FROM p WHERE nxt IS NOT NULL GROUP BY event_type, nxt
-      |ORDER BY n DESC, event_type, nxt LIMIT 15""".stripMargin,
+      |  FROM events),
+      |c AS (SELECT event_type, nxt, count(*) AS n
+      |  FROM p WHERE nxt IS NOT NULL GROUP BY event_type, nxt)
+      |SELECT event_type, nxt, n,
+      |  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY event_type), 4) AS p_next
+      |FROM c ORDER BY n DESC, event_type, nxt LIMIT 15""".stripMargin,
     s"""WITH p AS (SELECT user_id, event_type,
       |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
       |  FROM $EV e)
@@ -2290,9 +2396,9 @@ object Inventory {
     """WITH pts AS (SELECT user_id, CAST(ts AS BIGINT) AS et, event_id, value
       |  FROM events WHERE user_id < 20),
       |s AS (SELECT user_id, min(et) AS mn, max(et) AS mx FROM pts GROUP BY user_id),
-      |b AS (SELECT p.user_id, p.et, p.event_id, p.value,
-      |        least(CAST(floor((p.et - s.mn) * 12.0 / (s.mx - s.mn + 1)) AS INT), 11) AS bk
-      |      FROM pts p JOIN s ON p.user_id = s.user_id),
+      |b AS (SELECT user_id, et, event_id, value,
+      |        least(CAST(floor((et - mn) * 12.0D / (mx - mn + 1)) AS INT), 11) AS bk
+      |      FROM pts JOIN s USING (user_id)),
       |m AS (SELECT user_id, bk, round(avg(et), 6) AS bx, round(avg(value), 6) AS by
       |      FROM b GROUP BY user_id, bk),
       |n AS (SELECT user_id, bk,
@@ -2301,12 +2407,12 @@ object Inventory {
       |        lead(bx) OVER (PARTITION BY user_id ORDER BY bk) AS cx,
       |        lead(by) OVER (PARTITION BY user_id ORDER BY bk) AS cy
       |      FROM m),
-      |a AS (SELECT b.user_id, b.bk, b.et, b.event_id, b.value,
-      |        CASE WHEN n.ax IS NULL THEN CAST(b.et AS DOUBLE)
-      |             WHEN n.cx IS NULL THEN -CAST(b.et AS DOUBLE)
-      |             ELSE -abs((n.ax - n.cx) * (b.value - n.ay) - (n.ax - b.et) * (n.cy - n.ay)) END AS sel
-      |      FROM b JOIN n ON b.user_id = n.user_id AND b.bk = n.bk),
-      |r AS (SELECT user_id, bk, et, value,
+      |a AS (SELECT *,
+      |        CASE WHEN ax IS NULL THEN CAST(et AS DOUBLE)
+      |             WHEN cx IS NULL THEN -CAST(et AS DOUBLE)
+      |             ELSE -abs((ax - cx) * (value - ay) - (ax - et) * (cy - ay)) END AS sel
+      |      FROM b JOIN n USING (user_id, bk)),
+      |r AS (SELECT *,
       |        row_number() OVER (PARTITION BY user_id, bk ORDER BY sel, et, event_id) AS rn
       |      FROM a)
       |SELECT user_id, bk, et, round(value, 2) AS v
@@ -2415,17 +2521,14 @@ object Inventory {
   // integer, far outside the rounding band).
   q("AGG-EXPHIST",
     """WITH b AS (SELECT event_type,
-      |    CAST(floor(round(ln(CAST(round(value * 100) AS BIGINT) * 1.0) / ln(2.0), 9)) AS INT) AS bucket
+      |    CAST(floor(round(ln(CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE)) / ln(2.0D), 9)) AS INT) AS bucket
       |  FROM events WHERE value > 0),
-      |h AS (SELECT event_type, bucket, count(*) AS cnt FROM b GROUP BY event_type, bucket),
-      |c AS (SELECT event_type, bucket, cnt,
-      |        sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket) AS cum,
-      |        sum(cnt) OVER (PARTITION BY event_type) AS tot
-      |      FROM h)
+      |h AS (SELECT event_type, bucket, count(*) AS cnt FROM b GROUP BY event_type, bucket)
       |SELECT event_type, bucket, cnt,
-      |  round(cum * 1.0 / tot, 4) AS cum_frac,
-      |  round(power(2.0, bucket + 1) / 100.0, 4) AS ub
-      |FROM c ORDER BY event_type, bucket""".stripMargin,
+      |  round(sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket) * 1.0D
+      |    / sum(cnt) OVER (PARTITION BY event_type), 4) AS cum_frac,
+      |  round(power(2.0D, bucket + 1) / 100.0D, 4) AS ub
+      |FROM h ORDER BY event_type, bucket""".stripMargin,
     s"""WITH b AS (SELECT event_type,
       |    CAST(floor(round(ln(CAST(round(value * 100) AS BIGINT) * 1.0) / ln(2.0), 9)) AS INT) AS bucket
       |  FROM $EV e WHERE value > 0),
@@ -2444,20 +2547,20 @@ object Inventory {
   // cascade is what makes 100 TB of raw metrics storable as rollups.
   q("TS-ROLLUP-CASCADE",
     """WITH pts AS (SELECT event_type, CAST(ts AS BIGINT) AS et, value FROM events),
-      |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
+      |h AS (SELECT event_type, et - (et % 3600) AS hb,
       |        sum(value) AS sv, count(*) AS c, min(value) AS mn, max(value) AS mx
-      |      FROM pts GROUP BY event_type, (et - (et % 3600))),
-      |dh AS (SELECT event_type, (hb - (hb % 86400)) AS db,
+      |      FROM pts GROUP BY event_type, et - (et % 3600)),
+      |dh AS (SELECT event_type, hb - (hb % 86400) AS db,
       |         sum(sv) AS sv, CAST(sum(c) AS BIGINT) AS c, min(mn) AS mn, max(mx) AS mx
-      |       FROM h GROUP BY event_type, (hb - (hb % 86400))),
-      |dr AS (SELECT event_type, (et - (et % 86400)) AS db,
-      |         sum(value) AS sv, count(*) AS c, min(value) AS mn, max(value) AS mx
-      |       FROM pts GROUP BY event_type, (et - (et % 86400)))
-      |SELECT dh.event_type, dh.db, round(dh.sv, 4) AS day_sum, dh.c AS day_cnt,
-      |  round(dh.mn, 4) AS day_min, round(dh.mx, 4) AS day_max,
-      |  (dh.c = dr.c AND abs(dh.sv - dr.sv) < 1e-6 AND dh.mn = dr.mn AND dh.mx = dr.mx) AS rollup_equal
-      |FROM dh JOIN dr ON dh.event_type = dr.event_type AND dh.db = dr.db
-      |ORDER BY dh.event_type, dh.db""".stripMargin,
+      |       FROM h GROUP BY event_type, hb - (hb % 86400)),
+      |dr AS (SELECT event_type AS r_et, et - (et % 86400) AS r_db,
+      |         sum(value) AS r_sv, count(*) AS r_c, min(value) AS r_mn, max(value) AS r_mx
+      |       FROM pts GROUP BY event_type, et - (et % 86400))
+      |SELECT event_type, db, round(sv, 4) AS day_sum, c AS day_cnt,
+      |  round(mn, 4) AS day_min, round(mx, 4) AS day_max,
+      |  (c = r_c AND abs(sv - r_sv) < 1e-6 AND mn = r_mn AND mx = r_mx) AS rollup_equal
+      |FROM dh JOIN dr ON event_type = r_et AND db = r_db
+      |ORDER BY event_type, db""".stripMargin,
     s"""WITH pts AS (SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS et, value FROM $EV e),
       |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
       |        sum(value) AS sv, count(*) AS c, min(value) AS mn, max(value) AS mx
@@ -2482,18 +2585,18 @@ object Inventory {
   // one double division each: deterministic cross-engine.
   q("TS-BURN-RATE",
     """WITH pts AS (SELECT event_type, CAST(ts AS BIGINT) AS et, value FROM events),
-      |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
+      |h AS (SELECT event_type, et - (et % 3600) AS hb,
       |        count(*) AS n, count(CASE WHEN value > 400 THEN 1 END) AS err
-      |      FROM pts GROUP BY event_type, (et - (et % 3600))),
-      |l AS (SELECT event_type, (et - (et % 21600)) AS lb,
+      |      FROM pts GROUP BY event_type, et - (et % 3600)),
+      |l AS (SELECT event_type AS l_et, et - (et % 21600) AS lb,
       |        count(*) AS n6, count(CASE WHEN value > 400 THEN 1 END) AS err6
-      |      FROM pts GROUP BY event_type, (et - (et % 21600)))
-      |SELECT h.event_type, h.hb,
-      |  round(err * 1.0 / n / 0.02, 4) AS burn_short,
-      |  round(err6 * 1.0 / n6 / 0.02, 4) AS burn_long,
-      |  ((err * 1.0 / n / 0.02) > 1.0 AND (err6 * 1.0 / n6 / 0.02) > 1.0) AS alert
-      |FROM h JOIN l ON h.event_type = l.event_type AND (h.hb - (h.hb % 21600)) = l.lb
-      |ORDER BY h.event_type, h.hb""".stripMargin,
+      |      FROM pts GROUP BY event_type, et - (et % 21600))
+      |SELECT event_type, hb,
+      |  round(err * 1.0D / n / 0.02D, 4) AS burn_short,
+      |  round(err6 * 1.0D / n6 / 0.02D, 4) AS burn_long,
+      |  (err * 1.0D / n / 0.02D > 1.0D AND err6 * 1.0D / n6 / 0.02D > 1.0D) AS alert
+      |FROM h JOIN l ON event_type = l_et AND hb - (hb % 21600) = lb
+      |ORDER BY event_type, hb""".stripMargin,
     s"""WITH pts AS (SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS et, value FROM $EV e),
       |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
       |        count(*) AS n, count(CASE WHEN value > 400 THEN 1 END) AS err
@@ -2514,14 +2617,14 @@ object Inventory {
   // corr() per pair — corr is scale-invariant so engine factors cancel
   q("TS-CORR-MATRIX",
     """WITH pts AS (SELECT event_type, CAST(ts AS BIGINT) AS et, value FROM events),
-      |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
+      |h AS (SELECT event_type, et - (et % 3600) AS hb,
       |        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS y
-      |      FROM pts GROUP BY event_type, (et - (et % 3600)))
-      |SELECT a.event_type AS t1, b.event_type AS t2,
-      |  round(corr(a.y, b.y), 4) + 0.0 AS r, count(*) AS n
-      |FROM h a JOIN h b ON a.hb = b.hb AND a.event_type < b.event_type
-      |GROUP BY a.event_type, b.event_type
-      |ORDER BY t1, t2""".stripMargin,
+      |      FROM pts GROUP BY event_type, et - (et % 3600)),
+      |a AS (SELECT event_type AS t1, hb, y AS ya FROM h),
+      |b AS (SELECT event_type AS t2, hb AS hb2, y AS yb FROM h)
+      |SELECT t1, t2, round(corr(ya, yb), 4) + 0.0D AS r, count(*) AS n
+      |FROM a JOIN b ON hb = hb2 AND t1 < t2
+      |GROUP BY t1, t2 ORDER BY t1, t2""".stripMargin,
     s"""WITH pts AS (SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS et, value FROM $EV e),
       |h AS (SELECT event_type, (et - (et % 3600)) AS hb,
       |        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS y
@@ -2603,12 +2706,12 @@ object Inventory {
   q("EVENT-ATTRIB-LINEAR",
     """WITH e AS (SELECT event_id, user_id, event_type, CAST(ts AS BIGINT) AS et,
       |    CAST(get_json_object(props, '$.k') AS BIGINT) % 4 AS ch FROM events),
-      |p AS (SELECT event_id AS pid, user_id, et AS pt FROM e WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, et AS ct, ch FROM e WHERE event_type = 'click'),
-      |j AS (SELECT pid, ch, count(*) OVER (PARTITION BY pid) AS n
-      |      FROM p JOIN c ON p.user_id = c.user_id AND c.ct > p.pt - 86400 AND c.ct <= p.pt)
-      |SELECT ch AS channel, round(sum(1.0 / n), 4) AS credit, count(*) AS touches
-      |FROM j GROUP BY ch ORDER BY ch""".stripMargin,
+      |p AS (SELECT event_id AS pid, user_id AS pu, et AS pt FROM e WHERE event_type = 'purchase'),
+      |c AS (SELECT user_id AS cu, et AS ct, ch FROM e WHERE event_type = 'click'),
+      |j AS (SELECT *, count(*) OVER (PARTITION BY pid) AS n
+      |      FROM p JOIN c ON pu = cu AND ct > pt - 86400 AND ct <= pt)
+      |SELECT ch AS channel, round(sum(1.0D / n), 4) AS credit, count(*) AS touches
+      |FROM j GROUP BY ch ORDER BY channel""".stripMargin,
     s"""WITH e AS (SELECT event_id, user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS et,
       |    CAST(json_extract(props, '$$.k') AS BIGINT) % 4 AS ch FROM $EV ev),
       |p AS (SELECT event_id AS pid, user_id, et AS pt FROM e WHERE event_type = 'purchase'),
@@ -2649,11 +2752,10 @@ object Inventory {
   // division at the end. One series-partitioned lead + one aggregate.
   q("TS-TWA",
     """WITH pts AS (SELECT event_type, CAST(ts AS BIGINT) AS et, event_id, value FROM events),
-      |d AS (SELECT event_type, et, value,
-      |        lead(et) OVER (PARTITION BY event_type ORDER BY et, event_id) AS nxt
+      |d AS (SELECT *, lead(et) OVER (PARTITION BY event_type ORDER BY et, event_id) AS nxt
       |      FROM pts),
-      |t AS (SELECT event_type, (et - (et % 3600)) AS hb,
-      |        CAST(value AS DECIMAL(18,2)) * (nxt - et) AS wv, (nxt - et) AS dt
+      |t AS (SELECT event_type, et - (et % 3600) AS hb,
+      |        CAST(value AS DECIMAL(18,2)) * (nxt - et) AS wv, nxt - et AS dt
       |      FROM d WHERE nxt IS NOT NULL AND nxt > et)
       |SELECT event_type, hb,
       |  round(CAST(sum(wv) AS DOUBLE) / CAST(sum(dt) AS BIGINT), 4) AS twa
@@ -2737,20 +2839,17 @@ object Inventory {
   // alert shape; all-integer arithmetic, exact both engines
   q("TS-GAPS",
     """WITH obs AS (SELECT DISTINCT event_type,
-      |    (CAST(ts AS BIGINT) - (CAST(ts AS BIGINT) % 3600)) AS hb FROM events WHERE user_id < 40),
-      |gs AS (SELECT explode(sequence(0, 200)) AS h),
+      |    CAST(ts AS BIGINT) - (CAST(ts AS BIGINT) % 3600) AS hb FROM events WHERE user_id < 40),
       |s AS (SELECT event_type, min(hb) AS mn, max(hb) AS mx FROM obs GROUP BY event_type),
-      |grid AS (SELECT event_type, (mn + h * 3600) AS hb
-      |         FROM s, gs WHERE mn + h * 3600 <= mx),
-      |miss AS (SELECT g.event_type, g.hb FROM grid g
-      |         LEFT JOIN obs o ON o.event_type = g.event_type AND o.hb = g.hb
-      |         WHERE o.hb IS NULL),
-      |isl AS (SELECT event_type, hb,
-      |          hb - 3600 * row_number() OVER (PARTITION BY event_type ORDER BY hb) AS grp
+      |grid AS (SELECT g_et, mn + h * 3600 AS g_hb, mx
+      |         FROM (SELECT event_type AS g_et, explode(sequence(0, 200)) AS h, mn, mx FROM s) e
+      |         WHERE mn + h * 3600 <= mx),
+      |miss AS (SELECT * FROM grid LEFT ANTI JOIN obs ON g_et = event_type AND g_hb = hb),
+      |isl AS (SELECT *, g_hb - 3600 * row_number() OVER (PARTITION BY g_et ORDER BY g_hb) AS grp
       |        FROM miss)
-      |SELECT event_type, min(hb) AS gap_start, max(hb) AS gap_end,
+      |SELECT g_et AS event_type, min(g_hb) AS gap_start, max(g_hb) AS gap_end,
       |  count(*) AS n_missing
-      |FROM isl GROUP BY event_type, grp
+      |FROM isl GROUP BY g_et, grp
       |ORDER BY event_type, gap_start LIMIT 300""".stripMargin,
     s"""WITH obs AS (SELECT DISTINCT event_type,
       |    (CAST(floor(epoch(ts)) AS BIGINT) - (CAST(floor(epoch(ts)) AS BIGINT) % 3600)) AS hb FROM $EV e WHERE user_id < 40),
@@ -2858,16 +2957,16 @@ object Inventory {
   // dashboard triple; WAU via a day-grid × day-band join of DAY-DISTINCT
   // user rows (bounded 7× fan-out), all-integer counts + one division
   q("EVENT-STICKINESS",
-    """WITH pts AS (SELECT user_id, (CAST(ts AS BIGINT) - (CAST(ts AS BIGINT) % 86400)) AS db FROM events),
+    """WITH pts AS (SELECT user_id,
+      |    CAST(ts AS BIGINT) - (CAST(ts AS BIGINT) % 86400) AS db FROM events),
       |dau AS (SELECT db, count(DISTINCT user_id) AS dau FROM pts GROUP BY db),
-      |wau AS (SELECT d.db, count(DISTINCT p.user_id) AS wau
-      |        FROM (SELECT DISTINCT db FROM pts) d
-      |        JOIN pts p ON p.db > d.db - 7 * 86400 AND p.db <= d.db
-      |        GROUP BY d.db)
-      |SELECT dau.db, dau.dau, wau.wau,
-      |  round(dau.dau * 1.0 / wau.wau, 4) AS stickiness
-      |FROM dau JOIN wau ON dau.db = wau.db
-      |ORDER BY dau.db""".stripMargin,
+      |wau AS (SELECT d_db, count(DISTINCT user_id) AS wau
+      |        FROM (SELECT DISTINCT db AS d_db FROM pts) d
+      |        JOIN pts ON db > d_db - 7 * 86400 AND db <= d_db
+      |        GROUP BY d_db)
+      |SELECT db, dau, wau, round(dau * 1.0D / wau, 4) AS stickiness
+      |FROM dau JOIN wau ON db = d_db
+      |ORDER BY db""".stripMargin,
     s"""WITH pts AS (SELECT user_id, (CAST(floor(epoch(ts)) AS BIGINT) - (CAST(floor(epoch(ts)) AS BIGINT) % 86400)) AS db FROM $EV e),
       |dau AS (SELECT db, count(DISTINCT user_id) AS dau FROM pts GROUP BY db),
       |wau AS (SELECT d.db, count(DISTINCT p.user_id) AS wau

@@ -10,12 +10,11 @@ object PlanAudit {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Tables.register(spark, "/root/testdata/sf0.01")
+    val dir = "/root/testdata/sf0.01"
+    val served = SparkEntry.queries
 
     def audit(id: String): Unit = {
-      val df = graft.dsl.Relational.impls.get(id)
-        .map(_(spark))
-        .getOrElse(graft.queries.Extensions.queries(id)(spark, "/root/testdata/sf0.01"))
+      val df = served(id)(spark, dir)
       val p = df.queryExecution.executedPlan.toString
       val marks = Seq(
         "pushdown" -> p.contains("PushedFilters: ["),
@@ -37,7 +36,7 @@ object PlanAudit {
 
     // detailed look at the two scan-bound shapes
     println("\n--- FILTER-PRED formatted ---")
-    graft.dsl.Relational("FILTER-PRED", spark).explain("formatted")
+    served("FILTER-PRED")(spark, dir).explain("formatted")
     spark.stop()
   }
 }

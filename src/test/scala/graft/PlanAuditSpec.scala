@@ -8,11 +8,7 @@ import org.apache.spark.sql.DataFrame
   * to return the right rows at test scale. */
 class PlanAuditSpec extends SparkSpec {
 
-  private def df(id: String): DataFrame = {
-    tables()
-    graft.dsl.Relational.impls.get(id).map(_(spark))
-      .getOrElse(graft.queries.Extensions.queries(id)(spark, sfDir))
-  }
+  private def df(id: String): DataFrame = graft.SparkEntry.queries(id)(spark, sfDir)
 
   /** Final (post-AQE) plan string: execute first, then read executedPlan. */
   private def finalPlan(id: String): String = {
@@ -429,12 +425,10 @@ class PlanAuditSpec extends SparkSpec {
     // are fine; CartesianProduct is the shuffle-everything disaster.)
     // JOIN-CROSS is the intentional exception — a declared cross join on
     // two clamped dimension slices.
-    tables()
-    val offenders = graft.SparkEntry.queries.keys.toSeq.sorted
+    val served = graft.SparkEntry.queries
+    val offenders = served.keys.toSeq.sorted
       .filterNot(_ == "JOIN-CROSS").flatMap { id =>
-        val plan = graft.dsl.Relational.impls.get(id).map(_(spark))
-          .getOrElse(graft.queries.Extensions.queries(id)(spark, sfDir))
-          .queryExecution.executedPlan.toString
+        val plan = served(id)(spark, sfDir).queryExecution.executedPlan.toString
         if (plan.contains("CartesianProduct")) Some(id) else None
       }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")

@@ -89,7 +89,7 @@ class TopKByAggSpec extends SparkSpec {
   test("AGG-GROUP-TOPK plan: partial ObjectHashAggregate, no Window, no per-group sort of base data") {
     tables()
     register()
-    val df = graft.dsl.Relational("AGG-GROUP-TOPK", spark)
+    val df = graft.SparkEntry.queries("AGG-GROUP-TOPK")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate") || plan.contains("SortAggregate"),
       s"expected an aggregate-based plan:\n$plan")

@@ -100,4 +100,20 @@ class HttpIngestSpec extends SparkSpec {
     val b2 = HttpIngest.ensure("localhost", 0, s"$root/b")
     b2.stop()
   }
+
+  test("stop() releases the bridge's worker threads over 20 start/stop cycles") {
+    import scala.jdk.CollectionConverters._
+    def workers(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.isAlive && t.getName == "graft-http-ingest")
+    val root = Files.createTempDirectory("httpcycles").toString
+    val before = workers()
+    (1 to 20).foreach { i =>
+      val b = HttpIngest.start("localhost", 0, s"$root/s$i")
+      // a POST makes the pool start a worker thread
+      try assert(post(b.port, "x".getBytes) === 200) finally b.stop()
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (workers() > before && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(workers() === before, "graft-http-ingest threads outlive their bridges")
+  }
 }

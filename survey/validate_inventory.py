@@ -47,10 +47,15 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions","4")
          .getOrCreate())
 for t in TABLES:
-    spark.read.parquet(f"{DIR}/{t}.parquet").createOrReplaceTempView(t + "_raw")
+    raw = spark.read.parquet(f"{DIR}/{t}.parquet")
+    raw.createOrReplaceTempView(t + "_raw")
     if t == "events":
-        spark.sql("""CREATE OR REPLACE TEMP VIEW events AS
-            SELECT event_id, timestamp_micros(CAST(ts DIV 1000 AS LONG)) AS ts,
+        # same normalization as graft.core.Tables: timestamp[ns] surfaces as
+        # BIGINT nanos, timestamp[us] as TIMESTAMP_NTZ
+        ts = ("timestamp_micros(CAST(ts DIV 1000 AS LONG))"
+              if raw.schema["ts"].dataType.typeName() == "long" else "CAST(ts AS TIMESTAMP)")
+        spark.sql(f"""CREATE OR REPLACE TEMP VIEW events AS
+            SELECT event_id, {ts} AS ts,
                    user_id, event_type, value, props FROM events_raw""")
     else:
         spark.sql(f"CREATE OR REPLACE TEMP VIEW {t} AS SELECT * FROM {t}_raw")
@@ -88,10 +93,16 @@ q("JOIN-FULL-OUTER", """SELECT coalesce(a.k, b.k) AS k, a.nc, b.ns FROM
  ON a.k = b.k ORDER BY k""")
 
 q("JOIN-SEMI", """SELECT c_custkey FROM customer
+LEFT SEMI JOIN (SELECT o_custkey FROM orders WHERE o_totalprice > 100000) o
+  ON c_custkey = o_custkey
+ORDER BY c_custkey""",
+"""SELECT c_custkey FROM customer
 WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 100000)
 ORDER BY c_custkey""")
 
-q("JOIN-ANTI", """SELECT c_custkey FROM customer
+q("JOIN-ANTI", """SELECT c_custkey FROM customer LEFT ANTI JOIN orders ON c_custkey = o_custkey
+ORDER BY c_custkey""",
+"""SELECT c_custkey FROM customer
 WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 ORDER BY c_custkey""")
 
@@ -133,7 +144,10 @@ q("AGG-TPCH-Q1", """SELECT l_returnflag, l_linestatus,
 FROM lineitem GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus""")
 
-q("AGG-DISTINCT", """SELECT event_type, count(DISTINCT user_id) AS u
+q("AGG-DISTINCT", """SELECT event_type, count(*) AS u FROM
+  (SELECT DISTINCT event_type, user_id FROM events WHERE user_id IS NOT NULL) t
+GROUP BY event_type ORDER BY event_type""",
+"""SELECT event_type, count(DISTINCT user_id) AS u
 FROM events GROUP BY event_type ORDER BY event_type""")
 
 q("AGG-ROLLUP", """SELECT r_name, n_name, count(*) AS c
@@ -175,6 +189,10 @@ q("WIN-FRAME-ROWS", """SELECT event_id,
 FROM events WHERE user_id < 3 ORDER BY event_id LIMIT 80""")
 
 q("WIN-FRAME-RANGE", """SELECT o_orderkey,
+  count(*) OVER (ORDER BY CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        RANGE BETWEEN 100000 PRECEDING AND CURRENT ROW) AS near_cnt
+FROM orders ORDER BY o_orderkey LIMIT 60""",
+"""SELECT o_orderkey,
   count(*) OVER (ORDER BY CAST(o_totalprice AS DECIMAL(18,2))
         RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS near_cnt
 FROM orders ORDER BY o_orderkey LIMIT 60""")
@@ -182,7 +200,9 @@ FROM orders ORDER BY o_orderkey LIMIT 60""")
 q("WIN-NTILE", """SELECT o_orderkey, ntile(4) OVER (ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC, o_orderkey) AS q
 FROM orders ORDER BY o_orderkey LIMIT 60""")
 
-q("SORT-TOPK", """SELECT o_orderkey, round(o_totalprice,2) AS p FROM orders
+q("SORT-TOPK", """SELECT o_orderkey, round(o_totalprice, 2) AS p FROM
+  (SELECT * FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10) t""",
+"""SELECT o_orderkey, round(o_totalprice,2) AS p FROM orders
 ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""")
 
 q("SET-UNION", """SELECT k FROM (
@@ -196,9 +216,13 @@ q("SET-UNION-ALL", """SELECT count(*) FROM (
   SELECT c_nationkey FROM customer UNION ALL SELECT s_nationkey FROM supplier) t""")
 
 q("SET-INTERSECT", """SELECT c_nationkey AS k FROM customer
+INTERSECT SELECT s_nationkey AS k FROM supplier ORDER BY k""",
+"""SELECT c_nationkey AS k FROM customer
 INTERSECT SELECT s_nationkey FROM supplier ORDER BY k""")
 
 q("SET-EXCEPT", """SELECT c_nationkey AS k FROM customer
+EXCEPT SELECT s_nationkey AS k FROM supplier ORDER BY k""",
+"""SELECT c_nationkey AS k FROM customer
 EXCEPT SELECT s_nationkey FROM supplier ORDER BY k""")
 
 q("FN-STRING", """SELECT p_partkey, upper(p_brand) AS ub, lower(p_type) AS lt,
@@ -263,13 +287,13 @@ SELECT wstart, count(*) AS c FROM b GROUP BY wstart ORDER BY wstart LIMIT 100"""
 
 q("STREAM-SESSION", """WITH g AS (
   SELECT user_id, ts,
-    CASE WHEN CAST(ts AS DOUBLE) - CAST(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS DOUBLE) > 1800
-         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+    CASE WHEN CAST(ts AS DOUBLE) - CAST(lag(ts) OVER w AS DOUBLE) > 1800
+         OR lag(ts) OVER w IS NULL
          THEN 1 ELSE 0 END AS new_s
-  FROM events),
-s AS (SELECT user_id, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS sid FROM g)
-SELECT user_id, CAST(max(sid) AS BIGINT) AS n_sessions, count(*) AS n_events
-FROM s GROUP BY user_id ORDER BY user_id""",
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions, count(*) AS n_events
+FROM g GROUP BY user_id ORDER BY user_id""",
 """WITH g AS (
   SELECT user_id, ts, event_id,
     CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800

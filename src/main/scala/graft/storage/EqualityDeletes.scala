@@ -103,45 +103,6 @@ object EqualityDeletes {
     } finally in.close()
   }
 
-  /** [[canonical]] + [[encodeValue]] as a CODEGEN-able Column for one
-    * key column, or None when the type needs the row-at-a-time
-    * fallback (TimestampNTZ — no timezone-free micros builtin). Must
-    * render IDENTICALLY to the sink's internal-value path:
-    * null → `∅`; else `v` + canonical with `%`/TAB/LF/CR escaped. */
-  def encodedCol(dt: org.apache.spark.sql.types.DataType,
-                 c: org.apache.spark.sql.Column)
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val canon: Option[org.apache.spark.sql.Column] = dt match {
-      case StringType => Some(
-        // order matters: escape '%' first, then the control chars
-        regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-          c, "%", "%25"), "\t", "%09"), "\n", "%0A"), "\r", "%0D"))
-      case DateType => // internal canonical = epoch-day int
-        Some(datediff(c, to_date(lit("1970-01-01"))).cast("string"))
-      case TimestampType => // internal canonical = epoch micros
-        Some(unix_micros(c).cast("string"))
-      case BooleanType | ByteType | ShortType | IntegerType | LongType =>
-        Some(c.cast("string"))
-      case _ => None
-    }
-    canon.map(cc => when(c.isNull, lit(NullToken))
-      .otherwise(concat(lit("v"), cc)))
-  }
-
-  /** The whole encoded key tuple as one column (TAB-joined), codegen
-    * when every key type allows it, else None (caller falls back to a
-    * UDF). */
-  def encodedTupleCol(types: Seq[org.apache.spark.sql.types.DataType],
-                      cols: Seq[org.apache.spark.sql.Column])
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    val parts = types.zip(cols).map { case (dt, c) => encodedCol(dt, c) }
-    if (parts.exists(_.isEmpty)) None
-    else Some(parts.flatten.reduce((a, b) => concat(a, lit("\t"), b)))
-  }
-
   /** Canonical rendering of one key value from Spark's INTERNAL
     * representation (what a reader/writer sees per row), null-safe.
     * Must agree between the writer (sink) and every reader. */

@@ -14,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * every commit. Because membership is manifest metadata, partition
   * pruning is an exact driver-side decision over one manifest read — no
   * directory listings, no stats heuristics — and because the files are
-  * self-contained, every existing reader (library, DSv2 row/columnar,
-  * change feed, time travel) works on partitioned tables unchanged.
+  * self-contained, every existing reader (the DSv2 row/columnar scan
+  * that library reads also go through, change feed, time travel) works
+  * on partitioned tables unchanged.
   *
   * FIELDS are `col` (identity), `days(col)` / `months(col)` (date or
   * timestamp source), `hours(col)` (timestamp source), or

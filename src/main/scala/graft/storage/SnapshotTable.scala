@@ -248,9 +248,16 @@ object SnapshotTable {
     def eqPlanFor(kept: Seq[FileEntry],
                   fileStats: Map[(String, String), (Double, Double)] = Map.empty)
         : (Map[String, Seq[String]], Seq[String]) = {
+      // both bounds come through the SAME monotone cast-to-double map
+      // (the writer tracks it, collectStats records it), so rounding can
+      // never prove a true overlap disjoint; missing range or stats ⇒
+      // the sidecar applies (probe kept — no false negatives)
       def rangeApplies(e: FileEntry, path: String, ks: Seq[String]): Boolean =
-        eqRangeApplies(eqDeleteRanges.get(path),
-          if (ks.size == 1) fileStats.get((norm(e.path), ks.head)) else None)
+        (eqDeleteRanges.get(path),
+          if (ks.size == 1) fileStats.get((norm(e.path), ks.head)) else None) match {
+          case (Some((dmn, dmx)), Some((fmn, fmx))) => dmx >= fmn && dmn <= fmx
+          case _ => true
+        }
       val byFile = kept.flatMap { e =>
         val ds = eqDeletesFor(e).collect {
           case (p, _, _, ks) if rangeApplies(e, p, ks) => p
@@ -266,21 +273,6 @@ object SnapshotTable {
       (byFile, keySets.headOption.getOrElse(Seq.empty))
     }
   }
-
-  /** THE key-range disjointness test — shared by every eq-delete scan
-    * planner (connector [[Snapshot.eqPlanFor]] and the library
-    * [[readEntries]]): a sidecar with a recorded key range stops
-    * applying to a file whose stats prove its key-column values
-    * PROVABLY disjoint. Both bounds come through the SAME monotone
-    * cast-to-double map (writer tracks it, collectStats records it),
-    * so rounding can never prove a true overlap disjoint. Missing
-    * range or stats ⇒ applies (probe kept — no false negatives). */
-  private[storage] def eqRangeApplies(range: Option[(Double, Double)],
-                                      fstat: Option[(Double, Double)]): Boolean =
-    (range, fstat) match {
-      case (Some((dmn, dmx)), Some((fmn, fmx))) => dmx >= fmn && dmn <= fmx
-      case _ => true
-    }
 
   /** Resolve a LOGICAL column of the head schema to the PHYSICAL name a
     * file added at `addV` was written with, by walking the rename/drop
@@ -396,16 +388,6 @@ object SnapshotTable {
     * prefix (`file:`, `file://`) each API layer used. */
   private[storage] def norm(p: String): String = new Path(p).toUri.getPath
 
-  /** Scheme-free URL-ENCODED form — the join-key twin of [[norm]] for
-    * `_metadata.file_path` values: Spark reports a file's SparkPath
-    * string, i.e. `path.toUri`'s PERCENT-ENCODED rendering, so a driver
-    * key built from the decoded [[norm]] silently stops matching the
-    * moment a table root contains a space/`%`. `toUri.getRawPath` is
-    * byte-identical to the path component Spark reports (both sides go
-    * through the same `Path → URI` encoder); for the common
-    * reserved-char-free path the two forms coincide. */
-  private[storage] def encNorm(p: String): String = new Path(p).toUri.getRawPath
-
   /** [[norm]] for strings Spark REPORTS (`input_file_name()`,
     * `_metadata.file_path`): those arrive percent-ENCODED, so they must
     * be URI-decoded before they can key anything that [[norm]]-keyed
@@ -450,6 +432,9 @@ object SnapshotTable {
                         partitionSpecs: Seq[String] = Seq.empty,
                         sortCols: Seq[String] = Seq.empty,
                         clusterToTuples: Boolean = true): Seq[FileEntry] = {
+    // every read of the table is a connector scan: refuse a column type
+    // its readers cannot decode before any file is staged
+    graft.storage.dsv2.SnapshotParquetWrite.requireWritable(df.schema)
     val dir = new Path(new Path(root, "data"), java.util.UUID.randomUUID().toString)
     val keys = partitionSpecs.map(s => SnapshotPartition.parseField(s).key)
     if (partitionSpecs.isEmpty) {
@@ -1005,39 +990,25 @@ object SnapshotTable {
     (keepByStats(snap.files, st, Map(statCol -> (lo, hi))), snap.files.size)
   }
 
-  /** Range read through the stats sidecar: scans ONLY the candidate files
-    * then applies the exact predicate (stats false positives cost I/O,
-    * never correctness) — the snapshot layer's half of data skipping; the
+  /** Range read through the stats sidecar: the scan is narrowed to the
+    * candidate files ([[pruneFiles]]'s keep-rule), then the exact
+    * predicate applies (stats false positives cost I/O, never
+    * correctness) — the snapshot layer's half of data skipping; the
     * per-row-group half is parquet's own min/max pushdown inside each
-    * kept file. */
-  /** The two [[readEntries]] inputs that enable equality-delete key-range
-    * skipping — loaded only when some in-force sidecar actually carries
-    * a range (the stats sidecar read is otherwise skipped). */
-  private def eqSkipInputs(spark: SparkSession, root: String, s: Snapshot)
-      : (Map[String, (Double, Double)], Map[(String, String), (Double, Double)]) =
-    if (s.eqDeleteRanges.isEmpty) (Map.empty, Map.empty)
-    else (s.eqDeleteRanges, stats(spark, root, s.version))
-
+    * kept file. The narrowing is explicit because the band compares in
+    * the stats' double domain, and Spark pushes no filter over a
+    * BIGINT-to-DOUBLE cast. */
   def readPruned(spark: SparkSession, root: String, statCol: String,
                  lo: Double, hi: Double): DataFrame = {
     // one snapshot resolution for files, stats AND schema — a commit
     // landing mid-call cannot mix versions
     val snap = latest(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val st = stats(spark, root, snap.version)
-    val keep = keepByStats(snap.files, st, Map(statCol -> (lo, hi)))
-    val schema = tableSchema(spark, root, snap.version)
-    val base =
-      if (keep.isEmpty)
-        readEntries(spark, snap.entries, schema, snap.eqDeletes,
-          snap.eqDeleteRanges, st, snap.colEvents).where(lit(false))
-      else {
-        val keepSet = keep.map(norm).toSet
-        readEntries(spark, snap.entries.filter(e => keepSet(norm(e.path))),
-          schema, snap.eqDeletes, snap.eqDeleteRanges, st, snap.colEvents)
-      }
-    base.where(col(statCol).cast("double") >= lo &&
-      col(statCol).cast("double") <= hi)
+    val keep = keepByStats(snap.files, stats(spark, root, snap.version),
+      Map(statCol -> (lo, hi))).map(norm).toSet
+    scan(spark, root, snap, Some(snap.entries.filter(e => keep(norm(e.path)))))
+      .where(col(statCol).cast("double") >= lo &&
+        col(statCol).cast("double") <= hi)
   }
 
   /** One history row per retained version: (version, commit time = the
@@ -1100,21 +1071,6 @@ object SnapshotTable {
         "upsert_debt")
   }
 
-  /** CHANGE FEED (file granularity): the data files ADDED by versions in
-    * `(fromV, toV]` — the append-only change stream between two
-    * snapshots. A version that REMOVED files (merge / compact / SQL
-    * row-level rewrite / truncate) cannot be represented as appended
-    * rows and throws, pointing at [[graft.operators.Cdc.snapshotDiff]]
-    * for the row-level diff — unless `ignoreRewrites` is set, which
-    * emits rewrite versions' ADDED files too (rewritten rows appear as
-    * fresh inserts; the caller accepts duplicates, exactly the upstream
-    * formats' ignoreChanges contract).
-    *
-    * `fromV = 0` means "from the beginning" (v1's files are the first
-    * change). `fromV` must be 0 or a retained version — the diff is
-    * anchored on its file set. Gaps from vacuumed intermediate versions
-    * telescope correctly (net adds across the gap). Metadata-scale:
-    * manifest reads only. */
   /** Change feeds emit rows under the WINDOW-END schema; a column
     * rename/drop inside the window would mean different versions'
     * entries disagree on what a name denotes — refuse with the
@@ -1134,6 +1090,21 @@ object SnapshotTable {
         "versions with Cdc.snapshotDiff")
   }
 
+  /** CHANGE FEED (file granularity): the data files ADDED by versions in
+    * `(fromV, toV]` — the append-only change stream between two
+    * snapshots. A version that REMOVED files (merge / compact / SQL
+    * row-level rewrite / truncate) cannot be represented as appended
+    * rows and throws, pointing at [[graft.operators.Cdc.snapshotDiff]]
+    * for the row-level diff — unless `ignoreRewrites` is set, which
+    * emits rewrite versions' ADDED files too (rewritten rows appear as
+    * fresh inserts; the caller accepts duplicates, exactly the upstream
+    * formats' ignoreChanges contract).
+    *
+    * `fromV = 0` means "from the beginning" (v1's files are the first
+    * change). `fromV` must be 0 or a retained version — the diff is
+    * anchored on its file set. Gaps from vacuumed intermediate versions
+    * telescope correctly (net adds across the gap). Metadata-scale:
+    * manifest reads only. */
   def changedEntries(spark: SparkSession, root: String, fromV: Long, toV: Long,
                      ignoreRewrites: Boolean = false): Seq[FileEntry] = {
     require(fromV >= 0 && toV >= fromV,
@@ -1177,21 +1148,6 @@ object SnapshotTable {
     }
   }
 
-  /** The ROW-LEVEL change feed (CDF): every change in `(fromV, toV]` as
-    * a typed row — the table's columns plus `_change_type`
-    * ('insert' | 'delete') and `_commit_version` (the version that made
-    * the change). What merge-on-read buys the feed: a deletion-vector
-    * commit names EXACTLY the deleted ordinals, so deletes become
-    * representable change rows (the appended-files walk alone could only
-    * refuse them). Inserts are the appended files per version; deletes
-    * are each touched file's rows at the NEWLY-vectored positions
-    * (read via parquet's `_metadata` coordinates against a
-    * broadcast-small position set — vectors are small by the
-    * merge-on-read contract). Copy-on-write rewrites still refuse with
-    * guidance (file replacement cannot be attributed row-level);
-    * [[graft.operators.Cdc.snapshotDiff]] is the keyed diff for those.
-    * Metadata work is manifest reads; data work is O(changed rows'
-    * files). */
   /** One CDF delete set: the rows of `file` newly deleted in `version`,
     * described by SIDECAR PATHS only — positions are never materialized
     * on the driver (a 100 TB curation sweep deleting 10⁹ rows must not
@@ -1267,8 +1223,8 @@ object SnapshotTable {
     // the feed reads touched files with the WINDOW-END schema: refuse
     // (a) column rename/drop DDL inside the window, and (b) descriptors
     // over files PREDATING an in-force rename/drop (their physical
-    // names differ from the head's — the raw readFiles in the feed's
-    // delete/eq branches would silently misread them)
+    // names differ from the head's — the change readers read every
+    // file under the window-end names and would silently misread them)
     def colDdlGuard(e: FileEntry, events: Seq[(Long, String, String, String)],
                     v: Long): Unit =
       if (events.exists(ev => e.addV < 0L || e.addV < ev._1))
@@ -1410,215 +1366,37 @@ object SnapshotTable {
     (fresh, isUpd)
   }
 
+  /** The ROW-LEVEL change feed (CDF): every change in `(fromV, toV]` as
+    * a typed row — the table's columns (under `toV`'s schema, `toV`
+    * defaulting to latest) plus `_change_type` ('insert' | 'delete' |
+    * 'update_preimage' | 'update_postimage') and `_commit_version`. A
+    * connector read (`option("changeFeed", true)`) pinned to the
+    * resolved window: [[changeSets]] plans it from manifests, the
+    * connector's change readers resolve vectors and equality-delete
+    * epochs executor-side. Copy-on-write rewrites refuse with guidance;
+    * [[graft.operators.Cdc.snapshotDiff]] is the keyed diff for those. */
   def changeFeed(spark: SparkSession, root: String, fromV: Long,
-                 toV: Option[Long] = None): DataFrame = {
-    val to = toV.orElse(latest(spark, root).map(_.version)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val (insertEntries, deleteSets, eqSets) = changeSets(spark, root, fromV, to)
-    val schema = tableSchema(spark, root, to)
-    val cols = schema.getOrElse(
-      throw new IllegalStateException(s"no schema sidecar at $root"))
-      .fields.map(f => col(f.name)).toSeq
-    // inserts: the appended files per version (update postimages typed
-    // apart). Every write path adds files with EMPTY vectors, but read
-    // through the dv-aware readEntries anyway — a file that somehow
-    // arrived pre-vectored must not report its dead rows as inserts.
-    // Later in-window deletes appear as delete rows (the CDF contract).
-    val insertDf = insertEntries.groupBy(t => (t._1, t._3)).toSeq.sortBy(_._1)
-      .map { case ((v, postimage), es) =>
-        readEntries(spark, es.map(_._2), schema)
-          .select(cols :+ lit(if (postimage) "update_postimage" else "insert")
-            .as("_change_type")
-            :+ lit(v).as("_commit_version"): _*)
-      }
-    // deletes: the driver ships SIDECAR PATHS (O(touched files) state);
-    // executors read + diff the sorted vectors and emit (file, pos,
-    // version, type) keys, joined against the touched files' rows by
-    // parquet _metadata coordinates. Positions never sit in driver
-    // memory, and join sizing is left to AQE (a curation sweep's delete
-    // set can be huge — forcing a broadcast would re-create the driver
-    // bottleneck the executor-side diff removes).
-    val deleteDf =
-      if (deleteSets.isEmpty) Seq.empty
-      else {
-        val sq = spark
-        import sq.implicits._
-        val hconfB = spark.sparkContext.broadcast(
-          new graft.storage.dsv2.SerializableHadoopConf(
-            spark.sessionState.newHadoopConf()))
-        val descs = deleteSets
-          .map(d => (d.file, d.oldDv, d.newDv, d.fullRows, d.updDv, d.version))
-        val keys = spark.createDataset(descs)
-          .repartition(math.min(descs.size,
-            spark.sparkContext.defaultParallelism))
-          .flatMap { case (path, oldDv, newDv, fullRows, updDv, v) =>
-            val c = hconfB.value.value
-            val (fresh, isUpd) = resolveDeleteSet(c, oldDv, newDv, fullRows, updDv)
-            val key = encNorm(path)
-            fresh.iterator.zipWithIndex.map { case (pos, i) =>
-              (key, pos, v, if (isUpd(i)) "update_preimage" else "delete")
-            }
-          }.toDF("__cf_file", "__cf_pos", "__cf_v", "__cf_type")
-        // read with the ORIGINAL entry paths (a normalized path would
-        // resolve against the default filesystem — wrong table on s3a/
-        // hdfs roots); normalization is only the JOIN KEY, via a
-        // codegen-friendly builtin that strips scheme://authority
-        val files = deleteSets.map(_.file).distinct
-        val joined = readFiles(spark, files, schema)
-          .withColumn("__cf_file", regexp_replace(col("_metadata.file_path"),
-            "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""))
-          .withColumn("__cf_pos", col("_metadata.row_index"))
-          .join(keys, Seq("__cf_file", "__cf_pos"))
-        // a FULLY-removed file may carry in-force equality deletes: its
-        // key-retired rows were already emitted at their upsert epoch,
-        // so the removal's complement must not re-emit them (per-file
-        // anti-join on the prior sidecars' key tuples)
-        // prior sidecars group BY KEY SET: different fully-removed files
-        // can be covered by epochs on different key sets (legal when one
-        // set was fully retired before the next began) — each group gets
-        // its own canonical tuple and anti-join. A single file's priors
-        // are one set (changeSets require()s it), so a file only ever
-        // joins its own group; the executor require below can then only
-        // fire on sidecar corruption, never on a legal history.
-        val priorGroups = deleteSets.filter(_.priorEq.nonEmpty)
-          .groupBy(_.eqKeys)
-          .map { case (ks, ds) =>
-            ks -> ds.flatMap(d => d.priorEq.map(p => (encNorm(d.file), p)))
-              .distinct
-          }
-        val scDel = schema.get
-        val filtered = priorGroups.foldLeft(joined) {
-          case (df, (keyCols, pairs)) =>
-            val keyTypes = keyCols.map(k => scDel(scDel.fieldIndex(k)).dataType)
-            df.withColumn("__eq_key", canonKeyTuple(keyCols, keyTypes))
-              .join(
-                spark.createDataset(pairs).flatMap { case (f0, p) =>
-                  val (ks, set) = EqualityDeletes.read(hconfB.value.value, p)
-                  require(ks == keyCols,
-                    s"prior sidecar $p keys $ks != $keyCols")
-                  set.iterator.map(k => (f0, k))
-                }.toDF("__cf_file", "__eq_key"),
-                Seq("__cf_file", "__eq_key"), "left_anti")
-              .drop("__eq_key")
-        }
-        Seq(filtered.select(cols :+ col("__cf_type").as("_change_type")
-          :+ col("__cf_v").as("_commit_version"): _*))
-      }
-    // EQUALITY-delete epochs (streaming upserts) — SINGLE PASS: each
-    // applicable file is read ONCE for the whole window, however many
-    // epochs it spans. Per row, the victim's commit version is the
-    // EARLIEST applicable epoch containing its key (array_intersect of
-    // the key's epoch list with the file's), gated on the row being
-    // live then: not retired by a pre-window sidecar, not in that
-    // epoch's prior deletion vector. All sidecar/vector reads are
-    // executor-side; driver state is O(touched files + epochs).
-    val eqDf =
-      if (eqSets.isEmpty) Seq.empty
-      else {
-        val sq = spark
-        import sq.implicits._
-        val hconfB = spark.sparkContext.broadcast(
-          new graft.storage.dsv2.SerializableHadoopConf(
-            spark.sessionState.newHadoopConf()))
-        val sc = schema.get
-        // files group by their (single) key set: the sink's key-set gate
-        // refuses an epoch whose keys differ from anything still in
-        // force against ANY live file, so a single file only ever sees
-        // ONE key set — but different files can legally carry different
-        // sets inside one window (epochs on set A, A's files fully
-        // removed and sidecars retired, epochs on set B). The
-        // single-pass plan runs once per group; a per-file mixed set can
-        // only mean manifest corruption and refuses with the keyed-diff
-        // guidance.
-        val byKeySet = eqSets.groupBy { d =>
-          val ks = d.epochs.map(_.keys).distinct
-          require(ks.size == 1,
-            s"file ${d.file} spans upsert epochs with differing key " +
-              s"sets $ks — diff the versions with Cdc.snapshotDiff")
-          ks.head
-        }
-        byKeySet.toSeq.sortBy(_._1.mkString(",")).map { case (keyCols, group) =>
-          val keyTypes = keyCols.map(k => sc(sc.fieldIndex(k)).dataType)
-          val base = readFiles(spark, group.map(_.file), schema)
-            .withColumn("__gf_file",
-              regexp_replace(col("_metadata.file_path"), SchemeRe, ""))
-            .withColumn("__gf_pos", col("_metadata.row_index"))
-            .withColumn("__eq_key", canonKeyTuple(keyCols, keyTypes))
-          // rows retired BEFORE the window (per-file prior sidecars)
-          val priorPairs = group
-            .flatMap(d => d.priorEq.map(p => (encNorm(d.file), p))).distinct
-          val live =
-            if (priorPairs.isEmpty) base
-            else base.join(
-              spark.createDataset(priorPairs).flatMap { case (f0, p) =>
-                val (ks, set) = EqualityDeletes.read(hconfB.value.value, p)
-                require(ks == keyCols, s"prior sidecar $p keys $ks != $keyCols")
-                set.iterator.map(k => (f0, k))
-              }.toDF("__gf_file", "__eq_key"),
-              Seq("__gf_file", "__eq_key"), "left_anti")
-          // key → the epoch versions that upserted it (executor reads)
-          val epochSidecars = group.flatMap(_.epochs)
-            .flatMap(e => e.newEq.map(p => (e.version, p))).distinct
-          val keyVs = spark.createDataset(epochSidecars)
-            .flatMap { case (v, p) =>
-              EqualityDeletes.read(hconfB.value.value, p)._2.iterator
-                .map(k => (k, v))
-            }.toDF("__eq_key", "__eq_v")
-            .groupBy("__eq_key")
-            .agg(collect_set(col("__eq_v")).as("__eq_vs"))
-          // file → its applicable epoch versions (driver metadata)
-          val fileVs = group
-            .map(d => (encNorm(d.file), d.epochs.map(_.version)))
-            .toDF("__gf_file", "__file_vs")
-          val attributed = live
-            .join(keyVs, Seq("__eq_key"))
-            .join(broadcast(fileVs), Seq("__gf_file"))
-            .withColumn("__cv",
-              array_min(array_intersect(col("__eq_vs"), col("__file_vs"))))
-            .where(col("__cv").isNotNull)
-          // drop rows position-dead before their attributed epoch
-          val dvTriples = group.flatMap(d =>
-            d.epochs.filter(_.dvAtPrev.nonEmpty)
-              .map(e => (encNorm(d.file), e.version, e.dvAtPrev))).distinct
-          val alive =
-            if (dvTriples.isEmpty) attributed
-            else attributed.join(
-              spark.createDataset(dvTriples).flatMap { case (f0, v, dvp) =>
-                DeletionVectors.read(hconfB.value.value, dvp).iterator
-                  .map(p => (f0, v, p))
-              }.toDF("__gf_file", "__cv", "__gf_pos"),
-              Seq("__gf_file", "__cv", "__gf_pos"), "left_anti")
-          alive.select(cols :+ lit("delete").as("_change_type")
-            :+ col("__cv").as("_commit_version"): _*)
-        }
-      }
-    val all = insertDf ++ deleteDf ++ eqDf
-    if (all.isEmpty) {
-      val sc = schema.get
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(sc.fields
-          :+ org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType, nullable = false)
-          :+ org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-    } else all.reduce(_ unionByName _)
-  }
+                 toV: Option[Long] = None): DataFrame =
+    changeRead(spark, root, fromV, toV).option("changeFeed", true).load(root)
 
-  /** The change feed as a DataFrame: rows appended in `(fromV, toV]`,
-    * read with `toV`'s schema (`toV` defaults to latest). */
+  /** The append-only change feed as a DataFrame: the rows of the files
+    * [[changedEntries]] names in `(fromV, toV]`, read with `toV`'s schema
+    * (`toV` defaults to latest) — the connector's `changesFrom` read. */
   def changes(spark: SparkSession, root: String, fromV: Long,
               toV: Option[Long] = None,
-              ignoreRewrites: Boolean = false): DataFrame = {
+              ignoreRewrites: Boolean = false): DataFrame =
+    changeRead(spark, root, fromV, toV)
+      .option("ignoreRewrites", ignoreRewrites).load(root)
+
+  /** A connector change read of `(fromV, toV]` with the window's end
+    * PINNED to the version resolved now (latest when `toV` is None), so
+    * later commits never widen the frame. */
+  private def changeRead(spark: SparkSession, root: String, fromV: Long,
+                         toV: Option[Long]): org.apache.spark.sql.DataFrameReader = {
     val to = toV.orElse(latest(spark, root).map(_.version)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val entries = changedEntries(spark, root, fromV, to, ignoreRewrites)
-    val schema = tableSchema(spark, root, to)
-    if (entries.isEmpty) {
-      val sc = schema.getOrElse(throw new IllegalStateException(
-        s"empty change feed with no schema sidecar at $root"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-    } else readEntries(spark, entries, schema)
+    spark.read.format("graft-snapshot")
+      .option("changesFrom", fromV).option("changesTo", to)
   }
 
   /** Rewrite every retained version's manifest and stats sidecar onto a
@@ -1813,219 +1591,45 @@ object SnapshotTable {
     }
   }
 
-  /** Schema-aware file read: with a version schema, old files missing
-    * evolved columns read as null (Spark's parquet reader fills absent
-    * columns when given an explicit schema). */
-  private def readFiles(spark: SparkSession, files: Seq[String],
-                        schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    if (files.isEmpty) {
-      // a legal state: TRUNCATE/overwrite-with-empty commits a zero-file
-      // manifest; the schema sidecar keeps the table well-typed
-      val sc = schema.getOrElse(throw new IllegalStateException(
-        "empty snapshot with no schema sidecar"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-    }
-    schema match {
-      case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
-  }
+  /** The logical schema of `snap`: its version's schema sidecar (which
+    * can be WIDER than any one file after add-column evolution), else
+    * one data file's footer (pre-evolution tables). None = an empty
+    * snapshot with no sidecar. */
+  private[storage] def schemaOf(spark: SparkSession, root: String,
+                                snap: Snapshot): Option[org.apache.spark.sql.types.StructType] =
+    tableSchema(spark, root, snap.version)
+      .orElse(snap.files.headOption.map(f => spark.read.parquet(f).schema))
 
-  /** Entry-aware read: like [[readFiles]], but entries carrying a
-    * DELETION VECTOR get their deleted positions subtracted — via
-    * Spark's own parquet `_metadata.file_path`/`row_index` coordinates
-    * anti-joined against the (broadcast-small) sidecar positions. Files
-    * without a vector pay NOTHING (the anti-join only materializes when
-    * a vector exists, and vectors are small by the merge-on-read
-    * contract: big deletes take copy-on-write or the metadata path). */
-  /** Scheme/authority-stripping regexp — the codegen-friendly twin of
-    * [[norm]] for `_metadata.file_path` join keys. */
-  private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"
-
-  /** [[readFiles]] with per-file COLUMN MAPPING under rename/drop
-    * events: entries group by their logical→physical resolution, each
-    * group reads under its PHYSICAL names and projects back to the
-    * logical schema (a broken lineage — dropped, or a freed name reused
-    * — reads as typed null). `withMeta` additionally projects the
-    * `__gf_file`/`__gf_pos` coordinates the DV/eq joins key on (the
-    * `_metadata` struct does not survive a projection, so the mapped
-    * path must materialize it inside each group). A table with no
-    * events (or identity mappings only) takes the plain single-scan
-    * path and pays nothing. */
-  private def readMappedFiles(spark: SparkSession, entries: Seq[FileEntry],
-                              schema: Option[org.apache.spark.sql.types.StructType],
-                              colEvents: Seq[(Long, String, String, String)],
-                              withMeta: Boolean): DataFrame = {
-    def metaCols(df: DataFrame): DataFrame =
-      if (!withMeta) df
-      else df
-        .withColumn("__gf_file",
-          regexp_replace(col("_metadata.file_path"), SchemeRe, ""))
-        .withColumn("__gf_pos", col("_metadata.row_index"))
-    val plain = colEvents.isEmpty || schema.isEmpty || entries.isEmpty ||
-      entries.forall(e => schema.get.fields.forall(f =>
-        physicalColumn(colEvents, e.addV, f.name).contains(f.name)))
-    if (plain) return metaCols(readFiles(spark, entries.map(_.path), schema))
-    val logical = schema.get
-    entries.groupBy(e => logical.fields.map(f =>
-        physicalColumn(colEvents, e.addV, f.name)).toSeq)
-      .toSeq.sortBy(_._2.head.path)
-      .map { case (phys, es) =>
-        val physSchema = org.apache.spark.sql.types.StructType(
-          logical.fields.zip(phys).collect {
-            case (f, Some(p)) => f.copy(name = p)
-          })
-        val raw = metaCols(spark.read.schema(physSchema)
-          .parquet(es.map(_.path): _*))
-        val proj = logical.fields.zip(phys).map {
-          case (f, Some(p)) => col(p).as(f.name)
-          case (f, None) => lit(null).cast(f.dataType).as(f.name)
-        } ++ (if (withMeta) Seq(col("__gf_file"), col("__gf_pos"))
-              else Seq.empty)
-        raw.select(proj.toSeq: _*)
-      }.reduce(_ unionByName _)
-  }
-
-  private[storage] def readEntries(spark: SparkSession, entries: Seq[FileEntry],
-                                   schema: Option[org.apache.spark.sql.types.StructType] = None,
-                                   eqDeletes: Seq[(String, Long, Long, Seq[String])] = Seq.empty,
-                                   eqRanges: Map[String, (Double, Double)] = Map.empty,
-                                   fileStats: Map[(String, String), (Double, Double)] = Map.empty,
-                                   colEvents: Seq[(Long, String, String, String)] = Seq.empty)
-      : DataFrame = {
-    val withDv = entries.filter(_.dv.nonEmpty)
-    // per-(file, sidecar) applicability: committed after the file AND
-    // not provably key-range-disjoint from it — the skip that lets a
-    // time-keyed table's old files pay ZERO per-row probe work
-    def applies(e: FileEntry, p: String, v: Long, ks: Seq[String]): Boolean =
-      (e.addV < 0L || e.addV < v) &&
-        eqRangeApplies(eqRanges.get(p),
-          if (ks.size == 1) fileStats.get((norm(e.path), ks.head)) else None)
-    val applicableEq = eqDeletes.filter { case (p, v, _, ks) =>
-      entries.exists(e => applies(e, p, v, ks))
-    }
-    if (withDv.isEmpty && applicableEq.isEmpty)
-      return readMappedFiles(spark, entries, schema, colEvents, withMeta = false)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sq = spark
-    import sq.implicits._
-    val keyed = readMappedFiles(spark, entries, schema, colEvents, withMeta = true)
-    val cols = keyed.columns.toSeq.filterNot(Set("__gf_file", "__gf_pos"))
-    // POSITION deletes: anti-join the (small) vectors' coordinates
-    val dvApplied =
-      if (withDv.isEmpty) keyed
-      else {
-        val dropped: Seq[(String, Long)] = withDv.flatMap(e =>
-          DeletionVectors.read(conf, e.dv).map(p => (encNorm(e.path), p)))
-        keyed.join(broadcast(dropped.toDF("__gf_file", "__gf_pos")),
-          Seq("__gf_file", "__gf_pos"), "left_anti")
-      }
-    // EQUALITY deletes: a sidecar committed at version V kills
-    // matching-key rows of files with addV < V. Sidecar contents are
-    // read EXECUTOR-side into a keys frame; the anti-join's equi part
-    // is the canonical key tuple, the residual the sequence comparison.
-    val eqApplied =
-      if (applicableEq.isEmpty) dvApplied
-      else {
-        val keySets = applicableEq.map(_._4).distinct
-        require(keySets.size == 1,
-          s"equality deletes with differing key sets in force: $keySets " +
-            "(compact the table before changing upsert keys)")
-        val keyCols = keySets.head
-        val sc = dvApplied.schema
-        val keyTypes = keyCols.map(k => sc(sc.fieldIndex(k)).dataType)
-        val keyTuple = canonKeyTuple(keyCols, keyTypes)
-        val hconfB = spark.sparkContext.broadcast(
-          new graft.storage.dsv2.SerializableHadoopConf(
-            spark.sessionState.newHadoopConf()))
-        val keyRows = spark
-          .createDataset(applicableEq.map(t => (t._1, t._2)))
-          .flatMap { case (p, v) =>
-            val (_, set) = EqualityDeletes.read(hconfB.value.value, p)
-            set.iterator.map(enc => (enc, v))
-          }.toDF("__eq_key_r", "__eq_v")
-        // files with NO range-applicable sidecar skip the probe: their
-        // key tuple stays NULL (never equi-matches), so the per-row
-        // render + set probe cost lands only on files a sidecar can
-        // actually touch
-        val addVDf = entries.map(e =>
-          (encNorm(e.path), e.addV,
-            applicableEq.exists { case (p, v, _, ks) => applies(e, p, v, ks) }))
-          .toDF("__gf_file", "__eq_addv", "__eq_probe")
-        dvApplied
-          .join(broadcast(addVDf), Seq("__gf_file"))
-          .withColumn("__eq_key",
-            when(col("__eq_probe"), keyTuple).otherwise(lit(null)))
-          .join(keyRows,
-            col("__eq_key") === col("__eq_key_r") &&
-              (col("__eq_v") > col("__eq_addv") || col("__eq_addv") < 0L),
-            "left_anti")
-      }
-    eqApplied.select(cols.map(col): _*)
-  }
-
-  /** The encoded key tuple as a COLUMN: codegen'd builtins for every
-    * supported key type (string escape chain, epoch-day/micros casts),
-    * with a row-at-a-time UDF fallback only for types the builtin
-    * rendering cannot express (TimestampNTZ). Both must agree with the
-    * sink's internal-value rendering exactly. */
-  private def canonKeyTuple(keyCols: Seq[String],
-                            keyTypes: Seq[org.apache.spark.sql.types.DataType])
-      : org.apache.spark.sql.Column =
-    EqualityDeletes.encodedTupleCol(keyTypes, keyCols.map(col)).getOrElse {
-      udf { (r: org.apache.spark.sql.Row) =>
-        keyCols.indices.map(i => EqualityDeletes.encodeValue(
-          externalCanonical(keyTypes(i), r.get(i)))).mkString("\t")
-      }.apply(struct(keyCols.map(col): _*))
-    }
-
-  /** [[EqualityDeletes.canonical]] for EXTERNAL row values (the
-    * DataFrame surface hands java.sql types where readers see internal
-    * days/micros) — both must render identically. */
-  private def externalCanonical(dt: org.apache.spark.sql.types.DataType,
-                                v: Any): String = {
-    import org.apache.spark.sql.types._
-    if (v == null) return null
-    dt match {
-      case DateType => v match {
-        case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-        case d: java.time.LocalDate => d.toEpochDay.toString
-        case other => other.toString
-      }
-      case TimestampType | TimestampNTZType => v match {
-        case t: java.sql.Timestamp =>
-          (t.getTime * 1000L + (t.getNanos / 1000L) % 1000L).toString
-        case i: java.time.Instant =>
-          (i.getEpochSecond * 1000000L + i.getNano / 1000L).toString
-        case l: java.time.LocalDateTime =>
-          val i = l.toInstant(java.time.ZoneOffset.UTC)
-          (i.getEpochSecond * 1000000L + i.getNano / 1000L).toString
-        case other => other.toString
-      }
-      case _ => EqualityDeletes.canonical(dt, v)
-    }
+  /** THE library read: a frame over the connector's scan of `snap` (the
+    * `graft-snapshot` V2 table pinned to this resolution, so later
+    * commits never affect it), optionally narrowed to `entries`, a subset
+    * of the snapshot's files, under the snapshot's schema. Deletion
+    * vectors, equality deletes, column mapping and stats pruning of
+    * pushed filters all happen in the connector's readers: a library
+    * read and a SQL read of one version are the same scan. */
+  private def scan(spark: SparkSession, root: String, snap: Snapshot,
+                   entries: Option[Seq[FileEntry]] = None): DataFrame = {
+    // a zero-file snapshot is legal (TRUNCATE commits one); the schema
+    // sidecar keeps it well-typed
+    val schema = schemaOf(spark, root, snap).getOrElse(
+      throw new IllegalStateException(s"empty snapshot with no schema sidecar at $root"))
+    val table = new graft.storage.dsv2.SnapshotTableV2(root,
+      Some(entries.fold(snap)(es => snap.copy(entries = es))), schema)
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None))
   }
 
   /** Read the latest snapshot (snapshot-isolated: the file list is pinned
     * at resolution; later commits never affect this frame). */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val s = latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val (rg, fst) = eqSkipInputs(spark, root, s)
-    readEntries(spark, s.entries, tableSchema(spark, root, s.version),
-      s.eqDeletes, rg, fst, s.colEvents)
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    scan(spark, root, latest(spark, root).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $root")))
 
   /** Time travel: read any retained version — with THAT version's
     * schema, so a pre-evolution version shows its original columns. */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val s = snapshot(spark, root, v)
-    val (rg, fst) = eqSkipInputs(spark, root, s)
-    readEntries(spark, s.entries, tableSchema(spark, root, v), s.eqDeletes,
-      rg, fst, s.colEvents)
-  }
+  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
+    scan(spark, root, snapshot(spark, root, v))
 
   /** Create the table: stage `df`, commit as v1. Fails if the table
     * already has commits. `statsCols` names numeric columns to carry
@@ -2145,15 +1749,7 @@ object SnapshotTable {
         snap.entries.partition(e => e.tuple.isEmpty || !currentEra(e) ||
           touched.contains(e.tuple))
     }
-    val schema = tableSchema(spark, root, snap.version)
-    val base =
-      if (affected.nonEmpty) {
-        val (rg, fst) = eqSkipInputs(spark, root, snap)
-        readEntries(spark, affected, schema, snap.eqDeletes, rg, fst,
-          snap.colEvents)
-      }
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.getOrElse(readFiles(spark, snap.files).schema))
+    val base = scan(spark, root, snap, Some(affected))
     // a REAL table column with the tombstone marker's name would be
     // silently clobbered and then dropped — refuse loudly instead
     deleteCol.foreach(c => require(!base.columns.contains(c),
@@ -2276,8 +1872,8 @@ object SnapshotTable {
         s"expected base v$v but latest is v${snap.version} at $root")
     }
     txnGate(snap, txn, txnApp)
-    val baseSchema = tableSchema(spark, root, snap.version)
-      .getOrElse(readFiles(spark, snap.files).schema)
+    val baseSchema = schemaOf(spark, root, snap).getOrElse(
+      throw new IllegalStateException(s"empty snapshot with no schema sidecar at $root"))
     val nextSchema =
       if (mergeSchema) evolveSchema(baseSchema, df.schema)
       else {
@@ -2333,13 +1929,10 @@ object SnapshotTable {
         s"expected base v$v but latest is v${snap.version} at $root")
     }
     txnGate(snap, txn, txnApp)
-    val schema = tableSchema(spark, root, snap.version)
-    // DV-aware: compaction reads only LIVE rows, so merge-on-read
+    // compaction reads only LIVE rows, so merge-on-read and equality
     // deletes MATERIALIZE away here — the rewritten files carry no
     // vectors and the columnar fast path is restored
-    val (eqRg, eqFst) = eqSkipInputs(spark, root, snap)
-    val cur = readEntries(spark, snap.entries, schema, snap.eqDeletes,
-      eqRg, eqFst, snap.colEvents)
+    val cur = scan(spark, root, snap)
     val pspecs = snap.partitionSpecs
     if (pspecs.nonEmpty) {
       // a partitioned table's compaction bin-packs WITHIN partitions:
@@ -2427,9 +2020,7 @@ object SnapshotTable {
     val (vectored, clean) = snap.entries.partition(_.dv.nonEmpty)
     if (vectored.isEmpty) return snap.version
     val schema = tableSchema(spark, root, snap.version)
-    val (eqRg, eqFst) = eqSkipInputs(spark, root, snap)
-    val live = readEntries(spark, vectored, schema, snap.eqDeletes,
-      eqRg, eqFst, snap.colEvents)
+    val live = scan(spark, root, snap, Some(vectored))
     val files = writeData(spark, root, live, snap.partitionSpecs, snap.sortCols)
     val raw = statsRaw(spark, root, snap.version)
     val cleanNorm = clean.map(e => norm(e.path)).toSet

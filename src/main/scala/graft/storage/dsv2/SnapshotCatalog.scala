@@ -88,8 +88,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     val root = tablePath(ident).toString
     val snap = SnapshotTable.latest(spark, root)
       .getOrElse(throw new NoSuchTableException(ident))
-    val schema = SnapshotTable.tableSchema(spark, root, snap.version)
-      .orElse(snap.files.headOption.map(f => spark.read.parquet(f).schema))
+    val schema = SnapshotTable.schemaOf(spark, root, snap)
       .getOrElse(throw new IllegalStateException(
         s"table $ident has no schema sidecar and no data files"))
     new SnapshotTableV2(root, Some(snap), schema)
@@ -127,8 +126,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
 
   private def pinned(ident: Identifier, root: String,
                      snap: SnapshotTable.Snapshot): Table = {
-    val schema = SnapshotTable.tableSchema(spark, root, snap.version)
-      .orElse(snap.files.headOption.map(f => spark.read.parquet(f).schema))
+    val schema = SnapshotTable.schemaOf(spark, root, snap)
       .getOrElse(throw new IllegalStateException(
         s"table $ident v${snap.version} has no schema sidecar and no data files"))
     new SnapshotTableV2(root, Some(snap), schema)

@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.storage.{DeletionVectors, SnapshotTable}
 
-/** CHANGE-DATA-FEED reads through the connector — the typed row-level
-  * change stream [[SnapshotTable.changeFeed]] computes, as a first-class
-  * DSv2 table:
+/** CHANGE-DATA-FEED reads through the connector — THE typed row-level
+  * change stream, as a first-class DSv2 table ([[SnapshotTable.changeFeed]]
+  * is this read, pinned to a resolved window):
   *
   * {{{
   *   // batch: every change in (changesFrom, changesTo|latest]
@@ -29,8 +29,8 @@ import graft.storage.{DeletionVectors, SnapshotTable}
   * ('insert' | 'delete') + `_commit_version`. Inserts are appended
   * files per version; deletes are the merge-on-read vectors' NEWLY
   * deleted ordinals, read by emitting exactly those positions from the
-  * (immutable) data file. Copy-on-write rewrites refuse with guidance —
-  * same contract as the library feed. The streaming form checkpoints
+  * (immutable) data file. Copy-on-write rewrites refuse with guidance
+  * ([[SnapshotTable.changeSets]]). The streaming form checkpoints
   * version offsets (exactly-once), honours `maxVersionsPerTrigger`,
   * and terminates under `Trigger.AvailableNow` — identical admission
   * control to the plain snapshot source. */

@@ -35,9 +35,10 @@ import graft.storage.{SnapshotPartition, SnapshotTable}
   *     per-column [lo, hi] intervals and tested against the version's
   *     stats sidecar ([[SnapshotTable.stats]]); files whose min/max range
   *     cannot intersect are never opened (no false negatives: a file
-  *     without stats is kept). This is the same pruning
-  *     `SnapshotTable.readPruned` does, now firing from a plain
-  *     `.where(...)` on a plain `spark.read`.
+  *     without stats is kept). It fires from a plain `.where(...)` on a
+  *     plain `spark.read`, and on every library read, which is this same
+  *     scan; `SnapshotTable.readPruned` narrows the scan by the same
+  *     keep-rule ([[SnapshotTable.keepByStats]]).
   *  2. ROW-GROUP SKIPPING — the same intervals become a parquet
   *     `FilterPredicate`, so row groups inside kept files prune on the
   *     footer min/max statistics.
@@ -52,7 +53,10 @@ import graft.storage.{SnapshotPartition, SnapshotTable}
   *
   * Snapshot isolation: the manifest is resolved ONCE, when the table
   * object is built; the file list is pinned for the query's lifetime
-  * regardless of concurrent commits — same guarantee as the library API.
+  * regardless of concurrent commits. The library API's reads
+  * (`SnapshotTable.read`/`readVersion`, and the live-row reads of its
+  * merge, compaction and purge) are this scan over a snapshot they
+  * resolved themselves.
   *
   * Supported read schema: the flat analytic shapes this engine's tables
   * use — BOOLEAN/INT/LONG/FLOAT/DOUBLE/DATE/TIMESTAMP (INT96 and
@@ -206,9 +210,7 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister {
 
   private def schemaOf(options: CaseInsensitiveStringMap,
                        snap: SnapshotTable.Snapshot): Option[StructType] =
-    SnapshotTable.tableSchema(SparkSession.active, root(options), snap.version)
-      .orElse(snap.files.headOption.map(f =>
-        SparkSession.active.read.parquet(f).schema))
+    SnapshotTable.schemaOf(SparkSession.active, root(options), snap)
 
   /** Writes hand us the frame's schema directly (that is how the first
     * ever write can CREATE the table — there is nothing to infer yet). */
@@ -578,7 +580,10 @@ final class SnapshotScanBuilder(root: String, snap: SnapshotTable.Snapshot,
   private def buildRowScan(): Scan = {
     val spark = SparkSession.active
     val bounds = SnapshotFilters.intervals(accepted)
-    val st = SnapshotTable.stats(spark, root, snap.version)
+    // ONE read of the version's stats sidecar serves file pruning, the
+    // equality-delete key-range skip and the CBO column stats below
+    val statLines = SnapshotTable.statsRaw(spark, root, snap.version)
+    val st = statLines.map(l => (l.file, l.col) -> (l.mn, l.mx)).toMap
     val keep = SnapshotTable.keepByStats(partKept.map(_.path), st, bounds)
     // size statistics so the join planner sees a REAL sizeInBytes —
     // without reported statistics a V2 table defaults to "huge" and
@@ -636,7 +641,7 @@ final class SnapshotScanBuilder(root: String, snap: SnapshotTable.Snapshot,
     // for scans whose planned files carry vectors; compaction restores it.
     val colStats: Map[String, (Long, Long)] =
       if (dvByFile.nonEmpty || eqByFile.nonEmpty) Map.empty
-      else SnapshotTable.statsRaw(spark, root, snap.version)
+      else statLines
         .filter(l => keepSet(l.file)).groupBy(_.col).flatMap { case (c, ls) =>
           // complete coverage only: every planned file must carry a
           // sketch + null count for the column, else no hint

@@ -26,6 +26,12 @@ import org.apache.spark.sql.types._
   * writing anew). */
 object SnapshotParquetWrite {
 
+  /** Refuse, with this writer's message, a schema it cannot write — its
+    * type surface is exactly what the connector's readers decode. Every
+    * library staging write ([[graft.storage.SnapshotTable]]) shares it,
+    * so no path can commit a table that no read can open. */
+  def requireWritable(schema: StructType): Unit = message(schema)
+
   /** StructType → parquet MessageType (all fields optional, matching
     * Spark's writer convention). */
   def message(schema: StructType): MessageType = {

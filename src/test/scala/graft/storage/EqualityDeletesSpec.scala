@@ -48,8 +48,7 @@ class EqualityDeletesSpec extends AnyFunSuite {
     val day = java.time.LocalDate.of(2024, 3, 5)
     val internalDate = EqualityDeletes.canonical(DateType,
       day.toEpochDay.toInt)
-    // externalCanonical is private; go through the public agreement
-    // surface — java.sql.Date's epochDay must match the internal int
+    // java.sql.Date's epochDay must match the internal int
     assert(internalDate === day.toEpochDay.toString)
     val micros = 1709600000123456L
     assert(EqualityDeletes.canonical(TimestampType, micros) === micros.toString)

@@ -16,8 +16,8 @@ import graft.SparkSpec
   *    must never become unreadable).
   *  - full-file removals of eq-bearing files do not double-emit the
   *    already-retired rows.
-  *  - join keys for `_metadata.file_path` agree with Spark's
-  *    percent-encoded path form (roots containing spaces). */
+  *  - deletion vectors and stats still find their files on roots
+  *    whose paths Spark percent-encodes (roots containing spaces). */
 final class SnapshotCdfEpochSpec extends SparkSpec {
   import spark.implicits._
 
@@ -170,7 +170,7 @@ final class SnapshotCdfEpochSpec extends SparkSpec {
     val root = s"$base/sp ace/t"
     SnapshotTable.create(spark, root,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1))
-    // merge-on-read DELETE: the dv anti-join keys on _metadata.file_path
+    // merge-on-read DELETE: a deletion vector keyed by the file's path
     val tbl = "enc_" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(10)
     spark.sql(s"CREATE TABLE $tbl USING `graft-snapshot` " +
@@ -180,11 +180,11 @@ final class SnapshotCdfEpochSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val snap = SnapshotTable.latest(spark, root).get
     assert(snap.entries.exists(_.dv.nonEmpty), "expected a deletion vector")
-    // the LIBRARY read path joins dv positions by encoded file_path —
-    // a decoded key would silently resurrect the deleted row here
+    // the library read (the connector scan) must find the vector on this
+    // root — a path-form mismatch would silently resurrect the row
     assert(SnapshotTable.read(spark, root).select("k").collect()
       .map(_.getLong(0)).toSet === Set(1L, 3L))
-    // the CDF position join uses the same encoded key
+    // ...and the change feed attributes the delete
     val feed = SnapshotTable.changeFeed(spark, root, 1L)
       .select("k", "_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet

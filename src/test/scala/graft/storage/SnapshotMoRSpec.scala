@@ -67,7 +67,7 @@ class SnapshotMoRSpec extends SparkSpec {
         .head.getLong(0) === 0)
       assert(spark.sql(s"SELECT sum(k) FROM $tbl").head.getLong(0)
         === (0L until 2000L).sum - 10 - 500 - 1500)
-      // ...and through the library API (the _metadata anti-join path)
+      // ...and through the library API (the same connector scan)
       assert(SnapshotTable.read(spark, root).count() === 1997)
       assert(SnapshotTable.read(spark, root).where(col("k") === 500).count() === 0)
       // pre-delete version time-travels intact

@@ -351,16 +351,10 @@ class SnapshotSinkSpec extends SparkSpec {
       val viaConnector = spark.read.format("graft-snapshot").load(root)
         .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(viaConnector === expect)
-      // library read = codegen external renderer — must agree exactly
+      // library read = the same connector scan — must agree exactly
       val viaLibrary = SnapshotTable.read(spark, root)
         .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(viaLibrary === expect)
-      // ...and its key expression stays codegen: the escape chain is
-      // visible as builtins, with no scalar-UDF application
-      val plan = SnapshotTable.read(spark, root)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("%25") && !plan.contains("UDF("),
-        s"expected codegen key rendering:\n$plan")
     } finally q.stop()
   }
 

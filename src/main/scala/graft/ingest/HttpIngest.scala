@@ -35,6 +35,15 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * + stream reader" decomposition. */
 object HttpIngest {
 
+  // TCP_NODELAY on the bridge's connections: the JDK server writes a
+  // response's headers and body in two writes, and with Nagle on the
+  // body waits for the client's delayed ACK — about 40 ms per ack on a
+  // keep-alive connection. The JDK reads this property once, when its
+  // first server is created, so it is set here, before any; an explicit
+  // setting wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
   private val seq = new AtomicLong(0L)
 
   /** Per-JVM random component baked into every spool file name. The

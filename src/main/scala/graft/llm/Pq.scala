@@ -173,38 +173,22 @@ object Pq {
     val assigned = Similarity.assignCells(embeddings, centroids)
     import spark.implicits._
     // the four index artifacts are independent writes to disjoint paths —
-    // run them concurrently so each write's commit/straggler tail backfills
-    // with the next one's tasks (guide §2.6 concurrent-jobs pattern)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val writes = Seq(
-        scala.concurrent.Future {
-          encode(assigned, model).select("vec_id", "cell", "codes")
-            .write.mode("overwrite").partitionBy("cell").parquet(path)
-        },
-        scala.concurrent.Future {
-          assigned.select("vec_id", "cell", "embedding")
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").parquet(Similarity.sidecarPath(path))
-        },
-        scala.concurrent.Future {
-          centroids.toSeq.toDF("cell", "centroid")
-            .write.mode("overwrite").parquet(Similarity.centroidsPath(path))
-        },
-        scala.concurrent.Future {
-          model.codebooks.zipWithIndex.flatMap { case (cb, j) =>
-            cb.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
-          }.toSeq.toDF("j", "c", "centroid")
-            .write.mode("overwrite").parquet(pqModelPath(path))
-        })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
-        scala.concurrent.duration.Duration(30, "min"))
-      ()
-    } finally pool.shutdown()
+    // overlap them so each write's commit/straggler tail backfills with
+    // the next one's tasks
+    graft.core.Overlap.all(spark)(Seq(
+      () => encode(assigned, model).select("vec_id", "cell", "codes")
+        .write.mode("overwrite").partitionBy("cell").parquet(path),
+      () => assigned.select("vec_id", "cell", "embedding")
+        .repartitionByRange(col("vec_id"))
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite").parquet(Similarity.sidecarPath(path)),
+      () => centroids.toSeq.toDF("cell", "centroid")
+        .write.mode("overwrite").parquet(Similarity.centroidsPath(path)),
+      () => model.codebooks.zipWithIndex.flatMap { case (cb, j) =>
+          cb.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
+        }.toSeq.toDF("j", "c", "centroid")
+        .write.mode("overwrite").parquet(pqModelPath(path))))
+    ()
   }
 
   /** PQ-model sidecar location for an index at `path`. */

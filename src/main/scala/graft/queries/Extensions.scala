@@ -273,26 +273,19 @@ object Extensions {
       // index sidecars (PQ codebooks + coarse centroids) load once; the
       // three pruned ANN probes are independent two-job chains — overlap
       // them so one probe's straggler tail backfills with the next
-      // (guide §2.6 concurrent-jobs pattern; output order is pinned below)
+      // (results come back in probe order)
       val models = graft.llm.Pq.readIndexModels(s, path)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(probeIds.size)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val rows = try {
-        val futs = probeIds.map { pid =>
-          scala.concurrent.Future {
-            val ann = graft.llm.Pq.ivfPqTopKIndexed(s, path, models,
-                pvecs(pid), kTop = 10, nprobe = 4, rerank = 64)
-              .select("vec_id").collect().map(_.getLong(0)).toSet
-            val recall = (ann & exactAll(pid)).size / 10.0
-            // measured 0.8-0.9 at oracle SFs; 0.5 is the contract bound
-            (pid, ann.size, recall >= 0.5)
-          }
+      val rows = graft.core.Overlap.all(s,
+          scala.concurrent.duration.Duration(10, "min"))(probeIds.map { pid =>
+        () => {
+          val ann = graft.llm.Pq.ivfPqTopKIndexed(s, path, models,
+              pvecs(pid), kTop = 10, nprobe = 4, rerank = 64)
+            .select("vec_id").collect().map(_.getLong(0)).toSet
+          val recall = (ann & exactAll(pid)).size / 10.0
+          // measured 0.8-0.9 at oracle SFs; 0.5 is the contract bound
+          (pid, ann.size, recall >= 0.5)
         }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration(10, "min"))
-      } finally pool.shutdown()
+      })
       rows.toDF("probe_id", "n", "recall_ok")
     },
     // SemDeDup (Abbas et al. 2023) end-to-end under the bound-check
@@ -774,19 +767,13 @@ object Extensions {
       val ordT = s"graft_bkt_ord_$sfx"
       // the two bucketed layouts are independent writes — overlap them so
       // one write's commit/straggler tail backfills with the other's tasks
-      // (guide §2.6 concurrent-jobs pattern)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
-        scala.concurrent.Future(graft.operators.Layout.bucketedWrite(
+      graft.core.Overlap.all(s)(Seq(
+        () => graft.operators.Layout.bucketedWrite(
           s.table("lineitem").select("l_orderkey", "l_quantity", "l_extendedprice"),
-          "l_orderkey", 8, liT)),
-        scala.concurrent.Future(graft.operators.Layout.bucketedWrite(
+          "l_orderkey", 8, liT),
+        () => graft.operators.Layout.bucketedWrite(
           s.table("orders").select("o_orderkey", "o_orderpriority"),
-          "o_orderkey", 8, ordT)))),
-        scala.concurrent.duration.Duration(30, "min"))
-      finally pool.shutdown()
+          "o_orderkey", 8, ordT)))
       val li = s.table(liT)
       val ord = s.table(ordT)
       li.join(ord, li("l_orderkey") === ord("o_orderkey"))

@@ -650,13 +650,13 @@ object SnapshotPartition {
 }
 
 /** `graft_part_field('days', 0, c)` — [[SnapshotPartition.transformValue]]
-  * as a Catalyst expression, so the library write path can `partitionBy`
-  * on shadow canonical-string columns and read each file's tuple back
-  * off its directory name EXACTLY (expression-side and row-side writers
-  * share one code path by construction). Write-staging only — never on a
-  * read hot path, so `CodegenFallback` costs nothing that matters; NULL
-  * in, NULL out (Spark's writer then uses its default null-partition
-  * directory name, decoded back to the tuple's NULL token). */
+  * as a Catalyst expression: a row's partition field value, exactly as
+  * the task writer keys its tuple (both share one code path by
+  * construction). Library writes cluster by it so each tuple lands in one
+  * task, partition-scoped merges collect the tuples an update set
+  * touches, and partitioned compaction bins by it. Never on a read hot
+  * path, so `CodegenFallback` costs nothing that matters; NULL in, NULL
+  * out. */
 case class PartitionFieldExpr(
     transform: String, n: Int,
     child: org.apache.spark.sql.catalyst.expressions.Expression)

@@ -416,18 +416,19 @@ object SnapshotTable {
   private def listParquet(f: FileSystem, dir: Path): Seq[String] =
     listParquetStatuses(f, dir).map(_.getPath.toString)
 
-  /** Stage `df` as new immutable data files under `<root>/data/<uuid>`;
-    * returns their manifest entries (path + row/byte counts — bytes from
-    * the listing, rows from one hot footer read per just-written file).
-    * Nothing is visible until a commit.
+  /** Stage `df` as new immutable data files under `<root>/data/<uuid>`
+    * through the connector's task writer ([[dsv2.SnapshotWriterFactory]],
+    * the one SQL writes use): one writer per task attempt writes the
+    * task's rows, `commit` returns each file's manifest entry (path,
+    * row and byte counts, and on a partitioned table its exact tuple —
+    * the fanout writer keeps every file tuple-pure), and `abort` deletes
+    * the attempt's files. A zero-row task stages no file. Nothing is
+    * visible until a publish; a failed job leaves no staged files.
     *
-    * With `partitionCols` set the staging write goes through Spark's own
-    * dynamic-partition writer on SHADOW canonical-string columns
-    * (`graft_part_canonical` — the Iceberg shape, not the Hive one: the
-    * REAL columns stay in every data file, only the shadows become
-    * directories), which guarantees each file covers exactly ONE
-    * partition tuple; the tuple is decoded back off the directory
-    * segments into the manifest entry. */
+    * A partitioned write hash-clusters whole tuples first (Iceberg's
+    * hash distribution, same as the SQL write) so each tuple lands in
+    * ONE task → one file per tuple per write; callers that already
+    * clustered (compaction's explicit repartition) skip that shuffle. */
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
                         partitionSpecs: Seq[String] = Seq.empty,
                         sortCols: Seq[String] = Seq.empty,
@@ -435,93 +436,60 @@ object SnapshotTable {
     // every read of the table is a connector scan: refuse a column type
     // its readers cannot decode before any file is staged
     graft.storage.dsv2.SnapshotParquetWrite.requireWritable(df.schema)
-    val dir = new Path(new Path(root, "data"), java.util.UUID.randomUUID().toString)
-    val keys = partitionSpecs.map(s => SnapshotPartition.parseField(s).key)
-    if (partitionSpecs.isEmpty) {
-      // declared sort order: each task's rows sorted before staging, so
-      // every file covers a tight range of the sort columns
-      val out = if (sortCols.isEmpty) df
-        else df.sortWithinPartitions(sortCols.map(col): _*)
-      out.write.parquet(dir.toString)
-    } else {
-      graft.functions.expressions.GraftFunctions.register(df.sparkSession)
-      // the 'v' prefix keeps every non-null value out of the writer's
-      // null-directory namespace: a DATA value equal to Spark's default
-      // partition token (or the empty string, which Spark also writes as
-      // that token) must not decode back as SQL NULL — that would be a
-      // false-NEGATIVE prune, i.e. wrong results, not just a slow scan
-      val staged = partitionSpecs.foldLeft(df) { (d, spec) =>
-        val f = SnapshotPartition.parseField(spec)
-        d.withColumn(shadowName(f.key),
-          org.apache.spark.sql.functions.expr(
-            s"concat('v', graft_part_field('${f.transform}', ${f.n}, `${f.col}`))"))
-      }
-      // hash-cluster whole tuples over the shuffle width (Iceberg's
-      // hash distribution, same as the DSv2 write) so each partition
-      // value lands in ONE task → one file per tuple per write, not
-      // one per (task, tuple); callers that already clustered
-      // (compaction's explicit repartition) skip the extra shuffle
-      val clustered =
-        if (clusterToTuples)
-          staged.repartition(keys.map(k => col(shadowName(k))): _*)
-        else staged
-      // sorting by (shadows, sortCols) satisfies the dynamic-partition
-      // writer's required ordering as a PREFIX, so it skips its own
-      // sort and the secondary order reaches the files
-      val sorted = if (sortCols.isEmpty) clustered
-        else clustered.sortWithinPartitions(
-          (keys.map(shadowName) ++ sortCols).map(col): _*)
-      sorted.write.partitionBy(keys.map(shadowName): _*)
-        .parquet(dir.toString)
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    listParquetStatuses(fs(spark, root), dir).map { st =>
-      val rows =
-        try {
-          val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-          try fr.getRecordCount finally fr.close()
-        } catch { case _: Exception => -1L } // unknown, never wrong
-      FileEntry(st.getPath.toString, rows, st.getLen,
-        tuple = if (partitionSpecs.isEmpty) ""
-                else tupleFromPath(st.getPath, keys))
-    }
+    val keys = if (partitionSpecs.isEmpty) Nil else partitionKeys(spark, partitionSpecs)
+    val clustered =
+      if (keys.isEmpty || !clusterToTuples) df else df.repartition(keys: _*)
+    // each task's rows sorted by tuple (a sort that spills), so the task
+    // writer holds one open file at a time; then by the declared sort
+    // order, so every file covers a tight range of the sort columns
+    val order = keys ++ sortCols.map(col)
+    val out = if (order.isEmpty) clustered else clustered.sortWithinPartitions(order: _*)
+    val dir = stagingDir(spark, root)
+    val factory = new graft.storage.dsv2.SnapshotWriterFactory(dir.toString,
+      out.schema,
+      new graft.storage.dsv2.SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      graft.storage.dsv2.PartitionWriteSpec.of(out.schema, partitionSpecs),
+      tupleSorted = true)
+    val qe = out.queryExecution
+    try {
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some("graft-snapshot stage")) {
+        qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+          val w = factory.createWriter(pid,
+            org.apache.spark.TaskContext.get().taskAttemptId())
+          try {
+            while (rows.hasNext) w.write(rows.next())
+            Iterator.single(w.commit())
+          } catch { case t: Throwable =>
+            try w.abort() catch { case s: Throwable => t.addSuppressed(s) }
+            throw t
+          } finally w.close()
+        }.collect()
+      }.toSeq.flatMap {
+        case graft.storage.dsv2.SnapshotCommitMessage(files) => files
+        case other => throw new IllegalStateException(s"unexpected commit message $other")
+      }.sortBy(_.path)
+    } catch { case t: Throwable => fs(spark, root).delete(dir, true); throw t }
   }
 
-  private def shadowName(key: String): String = s"__gp_$key"
+  /** A fresh staging directory `<root>/data/<uuid>` for one write job,
+    * created and qualified on the driver so executors and the manifest
+    * agree on the path form. */
+  private[storage] def stagingDir(spark: SparkSession, root: String): Path = {
+    val f = fs(spark, root)
+    val p = f.makeQualified(
+      new Path(new Path(root, "data"), java.util.UUID.randomUUID().toString))
+    f.mkdirs(p)
+    p
+  }
 
-  /** Decode a staged file's partition tuple from its directory segments
-    * (`.../__gp_c=<hive-escaped canonical>/part-*.parquet`). Spark's
-    * writer Hive-escapes directory values and spells SQL NULL as its
-    * default-partition token; both are undone here and re-encoded in the
-    * manifest's own tuple format. A file missing a shadow segment (never
-    * produced by the write above) gets an empty tuple — kept forever,
-    * the no-false-negative degradation. */
-  private[storage] def tupleFromPath(file: Path, keys: Seq[String]): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val found = scala.collection.mutable.Map.empty[String, Option[String]]
-    var p = file.getParent
-    while (p != null && p.getName.startsWith("__gp_") && p.getName.contains('=')) {
-      val seg = p.getName
-      val i = seg.indexOf('=')
-      val raw = seg.substring(i + 1)
-      // the key side is Hive-escaped too (transform specs carry parens)
-      val key = ExternalCatalogUtils.unescapePathName(seg.substring(0, i))
-        .stripPrefix("__gp_")
-      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-        found(key) = None
-      else {
-        val un = ExternalCatalogUtils.unescapePathName(raw)
-        // every non-null shadow value carries the 'v' sentinel (see the
-        // staging write); anything else is malformed → no tuple
-        if (!un.startsWith("v")) return ""
-        found(key) = Some(un.substring(1))
-      }
-      p = p.getParent
-    }
-    if (keys.forall(found.contains))
-      SnapshotPartition.encodeTuple(keys, keys.map(found))
-    else ""
+  /** The partition tuple's field values as `graft_part_field`
+    * expressions — what partitioned writes cluster and scope by. */
+  private def partitionKeys(spark: SparkSession,
+                            specs: Seq[String]): Seq[org.apache.spark.sql.Column] = {
+    graft.functions.expressions.GraftFunctions.register(spark)
+    specs.map(SnapshotPartition.parseField).map(f =>
+      expr(s"graft_part_field('${f.transform}', ${f.n}, `${f.col}`)"))
   }
 
   /** Atomically publish `files` as version `v`. The staged manifest is
@@ -543,9 +511,9 @@ object SnapshotTable {
     * atomic-no-overwrite (returns false when the destination exists).
     * Object stores need a conditional-put LogStore, as every table
     * format documents. */
-  private[storage] def commit(spark: SparkSession, root: String, v: Long,
-                              entries0: Seq[FileEntry],
-                              meta0: Seq[String] = Seq.empty): Unit = {
+  private def commit(spark: SparkSession, root: String, v: Long,
+                     entries0: Seq[FileEntry], meta0: Seq[String],
+                     commitTime: Option[Long] = None): Unit = {
     require(meta0.forall(_.startsWith("#")),
       s"manifest metadata lines must be #-prefixed: $meta0")
     // stamp the ADD VERSION on entries that don't carry one (new files
@@ -582,6 +550,9 @@ object SnapshotTable {
     try out.write((meta ++ files).mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    // the commit time is the manifest's mtime; a hard link and a rename
+    // both keep the staged file's, so it is set before the flip
+    commitTime.foreach(f.setTimes(tmp, _, -1L))
     val local = f.getScheme == "file"
     val won =
       if (local) {
@@ -628,6 +599,37 @@ object SnapshotTable {
       throw new java.util.ConcurrentModificationException(
         s"lost the commit race for snapshot v$v at $root")
     }
+  }
+
+  /** THE publish step — every version of every table, library or SQL,
+    * becomes visible here, in one order: the manifest CAS ([[commit]],
+    * the commit point; throws `ConcurrentModificationException` when
+    * `v` is taken), then the stats sidecar, then the schema sidecar.
+    *
+    * Stats carry rule: with `carryStatsFrom = Some(b)`, every entry kept
+    * from version `b` keeps its stats lines there (null counts and NDV
+    * sketches included) and `newStats` adds the lines of the version's
+    * new files; with None, `newStats` is the whole sidecar (column
+    * rename/drop and table adoption pass rewritten lines). `schema`
+    * None publishes no schema sidecar (a base that had none).
+    * `commitTime` (epoch ms) stamps the manifest's mtime, the version's
+    * commit time; None means now. Retry and rebase loops, and cleanup
+    * after a lost CAS, stay with the callers. */
+  private[storage] def publish(spark: SparkSession, root: String, v: Long,
+                               entries: Seq[FileEntry], meta: Seq[String],
+                               schema: Option[org.apache.spark.sql.types.StructType],
+                               carryStatsFrom: Option[Long] = None,
+                               newStats: Seq[String] = Seq.empty,
+                               commitTime: Option[Long] = None): Unit = {
+    // read the carried lines before the commit point, so the window in
+    // which the new version has no sidecar stays as short as it can be
+    val carried = carryStatsFrom.toSeq.flatMap { b =>
+      val kept = entries.map(e => norm(e.path)).toSet
+      statsRaw(spark, root, b).filter(l => kept(l.file)).map(_.line).sorted
+    }
+    commit(spark, root, v, entries, meta, commitTime)
+    writeStats(spark, root, v, carried ++ newStats)
+    schema.foreach(writeSchema(spark, root, v, _))
   }
 
   /** Data line: `path<TAB>rows<TAB>bytes[<TAB>tuple[<TAB>dv<TAB>dvRows
@@ -691,6 +693,23 @@ object SnapshotTable {
           s"batch $id already committed for app '$txnApp' (high-water mark $hw)")
       }
     }
+  }
+
+  /** The base snapshot every library write resolves: the latest one
+    * (refused when the table does not exist), pinned to
+    * `expectedVersion` when the caller decided against a version
+    * (compare-and-swap), behind the exactly-once [[txnGate]]. */
+  private def writeBase(spark: SparkSession, root: String,
+                        expectedVersion: Option[Long], txn: Option[Long],
+                        txnApp: String): Snapshot = {
+    val snap = latest(spark, root).getOrElse(
+      throw new IllegalStateException(s"no table at $root — create() first"))
+    expectedVersion.foreach { v =>
+      if (v != snap.version) throw new java.util.ConcurrentModificationException(
+        s"expected base v$v but latest is v${snap.version} at $root")
+    }
+    txnGate(snap, txn, txnApp)
+    snap
   }
 
   private def cleanupOrphans(spark: SparkSession, root: String,
@@ -764,8 +783,8 @@ object SnapshotTable {
     * concurrent stats()/pruneFiles() is legal). A failed rename degrades
     * to no sidecar — the documented no-false-negative fallback (all
     * files kept). */
-  private[storage] def writeStats(spark: SparkSession, root: String, v: Long,
-                                  lines: Seq[String]): Unit = {
+  private def writeStats(spark: SparkSession, root: String, v: Long,
+                         lines: Seq[String]): Unit = {
     if (lines.isEmpty) return
     val f = fs(spark, root)
     val tmp = new Path(snapDir(root), s".tmp-stats-${java.util.UUID.randomUUID()}")
@@ -802,8 +821,8 @@ object SnapshotTable {
       st: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     nullable(st).asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  private[storage] def writeSchema(spark: SparkSession, root: String, v: Long,
-                                   schema: org.apache.spark.sql.types.StructType): Unit = {
+  private def writeSchema(spark: SparkSession, root: String, v: Long,
+                          schema: org.apache.spark.sql.types.StructType): Unit = {
     val f = fs(spark, root)
     val tmp = new Path(snapDir(root), s".tmp-schema-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, false)
@@ -954,13 +973,6 @@ object SnapshotTable {
   def stats(spark: SparkSession, root: String,
             v: Long): Map[(String, String), (Double, Double)] =
     statsFull(spark, root, v).view.mapValues(t => (t._1, t._2)).toMap
-
-  /** The version's stats sidecar re-serialized as lines (for carrying
-    * into a successor version's sidecar) — null counts AND the NDV
-    * sketch field preserved. */
-  private[storage] def statsLines(spark: SparkSession, root: String,
-                                  v: Long): Seq[String] =
-    statsRaw(spark, root, v).map(_.line).sorted
 
   /** THE one keep-rule for file-level skipping — every pruning surface
     * (library pruneFiles/readPruned, the DSv2 scan) goes through it: a
@@ -1453,16 +1465,13 @@ object SnapshotTable {
       f.delete(manifestPath(newRoot, v), false)
       require(f.rename(tmp, manifestPath(newRoot, v)),
         s"manifest rebase failed for v$v at $newRoot")
-      val lines = statsLines(spark, newRoot, v)
+      // the one in-place sidecar rewrite: a rebase re-keys a published
+      // version rather than publishing a new one
+      val lines = statsRaw(spark, newRoot, v)
       if (lines.nonEmpty) {
-        val rebased = lines.map { l =>
-          l.split("\t", 2) match {
-            case Array(file, rest) => s"${norm(reanchor(file))}\t$rest"
-            case _ => l
-          }
-        }
         f.delete(statsPath(newRoot, v), false)
-        writeStats(spark, newRoot, v, rebased)
+        writeStats(spark, newRoot, v,
+          lines.map(l => l.copy(file = norm(reanchor(l.file))).line).sorted)
       }
     }
   }
@@ -1521,9 +1530,8 @@ object SnapshotTable {
       }
       val next = cur.version + 1
       try {
-        commit(spark, targetRoot, next, entries, defMeta ++ txnLines)
-        writeStats(spark, targetRoot, next, stats)
-        stageSchema.foreach(writeSchema(spark, targetRoot, next, _))
+        publish(spark, targetRoot, next, entries, defMeta ++ txnLines,
+          stageSchema, newStats = stats)
         return next
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1650,11 +1658,10 @@ object SnapshotTable {
     val files = writeData(spark, root, df, partitionBy, sortBy)
     val st = collectStats(spark, files.map(_.path), statsCols)
     try {
-      commit(spark, root, 1L, files,
+      publish(spark, root, 1L, files,
         partitionMeta(partitionBy) ++ sortMeta(sortBy) ++
-          nextMeta(None, txn, txnApp))
-      writeStats(spark, root, 1L, st)
-      writeSchema(spark, root, 1L, df.schema)
+          nextMeta(None, txn, txnApp),
+        Some(df.schema), newStats = st)
       1L
     } catch { case e: java.util.ConcurrentModificationException =>
       cleanupOrphans(spark, root, files.map(_.path)); throw e }
@@ -1702,13 +1709,7 @@ object SnapshotTable {
     require(keyCols.nonEmpty, "keyCols must not be empty")
     deleteCol.foreach(c => require(updates.columns.contains(c),
       s"deleteCol '$c' not in updates columns ${updates.columns.mkString(",")}"))
-    val snap = latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no table at $root — create() first"))
-    expectedVersion.foreach { v =>
-      if (v != snap.version) throw new java.util.ConcurrentModificationException(
-        s"expected base v$v but latest is v${snap.version} at $root")
-    }
-    txnGate(snap, txn, txnApp)
+    val snap = writeBase(spark, root, expectedVersion, txn, txnApp)
 
     // PARTITION-SCOPED copy-on-write: when every partition SOURCE column
     // is part of the merge KEY, a key's partition is a function of the
@@ -1724,13 +1725,10 @@ object SnapshotTable {
     val touchedTuples: Option[Set[String]] =
       if (!scoped) None
       else {
-        graft.functions.expressions.GraftFunctions.register(spark)
-        val tupleCols = pfields.map(f =>
-          org.apache.spark.sql.functions.expr(
-            s"graft_part_field('${f.transform}', ${f.n}, `${f.col}`)"))
         // distinct tuples of the UPDATE set — bounded by the number of
         // partitions the updates touch, a metadata-scale collect
-        Some(updates.select(tupleCols: _*).distinct().collect()
+        Some(updates.select(partitionKeys(spark, snap.partitionSpecs): _*)
+          .distinct().collect()
           .map(r => SnapshotPartition.encodeTuple(pfields.map(_.key),
             pfields.indices.map(i => Option(r.getString(i)))))
           .toSet)
@@ -1818,14 +1816,11 @@ object SnapshotTable {
     while (true) {
       val retainedNow =
         commitBase.entries.filterNot(e => affectedNorm(norm(e.path)))
-      val st = statsLines(spark, root, commitBase.version)
-        .filter(l => !affectedNorm(l.split("\t", 3)(0))) ++ freshStats
       val next = commitBase.version + 1
       try {
-        commit(spark, root, next, retainedNow ++ files,
-          nextMeta(Some(commitBase), txn, txnApp))
-        writeStats(spark, root, next, st)
-        writeSchema(spark, root, next, out.schema)
+        publish(spark, root, next, retainedNow ++ files,
+          nextMeta(Some(commitBase), txn, txnApp), Some(out.schema),
+          carryStatsFrom = Some(commitBase.version), newStats = freshStats)
         return next
       } catch { case e: java.util.ConcurrentModificationException =>
         val winner = latest(spark, root)
@@ -1865,13 +1860,7 @@ object SnapshotTable {
              mergeSchema: Boolean = false,
              txn: Option[Long] = None,
              txnApp: String = ""): Long = {
-    val snap = latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no table at $root — create() first"))
-    expectedVersion.foreach { v =>
-      if (v != snap.version) throw new java.util.ConcurrentModificationException(
-        s"expected base v$v but latest is v${snap.version} at $root")
-    }
-    txnGate(snap, txn, txnApp)
+    val snap = writeBase(spark, root, expectedVersion, txn, txnApp)
     val baseSchema = schemaOf(spark, root, snap).getOrElse(
       throw new IllegalStateException(s"empty snapshot with no schema sidecar at $root"))
     val nextSchema =
@@ -1884,14 +1873,12 @@ object SnapshotTable {
         baseSchema
       }
     val files = writeData(spark, root, df, snap.partitionSpecs, snap.sortCols)
-    val st = statsLines(spark, root, snap.version) ++
-      collectStats(spark, files.map(_.path), statsCols)
+    val st = collectStats(spark, files.map(_.path), statsCols)
     val next = snap.version + 1
     try {
-      commit(spark, root, next, snap.entries ++ files,
-        nextMeta(Some(snap), txn, txnApp))
-      writeStats(spark, root, next, st)
-      writeSchema(spark, root, next, nextSchema)
+      publish(spark, root, next, snap.entries ++ files,
+        nextMeta(Some(snap), txn, txnApp), Some(nextSchema),
+        carryStatsFrom = Some(snap.version), newStats = st)
       next
     } catch { case e: java.util.ConcurrentModificationException =>
       cleanupOrphans(spark, root, files.map(_.path)); throw e }
@@ -1922,13 +1909,7 @@ object SnapshotTable {
       "clusterBy and zorderBy are mutually exclusive")
     require(zorderBy.isEmpty || zorderBy.length == 2,
       s"zorderBy interleaves exactly 2 columns, got $zorderBy")
-    val snap = latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no table at $root — create() first"))
-    expectedVersion.foreach { v =>
-      if (v != snap.version) throw new java.util.ConcurrentModificationException(
-        s"expected base v$v but latest is v${snap.version} at $root")
-    }
-    txnGate(snap, txn, txnApp)
+    val snap = writeBase(spark, root, expectedVersion, txn, txnApp)
     // compaction reads only LIVE rows, so merge-on-read and equality
     // deletes MATERIALIZE away here — the rewritten files carry no
     // vectors and the columnar fast path is restored
@@ -1946,19 +1927,14 @@ object SnapshotTable {
       require(clusterBy.isEmpty && zorderBy.isEmpty,
         "clusterBy/zorderBy compaction is not supported on a partitioned " +
           s"table (partitioned by ${pspecs.mkString(",")})")
-      graft.functions.expressions.GraftFunctions.register(spark)
-      val keyExprs = snap.partitionFields.map(f =>
-        org.apache.spark.sql.functions.expr(
-          s"graft_part_field('${f.transform}', ${f.n}, `${f.col}`)"))
-      val out = cur.repartition(targetFiles, keyExprs: _*)
+      val out = cur.repartition(targetFiles, partitionKeys(spark, pspecs): _*)
       val files = writeData(spark, root, out, pspecs, snap.sortCols,
         clusterToTuples = false) // already clustered, keep targetFiles tasks
       val st = collectStats(spark, files.map(_.path), statsCols)
       val next = snap.version + 1
       try {
-        commit(spark, root, next, files, nextMeta(Some(snap), txn, txnApp))
-        writeStats(spark, root, next, st)
-        writeSchema(spark, root, next, out.schema)
+        publish(spark, root, next, files, nextMeta(Some(snap), txn, txnApp),
+          Some(out.schema), newStats = st)
         return next
       } catch { case e: java.util.ConcurrentModificationException =>
         cleanupOrphans(spark, root, files.map(_.path)); throw e }
@@ -1990,11 +1966,10 @@ object SnapshotTable {
     val st = collectStats(spark, files.map(_.path), statsCols)
     val next = snap.version + 1
     try {
-      commit(spark, root, next, files, nextMeta(Some(snap), txn, txnApp))
-      writeStats(spark, root, next, st)
       // compaction materializes the evolved schema into every file, and
       // the new version keeps carrying it
-      writeSchema(spark, root, next, out.schema)
+      publish(spark, root, next, files, nextMeta(Some(snap), txn, txnApp),
+        Some(out.schema), newStats = st)
       next
     } catch { case e: java.util.ConcurrentModificationException =>
       cleanupOrphans(spark, root, files.map(_.path)); throw e }
@@ -2011,26 +1986,18 @@ object SnapshotTable {
     * (no junk versions). */
   def purgeDeletes(spark: SparkSession, root: String,
                    expectedVersion: Option[Long] = None): Long = {
-    val snap = latest(spark, root).getOrElse(
-      throw new IllegalStateException(s"no table at $root — create() first"))
-    expectedVersion.foreach { v =>
-      if (v != snap.version) throw new java.util.ConcurrentModificationException(
-        s"expected base v$v but latest is v${snap.version} at $root")
-    }
+    val snap = writeBase(spark, root, expectedVersion, None, "")
     val (vectored, clean) = snap.entries.partition(_.dv.nonEmpty)
     if (vectored.isEmpty) return snap.version
     val schema = tableSchema(spark, root, snap.version)
     val live = scan(spark, root, snap, Some(vectored))
     val files = writeData(spark, root, live, snap.partitionSpecs, snap.sortCols)
-    val raw = statsRaw(spark, root, snap.version)
-    val cleanNorm = clean.map(e => norm(e.path)).toSet
-    val st = raw.filter(l => cleanNorm(l.file)).map(_.line) ++
-      collectStats(spark, files.map(_.path), raw.map(_.col).distinct.sorted)
+    val st = collectStats(spark, files.map(_.path),
+      statsRaw(spark, root, snap.version).map(_.col).distinct.sorted)
     val next = snap.version + 1
     try {
-      commit(spark, root, next, clean ++ files, nextMeta(Some(snap), None))
-      writeStats(spark, root, next, st)
-      schema.foreach(writeSchema(spark, root, next, _))
+      publish(spark, root, next, clean ++ files, nextMeta(Some(snap), None),
+        schema, carryStatsFrom = Some(snap.version), newStats = st)
       next
     } catch { case e: java.util.ConcurrentModificationException =>
       cleanupOrphans(spark, root, files.map(_.path)); throw e }
@@ -2104,10 +2071,9 @@ object SnapshotTable {
         s"partition spec evolution needs a schema sidecar at $root"))
     validatePartitionSpecs(specs, schema)
     val next = snap.version + 1
-    commit(spark, root, next, snap.entries,
-      nextMeta(Some(snap), None, partitionOverride = Some(specs)))
-    writeStats(spark, root, next, statsLines(spark, root, snap.version))
-    writeSchema(spark, root, next, schema)
+    publish(spark, root, next, snap.entries,
+      nextMeta(Some(snap), None, partitionOverride = Some(specs)), Some(schema),
+      carryStatsFrom = Some(snap.version))
     next
   }
 
@@ -2370,12 +2336,13 @@ object SnapshotTable {
     fs(spark, root).exists(snapDir(branchRoot(root, name)))
 
   /** PUBLISH (fast-forward main onto the branch): every branch version
-    * above the fork renames into main's `_snapshots` — manifest FIRST
-    * (the rename is the atomic claim of that version number; a main
-    * writer that advanced mid-publish makes it fail and the publish
-    * stops at a consistent prefix), sidecars right after (a reader in
-    * that instant degrades to footer-inferred schema / no stats, the
-    * documented torn-sidecar fallback). Refused outright when main
+    * above the fork republishes as the same version of main through
+    * [[publish]] — the manifest CAS is the atomic claim of that version
+    * number (a main writer that advanced mid-publish makes it fail and
+    * the publish stops at a consistent prefix), the branch version's
+    * stats and schema sidecars right after. Each published version keeps
+    * the commit time it had on the branch, so TIMESTAMP AS OF and vacuum
+    * retention see it as committed then. Refused outright when main
     * already advanced past the fork — recreate the branch and replay. */
   def publishBranch(spark: SparkSession, root: String, name: String): Long = {
     val br = branchRoot(root, name)
@@ -2390,13 +2357,15 @@ object SnapshotTable {
         "head and replay its commits")
     val toMove = vs.filter(_ > base).sorted
     toMove.foreach { v =>
-      if (f.exists(manifestPath(root, v)) ||
-          !f.rename(manifestPath(br, v), manifestPath(root, v)))
+      val s = snapshot(spark, br, v)
+      try publish(spark, root, v, s.entries, s.meta, tableSchema(spark, br, v),
+        newStats = statsRaw(spark, br, v).map(_.line),
+        commitTime = Some(f.getFileStatus(manifestPath(br, v)).getModificationTime))
+      catch { case _: java.util.ConcurrentModificationException =>
         throw new java.util.ConcurrentModificationException(
           s"publish of branch '$name' lost a race at v$v (main advanced " +
             s"mid-publish); versions below v$v published consistently")
-      if (f.exists(statsPath(br, v))) f.rename(statsPath(br, v), statsPath(root, v))
-      if (f.exists(schemaPath(br, v))) f.rename(schemaPath(br, v), schemaPath(root, v))
+      }
     }
     // retire the branch metadata (its DATA files stay — published
     // manifests reference them absolutely; compaction folds them in)
@@ -2491,15 +2460,14 @@ object SnapshotTable {
     val i = schema.fieldIndex(oldName)
     val nextSchema = org.apache.spark.sql.types.StructType(
       schema.fields.updated(i, schema.fields(i).copy(name = newName)))
-    commit(spark, root, next, snap.entries,
-      nextMeta(Some(snap), None) :+ s"#colmap $next\trename\t$oldName\t$newName")
     // re-key the carried stats so pruning/NDV on the renamed column
     // keeps working for pre-rename files
-    writeStats(spark, root, next,
-      statsRaw(spark, root, snap.version)
+    publish(spark, root, next, snap.entries,
+      nextMeta(Some(snap), None) :+ s"#colmap $next\trename\t$oldName\t$newName",
+      Some(nextSchema),
+      newStats = statsRaw(spark, root, snap.version)
         .map(l => if (l.col == oldName) l.copy(col = newName) else l)
         .map(_.line).sorted)
-    writeSchema(spark, root, next, nextSchema)
     next
   }
 
@@ -2515,12 +2483,11 @@ object SnapshotTable {
     val next = snap.version + 1
     val nextSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == name))
-    commit(spark, root, next, snap.entries,
-      nextMeta(Some(snap), None) :+ s"#colmap $next\tdrop\t$name")
-    writeStats(spark, root, next,
-      statsRaw(spark, root, snap.version).filterNot(_.col == name)
+    publish(spark, root, next, snap.entries,
+      nextMeta(Some(snap), None) :+ s"#colmap $next\tdrop\t$name",
+      Some(nextSchema),
+      newStats = statsRaw(spark, root, snap.version).filterNot(_.col == name)
         .map(_.line).sorted)
-    writeSchema(spark, root, next, nextSchema)
     next
   }
 
@@ -2545,9 +2512,8 @@ object SnapshotTable {
         case ("", id) => s"#txn $id"
         case (app, id) => s"#txn $app $id"
       }
-    commit(spark, root, next, snap.entries, meta)
-    writeStats(spark, root, next, statsLines(spark, root, v))
-    tableSchema(spark, root, v).foreach(writeSchema(spark, root, next, _))
+    publish(spark, root, next, snap.entries, meta, tableSchema(spark, root, v),
+      carryStatsFrom = Some(v))
     next
   }
 

@@ -260,8 +260,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     val meta = SnapshotTable.partitionMeta(pspecs) ++
       SnapshotTable.sortMeta(sortBy) ++
       SnapshotTable.rowLevelMeta(rlModes)
-    SnapshotTable.commit(spark, root, 1L, Seq.empty, meta)
-    SnapshotTable.writeSchema(spark, root, 1L, info.schema())
+    SnapshotTable.publish(spark, root, 1L, Seq.empty, meta, Some(info.schema()))
     new SnapshotTableV2(root, Some(SnapshotTable.Snapshot(1L, Seq.empty, meta)),
       SnapshotTable.nullableSchema(info.schema()))
   }
@@ -375,12 +374,10 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     }
     newSpecs.foreach(SnapshotTable.validatePartitionSpecs(_, next))
     val v = snap.version + 1
-    SnapshotTable.commit(spark, root, v, snap.entries,
+    SnapshotTable.publish(spark, root, v, snap.entries,
       SnapshotTable.nextMeta(Some(snap), None, rowLevelOverride = Some(modes),
-        partitionOverride = newSpecs))
-    SnapshotTable.writeStats(spark, root, v,
-      SnapshotTable.statsLines(spark, root, snap.version))
-    SnapshotTable.writeSchema(spark, root, v, next)
+        partitionOverride = newSpecs),
+      Some(next), carryStatsFrom = Some(snap.version))
     loadTable(ident)
   }
 

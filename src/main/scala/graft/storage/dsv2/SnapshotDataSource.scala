@@ -1426,17 +1426,8 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
                                rowLevelModes: Map[String, String] = Map.empty)
   extends BatchWrite {
 
-  // one staging dir per write job, qualified driver-side so executors
-  // and the manifest agree on the path form
-  private val stagingDir: String = {
-    val spark = SparkSession.active
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "data"),
-      java.util.UUID.randomUUID().toString)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(p)
-    f.makeQualified(p).toString
-  }
+  private val stagingDir: String =
+    SnapshotTable.stagingDir(SparkSession.active, root).toString
 
   private val conf = new SerializableHadoopConf(
     SparkSession.active.sessionState.newHadoopConf())
@@ -1473,9 +1464,11 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
     var done = false
     while (!done) {
       val cur = SnapshotTable.latest(spark, root)
-      val (v, all, lines, nextSchema) = (cur, overwrite) match {
-        case (None, _) => (1L, files, fresh, schema)
-        case (Some(s), true) => (s.version + 1, files, fresh, schema)
+      // kept base entries keep their stats lines (the publish step's
+      // carry rule); the staged files add `fresh`
+      val (v, all, nextSchema) = (cur, overwrite) match {
+        case (None, _) => (1L, files, schema)
+        case (Some(s), true) => (s.version + 1, files, schema)
         case (Some(s), false) if byFilter.isDefined =>
           // FILTER-scoped overwrite: each base file's membership must be
           // PROVEN from its exact tuple — all conjuncts tri-state True
@@ -1502,9 +1495,6 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
                 s"decidable from ${e.path}'s partition tuple '${e.tuple}' — " +
                 "use DELETE FROM + INSERT INTO for row-level overwrites")
           }.flatten
-          val retainedNorm = retained.map(e => SnapshotTable.norm(e.path)).toSet
-          val keptLines = SnapshotTable.statsLines(spark, root, s.version)
-            .filter(l => retainedNorm(l.split("\t", 3)(0)))
           val base = SnapshotTable.tableSchema(spark, root, s.version)
             .getOrElse(schema)
           require(SnapshotTable.nullableSchema(schema).fields
@@ -1513,11 +1503,11 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
               .map(f => (f.name, f.dataType)).toSeq,
             s"overwrite schema ${schema.simpleString} != table schema " +
               base.simpleString)
-          (s.version + 1, retained ++ files, keptLines ++ fresh, base)
+          (s.version + 1, retained ++ files, base)
         case (Some(s), false) if dynamic =>
           // DYNAMIC partition overwrite: the staged files' exact tuples
           // name the partitions being replaced; every other file is
-          // retained verbatim with its stats lines — INSERT OVERWRITE
+          // retained verbatim — INSERT OVERWRITE
           // costs O(touched partitions), never O(table)
           val touched = files.map(_.tuple).toSet
           require(!touched.contains(""),
@@ -1551,9 +1541,6 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
                   "files to the current spec first")
             }
           val retained = s.entries.filterNot(e => touched.contains(e.tuple))
-          val retainedNorm = retained.map(e => SnapshotTable.norm(e.path)).toSet
-          val keptLines = SnapshotTable.statsLines(spark, root, s.version)
-            .filter(l => retainedNorm(l.split("\t", 3)(0)))
           val base = SnapshotTable.tableSchema(spark, root, s.version)
             .getOrElse(schema)
           require(SnapshotTable.nullableSchema(schema).fields
@@ -1562,7 +1549,7 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
               .map(f => (f.name, f.dataType)).toSeq,
             s"dynamic overwrite schema ${schema.simpleString} != table " +
               s"schema ${base.simpleString}")
-          (s.version + 1, retained ++ files, keptLines ++ fresh, base)
+          (s.version + 1, retained ++ files, base)
         case (Some(s), false) =>
           // append-side schema contract mirrors SnapshotTable.append:
           // same columns, or option mergeSchema=true for add-column
@@ -1580,16 +1567,14 @@ final class SnapshotBatchWrite(root: String, schema: StructType,
                   "for add-column evolution")
               base
             }
-          (s.version + 1, s.entries ++ files,
-            SnapshotTable.statsLines(spark, root, s.version) ++ fresh, ns)
+          (s.version + 1, s.entries ++ files, ns)
       }
       try {
         // maintenance commits carry the streaming sink's ledger forward
-        SnapshotTable.commit(spark, root, v, all,
+        SnapshotTable.publish(spark, root, v, all,
           (if (cur.isEmpty) createMeta else Seq.empty) ++
-            SnapshotTable.nextMeta(cur, None))
-        SnapshotTable.writeStats(spark, root, v, lines)
-        SnapshotTable.writeSchema(spark, root, v, nextSchema)
+            SnapshotTable.nextMeta(cur, None),
+          Some(nextSchema), carryStatsFrom = cur.map(_.version), newStats = fresh)
         done = true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1641,15 +1626,8 @@ final class SnapshotStreamingWrite(root: String, schema: StructType,
                                    maxUpsertDebt: Option[Double] = None)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private val stagingDir: String = {
-    val spark = SparkSession.active
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "data"),
-      java.util.UUID.randomUUID().toString)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(p)
-    f.makeQualified(p).toString
-  }
+  private val stagingDir: String =
+    SnapshotTable.stagingDir(SparkSession.active, root).toString
 
   private val conf = new SerializableHadoopConf(
     SparkSession.active.sessionState.newHadoopConf())
@@ -1721,9 +1699,9 @@ final class SnapshotStreamingWrite(root: String, schema: StructType,
         }
       val fresh = SnapshotTable.collectStats(spark, files.map(_.path), statsCols)
       try {
-        val (v, all, lines, nextSchema) = (cur, overwrite) match {
-          case (None, _) => (1L, files, fresh, schema)
-          case (Some(s), true) => (s.version + 1, files, fresh, schema)
+        val (v, all, nextSchema) = (cur, overwrite) match {
+          case (None, _) => (1L, files, schema)
+          case (Some(s), true) => (s.version + 1, files, schema)
           case (Some(s), false) =>
             val base = SnapshotTable.tableSchema(spark, root, s.version)
               .getOrElse(spark.read.parquet(s.files.head).schema)
@@ -1739,8 +1717,7 @@ final class SnapshotStreamingWrite(root: String, schema: StructType,
                     "for add-column/widening evolution")
                 base
               }
-            (s.version + 1, s.entries ++ files,
-              SnapshotTable.statsLines(spark, root, s.version) ++ fresh, ns)
+            (s.version + 1, s.entries ++ files, ns)
         }
         val eqMeta = eqSidecars.map { case (p, n, range) =>
           SnapshotTable.eqDeleteLine(p, v, n, upsertKeys, range)
@@ -1773,13 +1750,12 @@ final class SnapshotStreamingWrite(root: String, schema: StructType,
                 f"($keysInForce keys in force / $live live rows) — " +
                 "compact soon to keep equality-delete probe state bounded")
         }
-        SnapshotTable.commit(spark, root, v, all,
+        SnapshotTable.publish(spark, root, v, all,
           (if (cur.isEmpty)
             SnapshotTable.partitionMeta(part.map(_.specs).getOrElse(Seq.empty))
           else Seq.empty) ++
-            SnapshotTable.nextMeta(cur, Some(epochId), appId) ++ eqMeta)
-        SnapshotTable.writeStats(spark, root, v, lines)
-        SnapshotTable.writeSchema(spark, root, v, nextSchema)
+            SnapshotTable.nextMeta(cur, Some(epochId), appId) ++ eqMeta,
+          Some(nextSchema), carryStatsFrom = cur.map(_.version), newStats = fresh)
         return
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1917,14 +1893,16 @@ final class SnapshotUpsertDataWriter(inner: DataWriter[InternalRow],
 
 final class SnapshotWriterFactory(stagingDir: String, schema: StructType,
                                   conf: SerializableHadoopConf,
-                                  part: Option[PartitionWriteSpec] = None)
+                                  part: Option[PartitionWriteSpec] = None,
+                                  tupleSorted: Boolean = false)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     // taskId makes retried/speculative attempts write DISTINCT files;
     // only the committing attempt's path reaches the driver
     val prefix = f"$stagingDir%s/part-$partitionId%05d-$taskId%d"
     part match {
-      case Some(spec) => new SnapshotFanoutDataWriter(prefix, schema, conf.value, spec)
+      case Some(spec) =>
+        new SnapshotFanoutDataWriter(prefix, schema, conf.value, spec, tupleSorted)
       case None => new SnapshotDataWriter(s"$prefix.parquet", schema, conf.value)
     }
   }
@@ -1936,44 +1914,62 @@ final class SnapshotWriterFactory(stagingDir: String, schema: StructType,
   * tuple reaches exactly one task, so a write emits one file per tuple;
   * without it (e.g. a row-level rewrite whose planner chose another
   * distribution) the output is merely more fragmented — never
-  * tuple-impure. Files open lazily per tuple and close in commit();
-  * tasks hold one open writer per DISTINCT tuple they see, which the
-  * clustering keeps small. */
+  * tuple-impure. Files open lazily per tuple. Unsorted input keeps one
+  * open writer per DISTINCT tuple the task sees until commit(), which
+  * the clustering keeps small; with `tupleSorted` (each task's rows
+  * arrive sorted by tuple, as library writes sort them) a tuple change
+  * closes the open file, so the task holds one writer at a time however
+  * many tuples it covers. */
 final class SnapshotFanoutDataWriter(prefix: String, schema: StructType,
                                      conf: Configuration,
-                                     spec: PartitionWriteSpec)
+                                     spec: PartitionWriteSpec,
+                                     tupleSorted: Boolean = false)
   extends DataWriter[InternalRow] {
 
   private final class Slot(val file: String) {
     val writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] =
       SnapshotParquetWrite.open(file, schema, conf)
     var rows = 0L
+    def finish(tuple: String): SnapshotTable.FileEntry = {
+      writer.close()
+      val p = new org.apache.hadoop.fs.Path(file)
+      val bytes =
+        try p.getFileSystem(conf).getFileStatus(p).getLen
+        catch { case _: java.io.IOException => -1L }
+      SnapshotTable.FileEntry(file, rows, bytes, tuple)
+    }
   }
   private val slots =
     scala.collection.mutable.LinkedHashMap.empty[String, Slot]
+  private val closed = scala.collection.mutable.ArrayBuffer.empty[SnapshotTable.FileEntry]
+  private var opened = 0
 
   override def write(record: InternalRow): Unit = {
     val tuple = spec.tupleOf(record)
-    val slot = slots.getOrElseUpdate(tuple,
-      new Slot(s"$prefix-t${slots.size}.parquet"))
+    val slot = slots.getOrElse(tuple, {
+      if (tupleSorted) { // sorted input: the open tuple is done
+        slots.foreach { case (t, s) => closed += s.finish(t) }
+        slots.clear()
+      }
+      val s = new Slot(s"$prefix-t$opened.parquet")
+      opened += 1
+      slots(tuple) = s
+      s
+    })
     slot.writer.write(record)
     slot.rows += 1
   }
 
   override def commit(): WriterCommitMessage =
-    SnapshotCommitMessage(slots.toSeq.map { case (tuple, slot) =>
-      slot.writer.close()
-      val p = new org.apache.hadoop.fs.Path(slot.file)
-      val bytes =
-        try p.getFileSystem(conf).getFileStatus(p).getLen
-        catch { case _: java.io.IOException => -1L }
-      SnapshotTable.FileEntry(slot.file, slot.rows, bytes, tuple)
-    })
+    SnapshotCommitMessage(closed.toSeq ++
+      slots.toSeq.map { case (tuple, slot) => slot.finish(tuple) })
 
-  override def abort(): Unit = slots.values.foreach { slot =>
-    slot.writer.close()
-    val p = new org.apache.hadoop.fs.Path(slot.file)
-    p.getFileSystem(conf).delete(p, false)
+  override def abort(): Unit = {
+    slots.values.foreach(_.writer.close())
+    (closed.map(_.path) ++ slots.values.map(_.file)).foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).delete(p, false)
+    }
   }
 
   override def close(): Unit = ()

@@ -190,19 +190,12 @@ final class SnapshotDeltaBatchWrite(root: String,
   // after commit, vacuumed if the driver dies first)
   private val (stagingDir, updStagingDir, partialDir) = {
     val spark = SparkSession.active
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "data"),
-      java.util.UUID.randomUUID().toString)
-    val u = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "data"),
-      java.util.UUID.randomUUID().toString)
     val p = new org.apache.hadoop.fs.Path(DeletionVectors.dir(root),
       s"partial-${java.util.UUID.randomUUID()}")
-    val f = d.getFileSystem(hconf)
-    f.mkdirs(d); f.mkdirs(u); f.mkdirs(p)
-    (f.makeQualified(d).toString, f.makeQualified(u).toString,
-      f.makeQualified(p).toString)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    f.mkdirs(p)
+    (SnapshotTable.stagingDir(spark, root).toString,
+      SnapshotTable.stagingDir(spark, root).toString, f.makeQualified(p).toString)
   }
 
   private val conf = new SerializableHadoopConf(
@@ -323,23 +316,18 @@ final class SnapshotDeltaBatchWrite(root: String,
               }
           }
         }
-        // stats: every surviving base entry keeps its (conservative)
-        // lines — null counts and NDV sketches included; inserted files
-        // get fresh stats on the base's columns
-        val baseStats = SnapshotTable.statsRaw(spark, root, base.version)
-        val keptNorm = entries.map(e => SnapshotTable.norm(e.path)).toSet
-        val keptLines = baseStats.filter(l => keptNorm(l.file)).map(_.line).sorted
         val next = base.version + 1
         // per-version CDF delta lines (#removed/#updv/#updfile) ride
         // this manifest only — nextMeta never carries them forward
         val cdfMeta = removedPaths.result().map(p => s"#removed $p") ++
           updByFile.toSeq.sortBy(_._1).map { case (f, p) => s"#updv $f\t$p" } ++
           updInserts.map(e => s"#updfile ${e.path}")
-        SnapshotTable.commit(spark, root, next, entries ++ inserts ++ updInserts,
-          SnapshotTable.nextMeta(Some(base), None) ++ cdfMeta)
-        SnapshotTable.writeStats(spark, root, next, keptLines ++ freshLines)
-        SnapshotTable.tableSchema(spark, root, base.version)
-          .foreach(SnapshotTable.writeSchema(spark, root, next, _))
+        // stats: every surviving base entry keeps its (conservative)
+        // lines; inserted files get fresh stats on the base's columns
+        SnapshotTable.publish(spark, root, next, entries ++ inserts ++ updInserts,
+          SnapshotTable.nextMeta(Some(base), None) ++ cdfMeta,
+          SnapshotTable.tableSchema(spark, root, base.version),
+          carryStatsFrom = Some(base.version), newStats = freshLines)
         dropPartials()
         return
       } catch {

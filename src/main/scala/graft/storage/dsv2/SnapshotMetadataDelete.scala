@@ -190,16 +190,13 @@ object SnapshotMetadataDelete {
              snap: SnapshotTable.Snapshot,
              kept: Seq[SnapshotTable.FileEntry]): Unit = {
     val keptNorm = kept.map(e => SnapshotTable.norm(e.path)).toSet
-    val lines = SnapshotTable.statsRaw(spark, root, snap.version)
-      .filter(l => keptNorm(l.file)).map(_.line).sorted
     val removed = snap.entries
       .filterNot(e => keptNorm(SnapshotTable.norm(e.path)))
       .map(e => s"#removed ${e.path}")
     val next = snap.version + 1
-    SnapshotTable.commit(spark, root, next, kept,
-      SnapshotTable.nextMeta(Some(snap), None) ++ removed)
-    SnapshotTable.writeStats(spark, root, next, lines)
-    SnapshotTable.tableSchema(spark, root, snap.version)
-      .foreach(SnapshotTable.writeSchema(spark, root, next, _))
+    SnapshotTable.publish(spark, root, next, kept,
+      SnapshotTable.nextMeta(Some(snap), None) ++ removed,
+      SnapshotTable.tableSchema(spark, root, snap.version),
+      carryStatsFrom = Some(snap.version))
   }
 }

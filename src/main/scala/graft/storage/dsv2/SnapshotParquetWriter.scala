@@ -13,8 +13,8 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Executor-side `InternalRow` → parquet writer for the graft-snapshot
-  * connector's DSv2 write path — the mirror of
+/** Executor-side `InternalRow` → parquet writer for every graft-snapshot
+  * write (SQL writes and the library's staging alike) — the mirror of
   * [[SnapshotPartitionReader]]: the same flat-analytic type surface
   * (primitives, dates, micros timestamps, decimals, one-level arrays,
   * string maps), written with parquet-hadoop's record-consumer API and
@@ -27,9 +27,9 @@ import org.apache.spark.sql.types._
 object SnapshotParquetWrite {
 
   /** Refuse, with this writer's message, a schema it cannot write — its
-    * type surface is exactly what the connector's readers decode. Every
-    * library staging write ([[graft.storage.SnapshotTable]]) shares it,
-    * so no path can commit a table that no read can open. */
+    * type surface is exactly what the connector's readers decode. Library
+    * staging ([[graft.storage.SnapshotTable]]) calls it before its job
+    * starts, so a bad schema is refused before any file is staged. */
   def requireWritable(schema: StructType): Unit = message(schema)
 
   /** StructType → parquet MessageType (all fields optional, matching

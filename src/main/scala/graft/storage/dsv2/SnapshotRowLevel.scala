@@ -169,15 +169,8 @@ final class GroupReplaceDataWrite(root: String, snap: SnapshotTable.Snapshot,
                                   part: Option[PartitionWriteSpec] = None)
   extends BatchWrite {
 
-  private val stagingDir: String = {
-    val spark = SparkSession.active
-    val p = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "data"),
-      java.util.UUID.randomUUID().toString)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(p)
-    f.makeQualified(p).toString
-  }
+  private val stagingDir: String =
+    SnapshotTable.stagingDir(SparkSession.active, root).toString
 
   private val conf = new SerializableHadoopConf(
     SparkSession.active.sessionState.newHadoopConf())
@@ -194,24 +187,20 @@ final class GroupReplaceDataWrite(root: String, snap: SnapshotTable.Snapshot,
     }.sortBy(_.path).toSeq
     val scannedSet = scanned().map(SnapshotTable.norm).toSet
     val retained = snap.entries.filterNot(e => scannedSet(SnapshotTable.norm(e.path)))
-    // stats: retained files keep their lines (null counts + NDV
-    // sketches preserved); rewritten files get fresh stats on the
-    // columns the base tracked
-    val baseStats = SnapshotTable.statsRaw(spark, root, snap.version)
-    val retainedNorm = retained.map(e => SnapshotTable.norm(e.path)).toSet
-    val keptLines = baseStats.filter(l => retainedNorm(l.file)).map(_.line).sorted
-    val statsCols = baseStats.map(_.col).distinct.sorted
+    // rewritten files get fresh stats on the columns the base tracked;
+    // retained files keep theirs (the publish step's carry rule)
+    val statsCols = SnapshotTable.statsRaw(spark, root, snap.version)
+      .map(_.col).distinct.sorted
     val freshLines =
       SnapshotTable.collectStats(spark, newFiles.map(_.path), statsCols)
     val next = snap.version + 1
     try {
       // CAS: the rename-if-absent commit succeeds only if no other writer
       // committed version next since this operation resolved its base
-      SnapshotTable.commit(spark, root, next, retained ++ newFiles,
-        SnapshotTable.nextMeta(Some(snap), None))
-      SnapshotTable.writeStats(spark, root, next, keptLines ++ freshLines)
-      SnapshotTable.tableSchema(spark, root, snap.version)
-        .foreach(SnapshotTable.writeSchema(spark, root, next, _))
+      SnapshotTable.publish(spark, root, next, retained ++ newFiles,
+        SnapshotTable.nextMeta(Some(snap), None),
+        SnapshotTable.tableSchema(spark, root, snap.version),
+        carryStatsFrom = Some(snap.version), newStats = freshLines)
     } catch {
       case e: java.util.ConcurrentModificationException =>
         abortFiles(); throw e

@@ -15,7 +15,9 @@ import graft.storage.SnapshotTable
   *  - a partition-filtered count(*) is answered from the MANIFEST
   *    (milliseconds, zero data I/O, independent of table size);
   *  - a partition-aligned DELETE is METADATA-ONLY: no file rewritten,
-  *    wall time is one manifest commit — O(1) in the table size.
+  *    wall time is one manifest commit — O(1) in the table size;
+  *  - a compaction of all 32 tuples into one task still writes one file
+  *    per tuple (wall time and peak RSS printed).
   * Run: sbt "Test/runMain graft.PartitionScaleProbe [rows]" */
 object PartitionScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -28,6 +30,12 @@ object PartitionScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = java.nio.file.Files.createTempDirectory("partscale").toString + "/t"
+    // the process's resident-set high-water mark (Linux; "n/a" elsewhere)
+    def peakRss(): String = scala.util.Try {
+      val src = scala.io.Source.fromFile("/proc/self/status")
+      try src.getLines().find(_.startsWith("VmHWM:")).get.stripPrefix("VmHWM:").trim
+      finally src.close()
+    }.getOrElse("n/a")
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
@@ -116,6 +124,22 @@ object PartitionScaleProbe {
     println(f"full-table COW merge (same updates, g not in key): $tFull%.2f s, " +
       "100% of bytes rewritten")
 
+    // partitioned compaction below the tuple count: all 32 tuples land
+    // in one task, whose staging write must still emit one file each
+    // (old-generation peak = what the write kept alive across collections)
+    val oldGen = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+      .filter(p => p.getName.contains("Old") || p.getName.contains("Tenured"))
+    println(s"peak RSS before compact: ${peakRss()}")
+    System.gc(); oldGen.foreach(_.resetPeakUsage())
+    val (_, tCompact) = time(SnapshotTable.compact(spark, mroot, targetFiles = 1))
+    val oldPeakMb = oldGen.map(_.getPeakUsage.getUsed).sum / 1048576
+    val csnap = SnapshotTable.latest(spark, mroot).get
+    println(f"partitioned compact (targetFiles=1, $parts%d tuples): $tCompact%.2f s, " +
+      f"${csnap.entries.size}%d files; old-gen peak $oldPeakMb%d MB; " +
+      s"peak RSS after: ${peakRss()}")
+    assert(csnap.entries.size == parts, s"expected $parts files, got ${csnap.entries.size}")
+
     // the metrics-store shape: days(ts) partitioning + aligned retention
     // DELETE — whole days drop in one manifest commit, zero rewrite
     val troot = java.nio.file.Files.createTempDirectory("partscale_t").toString + "/t"
@@ -143,5 +167,11 @@ object PartitionScaleProbe {
     spark.sql("DROP TABLE IF EXISTS ts_probe")
     println("PartitionScaleProbe OK")
     spark.stop()
+    // the three tables take a few GB of temp space
+    Seq(root, mroot, troot).map(r => new java.io.File(r).getParentFile.toPath)
+      .foreach { d =>
+        java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.delete(p))
+      }
   }
 }

@@ -84,6 +84,35 @@ final class SnapshotBranchSpec extends SparkSpec {
     assert(ex2.getMessage.contains("create_branch"))
   }
 
+  test("published branch versions keep their branch commit times for TIMESTAMP AS OF") {
+    val root = newRoot()
+    Seq((1L, "a")).toDF("k", "v")
+      .write.format("graft-snapshot").mode("append").save(root)
+    SnapshotTable.createWriteBranch(spark, root, "late")
+    Seq((2L, "b")).toDF("k", "v")
+      .write.format("graft-snapshot").option("branch", "late")
+      .mode("append").save(root)
+    Thread.sleep(300)
+    val afterV2 = System.currentTimeMillis()
+    Thread.sleep(300)
+    Seq((3L, "c")).toDF("k", "v")
+      .write.format("graft-snapshot").option("branch", "late")
+      .mode("append").save(root)
+    Thread.sleep(300)
+    val beforePublish = System.currentTimeMillis()
+    Thread.sleep(300)
+    assert(SnapshotTable.publishBranch(spark, root, "late") === 3L)
+    // the instant between the two branch commits resolves to v2 on main
+    assert(SnapshotTable.versionAt(spark, root, afterV2) === Some(2L))
+    assert(spark.read.format("graft-snapshot")
+      .option("timestampAsOf", afterV2.toString).load(root).count() === 2)
+    // both published versions read as committed before the publish
+    val times = SnapshotTable.history(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toMap
+    assert(times(2L) < afterV2 && times(3L) < beforePublish, times)
+    assert(SnapshotTable.versionAt(spark, root, beforePublish) === Some(3L))
+  }
+
   test("SQL procedures: create_branch / publish_branch / drop_branch + branch MERGE") {
     val wh = Files.createTempDirectory("snapbranch_wh").toString
     spark.conf.set("spark.sql.catalog.gbr", "graft.storage.dsv2.SnapshotCatalog")

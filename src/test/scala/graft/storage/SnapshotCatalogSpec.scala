@@ -152,11 +152,17 @@ class SnapshotCatalogSpec extends SparkSpec {
       // every manifest entry was re-anchored to the FINAL table root
       val snap = SnapshotTable.latest(spark, s"$warehouse/ctas/t").get
       snap.files.foreach(p => assert(p.contains("/ctas/t/"), s"unanchored $p"))
-      // a FAILED CTAS must leave no table and no staging debris
-      intercept[Exception] {
+      // a FAILED CTAS must leave no table and no staging debris: the
+      // row with id 5 fails its task inside the write job, after the
+      // task's writer has already written rows
+      val failed = intercept[Exception] {
         spark.sql("CREATE TABLE graft.ctas.bad AS " +
-          "SELECT assert_true(id < 5) AS a, id FROM range(10)")
+          "SELECT IF(id < 5, id, raise_error('boom')) AS a, id FROM range(10)")
       }
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Seq.empty else String.valueOf(t.getMessage) +: chain(t.getCause)
+      assert(chain(failed).exists(_.contains("boom")),
+        s"expected the job's own failure, got: ${chain(failed)}")
       assert(!spark.catalog.tableExists("graft.ctas.bad"))
       intercept[Exception] { spark.sql("SELECT * FROM graft.ctas.bad").collect() }
       assert(stagingDirs().isEmpty, s"failed CTAS left debris: ${stagingDirs().toSeq}")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -31,6 +32,7 @@ final class SnapshotModelSpec extends SparkSpec {
   private final case class Rename(pick: Int) extends Op
   private final case class Drop(pick: Int) extends Op
   private final case class Compact(files: Int) extends Op
+  private case object Purge extends Op
 
   private val opGen: Gen[Op] = Gen.frequency(
     3 -> Gen.choose(1, 6).map(Append),
@@ -45,6 +47,17 @@ final class SnapshotModelSpec extends SparkSpec {
   /** Ten drawn ops after the create and the merge-on-read switch. */
   private def history(seed: Long): List[Op] =
     Gen.listOfN(10, opGen).pureApply(Gen.Parameters.default, Seed(seed))
+
+  /** The partitioned table's ops: no column DDL (partition columns are
+    * in every row), plus purging deletes. */
+  private val partOpGen: Gen[Op] = Gen.frequency(
+    3 -> Gen.choose(1, 6).map(Append),
+    3 -> Gen.zip(Gen.choose(1, 4), Gen.choose(0, 3)).map(SqlMerge.tupled),
+    3 -> Gen.zip(Gen.choose(2, 5), Gen.choose(0, 4))
+      .map { case (m, r) => SqlDelete(m, r % m) },
+    2 -> Gen.zip(Gen.choose(1, 4), Gen.choose(0, 3)).map(LibMerge.tupled),
+    1 -> Gen.choose(1, 3).map(Compact),
+    1 -> Gen.const(Purge))
 
   /** The model: the current columns (name, type) and rows. `k` is the
     * unique key and `v` the version column; `a` and `b` are the payload
@@ -236,9 +249,119 @@ final class SnapshotModelSpec extends SparkSpec {
     }
   }
 
+  /** The partitioned history: the table is partitioned by `g`
+    * (identity; a function of the key, NULL for every fifth key) and
+    * `bucket[4](k)`, so a library merge keyed on (k, g) is
+    * partition-scoped. After every version each read equals the model
+    * and every manifest entry is tuple-pure: the tuple recomputed from
+    * each live row of the file equals the one the manifest records. */
+  private def runPartitioned(seed: Long): Unit = {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gmodel.ns")
+    val tbl = s"gmodel.ns.p$seed"
+    val root = s"$warehouse/ns/p$seed"
+    val specs = Seq("g", "bucket[4](k)")
+    val fields = specs.map(SnapshotPartition.parseField)
+    graft.functions.expressions.GraftFunctions.register(spark)
+    val rnd = new scala.util.Random(seed)
+    var nextKey = 0L
+    var nextV = 0L
+    def gOf(k: Long): String = if (k % 5 == 0) null else s"g${k % 3}"
+    def row(k: Long): Vector[Any] = {
+      nextV += 1
+      Vector(k, nextV, gOf(k),
+        if (rnd.nextInt(5) == 0) null else s"s${rnd.nextInt(50)}")
+    }
+    def fresh(n: Int): Vector[Vector[Any]] =
+      Vector.fill(n) { nextKey += 1; row(nextKey) }
+    var m = State(Vector("k" -> LongType, "v" -> LongType, "g" -> StringType,
+      "a" -> StringType), Vector.empty)
+    def updatesOf(n: Int): Vector[Vector[Any]] =
+      rnd.shuffle(m.rows).take(n).map(r => row(m.key(r)))
+    def upsert(ups: Vector[Vector[Any]]): Unit = {
+      val byKey = ups.map(r => m.key(r) -> r).toMap
+      m = m.copy(rows = m.rows.filterNot(r => byKey.contains(m.key(r))) ++ ups)
+    }
+    var last = 0L
+    def record(label: String): Unit = {
+      val snap = SnapshotTable.latest(spark, root).get
+      assert(snap.version == last + 1, s"seed $seed: $label committed v${snap.version} after v$last")
+      last = snap.version
+      val what = s"seed $seed v$last $label"
+      assertSame(s"$what read", SnapshotTable.read(spark, root), m)
+      assertSame(s"$what readVersion", SnapshotTable.readVersion(spark, root, last), m)
+      assertSame(s"$what SQL", spark.sql(s"SELECT * FROM $tbl"), m)
+      assertSame(s"$what VERSION AS OF", spark.sql(s"SELECT * FROM $tbl VERSION AS OF $last"), m)
+      val recorded = snap.entries.map(e => SnapshotTable.norm(e.path) -> e.tuple).toMap
+      val seen = SnapshotTable.read(spark, root)
+        .select(col("_file") +: fields.map(f =>
+          expr(s"graft_part_field('${f.transform}', ${f.n}, `${f.col}`)")): _*)
+        .distinct().collect().toSeq
+        .groupBy(r => SnapshotTable.norm(r.getString(0)))
+        .view.mapValues(_.map(r => SnapshotPartition.encodeTuple(fields.map(_.key),
+          fields.indices.map(i => Option(r.getString(i + 1))))).distinct).toMap
+      seen.foreach { case (file, tuples) =>
+        assert(tuples === Seq(recorded(file)), s"$what: $file is not tuple-pure")
+      }
+    }
+
+    m = m.copy(rows = fresh(8))
+    SnapshotTable.create(spark, root, frame(m, m.rows, 2), partitionBy = specs)
+    spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES ('deleteMode'='merge-on-read', " +
+      "'updateMode'='merge-on-read', 'mergeMode'='merge-on-read')")
+    last += 1
+    record("create + merge-on-read")
+    // a fixed tail after the drawn ops, so every history exercises each
+    // write: a delete leaves vectors for the purge
+    (Gen.listOfN(10, partOpGen).pureApply(Gen.Parameters.default, Seed(seed)) ++
+        List(SqlDelete(3, 0), Purge, LibMerge(2, 1), Compact(2))).foreach {
+      case Append(n) =>
+        val rows = fresh(n)
+        SnapshotTable.append(spark, root, frame(m, rows, 2))
+        m = m.copy(rows = m.rows ++ rows)
+        record(s"append $n")
+      case SqlMerge(u, i) =>
+        val ups = updatesOf(u) ++ fresh(math.max(i, 1))
+        frame(m, ups, 1).createOrReplaceTempView("model_psrc")
+        spark.sql(s"MERGE INTO $tbl t USING model_psrc s ON t.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+        upsert(ups)
+        record(s"SQL MERGE $u/$i")
+      case SqlDelete(mod, rem) if m.rows.nonEmpty =>
+        val r = (m.key(m.rows.head) % mod).toInt
+        spark.sql(s"DELETE FROM $tbl WHERE k % $mod = $r")
+        m = m.copy(rows = m.rows.filterNot(x => m.key(x) % mod == r))
+        record(s"SQL DELETE k%$mod=$r")
+      case SqlDelete(_, _) =>
+        val rows = fresh(3)
+        SnapshotTable.append(spark, root, frame(m, rows, 1))
+        m = m.copy(rows = rows)
+        record("append 3")
+      case LibMerge(u, i) =>
+        val ups = updatesOf(u) ++ fresh(math.max(i, 1))
+        SnapshotTable.merge(spark, root, frame(m, ups, 1), Seq("k", "g"), "v")
+        upsert(ups)
+        record(s"library merge $u/$i")
+      case Compact(n) =>
+        SnapshotTable.compact(spark, root, n)
+        record(s"compact $n")
+      case Purge =>
+        if (SnapshotTable.latest(spark, root).get.entries.exists(_.dv.nonEmpty)) {
+          SnapshotTable.purgeDeletes(spark, root)
+          record("purgeDeletes")
+        }
+      case other => fail(s"unexpected op $other")
+    }
+  }
+
   Seq(11L, 23L, 37L).foreach { seed =>
     test(s"model history (seed $seed): library, SQL and time-travel reads and the change feed agree with the model") {
       run(seed)
+    }
+  }
+
+  Seq(5L, 19L).foreach { seed =>
+    test(s"partitioned model history (seed $seed): library create, append, partition-scoped merge, compact, purgeDeletes and SQL merge-on-read writes keep every file tuple-pure") {
+      runPartitioned(seed)
     }
   }
 }

@@ -298,10 +298,9 @@ class SnapshotPartitionedDsv2Spec extends SparkSpec {
       // latitude FileEntry documents for external rewrites; such a file
       // can hold rows of ANY partition, so retaining it verbatim would
       // leave stale rows of overwritten partitions alive
-      SnapshotTable.commit(spark, root, s.version + 1,
-        s.entries.head.copy(tuple = "") +: s.entries.tail, s.meta)
-      SnapshotTable.tableSchema(spark, root, s.version)
-        .foreach(SnapshotTable.writeSchema(spark, root, s.version + 1, _))
+      SnapshotTable.publish(spark, root, s.version + 1,
+        s.entries.head.copy(tuple = "") +: s.entries.tail, s.meta,
+        SnapshotTable.tableSchema(spark, root, s.version))
       spark.sql("REFRESH TABLE graftp.dynx")
       val e = intercept[Exception] {
         Seq((10L, "a")).toDF("k", "g").writeTo("graftp.dynx").overwritePartitions()
